@@ -661,6 +661,10 @@ def main() -> None:
             v = streaming.get(k)
             if isinstance(v, (int, float)):
                 streaming[k + "_normalized"] = round(v * factor, 1)
+    # a non-numeric conf ships raw rather than losing the bench line
+    shuffle_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    if shuffle_parts.isdigit():
+        shuffle_parts = int(shuffle_parts)
     print(
         json.dumps(
             {
@@ -681,9 +685,7 @@ def main() -> None:
                 "parallelism": {
                     "master": spark.sparkContext.master,
                     "default_parallelism": spark.sparkContext.defaultParallelism,
-                    "shuffle_partitions": int(
-                        spark.conf.get("spark.sql.shuffle.partitions")
-                    ),
+                    "shuffle_partitions": shuffle_parts,
                 },
                 "queries_build_s": build_times,
                 "queries_exec_s": exec_times,

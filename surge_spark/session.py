@@ -10,6 +10,7 @@ tiny test data doesn't fragment into empty tasks.
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
@@ -100,10 +101,18 @@ def get_spark(app_name: str = "surge_spark", cpus: int | None = None) -> SparkSe
     # spark-defaults.conf plays on a cluster. Format:
     # SPARK_GRAFT_EXTRA_CONFS="k=v;k2=v2". Applied LAST so an A/B can
     # override any default above; empty/absent is a no-op.
+    applied = []
     for kv in os.environ.get("SPARK_GRAFT_EXTRA_CONFS", "").split(";"):
         if "=" in kv:
             k, _, v = kv.partition("=")
             builder = builder.config(k.strip(), v.strip())
+            applied.append(f"{k.strip()}={v.strip()}")
+    if applied and SparkSession.getActiveSession() is None:
+        # logged when the confs take effect (session creation), so a run
+        # under a config that does not ship says so
+        logging.getLogger(__name__).warning(
+            "SPARK_GRAFT_EXTRA_CONFS applied: %s", "; ".join(applied)
+        )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

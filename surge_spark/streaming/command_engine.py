@@ -22,58 +22,12 @@ This engine processes a *commands* DataFrame per micro-batch:
 commands stream; ``process_batch`` is the deterministic core the tests and
 batch replays call directly.
 
-BATCH-ACK LATENCY FLOOR (BASELINE §3 SLO ≤ 1 s; r5 measured 2.096 s
-median for 128-command batches, r6 cut it to 1.103 s driver-measured,
-r7 grazed at 1.122, r8 measures 0.94-1.02 — SLO met). Per-stage
-breakdown at 128 cmds / 16 buckets / delta commits, local[8],
-SURGE_PROFILE=1 (scripts/profile_stream.py), after the r8 fixes:
-
-  read_state plan build            0.000 s  (guaranteed memo hit: the
-                                            commit prewarms the next
-                                            frame concurrently with its
-                                            writes, and the memo keys on
-                                            the JVM session — foreachBatch
-                                            wrappers defeated every
-                                            prior prewarm, see
-                                            SnapshotStore._session_key)
-  fold plan build                  ~0.05 s
-  fold materialize (ONE job)       ~0.45-0.55 s  (scan + 2 exchanges +
-                                            Arrow fold — the distributed-
-                                            execution floor; see below)
-  cached-fold collect              ~0.06 s  (driver-commit path)
-  commit                           ~0.085 s (driver-side pyarrow writes
-                                            of delta/events/replies +
-                                            manifest — ZERO Spark write
-                                            jobs for driver-safe batch
-                                            sizes; Spark write path is
-                                            the exact fallback and the
-                                            semantic source of truth)
-  structured-streaming overhead    ~0.12 s  (walCommit + commitOffsets +
-                                            latestOffset — Spark's own
-                                            exactly-once bookkeeping)
-
-r7 changes measured on this host (median trigger 1.26-1.35 → ~1.08 s):
-(a) the fold pipeline is CO-PARTITIONED end to end — commands
-repartition to fold_partitions BEFORE the snapshot join and the store's
-latest-wins aggregate runs at the same width on the same key
-(read_state(partitions=...)), so join + groupBy.applyInPandas add ZERO
-exchanges (was: SMJ at the session's 32 shuffle partitions, then a
-repartition down — 4 exchanges / 5 stages); (b) the fold materializes
-via ONE count() job before the commit's three concurrent writes — the
-persist() dedupe is racy under concurrent jobs, so the Arrow fold
-previously ran up to 3× ("Block already exists" warnings) and thrashed
-the python worker pool; (c) fold_partitions=4 beats 8 at 128-row
-batches (fewer Arrow round trips).
-
-What r6 removed: the per-commit read-merge-rewrite of every touched
-bucket (1.1-1.35 s — now an O(batch) flat delta append, see
-SnapshotStore.delta_commits), the pre-commit stats job, the per-trigger
-isEmpty job, per-delta plan growth (single multi-path scan), and
-re-listing the base per batch. The remaining floor is real per-batch
-work — one Arrow fold round trip + parquet-committer fixed cost × the
-concurrent write jobs + Spark's streaming bookkeeping; throughput
-scales with batch size (submit_many moves the same commands at >1000
-cmds/s through one commit).
+Two folds share that pipeline. Batches at or under ``driver_fold_max_rows``
+fold driver-side: the batch's state comes from the batched arrow point read
+and the handlers run in-process. Larger batches take the distributed fold (a
+snapshot join plus a grouped Arrow fold), which stays the semantic source of
+truth. Both hand their output to the same single ``SnapshotStore.commit``
+call (``_commit``).
 """
 
 from __future__ import annotations
@@ -122,7 +76,6 @@ class CommandEngine:
         context_mode: bool = False,
         commit_target_files: int = 1,
         fold_partitions: int | None = None,
-        prune_state_read: bool = False,
         driver_commit_max_rows: int = 65536,
         driver_fold_max_rows: int = 512,
     ) -> None:
@@ -155,15 +108,6 @@ class CommandEngine:
         a comfortable Arrow batch; leave None for backfill-sized batches
         where the session default is right.
 
-        ``prune_state_read``: spend ONE tiny job per batch (distinct
-        bucket ids of the batch's command keys) to read only those
-        buckets of the snapshot into the fold join, instead of the whole
-        table. Off by default — at local/test scale the extra job costs
-        more than the full read; at a 100 TB snapshot with command-sized
-        batches it is the only viable shape (the join input drops from
-        O(snapshot) to O(touched buckets)). Same crc32 bucketing on both
-        sides, so no key can be missed (pinned by test).
-
         ``driver_commit_max_rows``: fold outputs at or under this row count
         take the driver-side commit-write path (collect the cached fold
         once, write the delta/events/replies/records parquet via pyarrow —
@@ -191,15 +135,7 @@ class CommandEngine:
         strict gates (arrow-writable schemas, arrow-readable key type),
         and ANY failure before the handlers run falls back to the
         distributed fold — which remains the semantic source of truth,
-        pinned equal by cross-mode tests. Set 0 to disable.
-
-        Measured (local[8], 128-cmd file-source batches, r10): steady
-        trigger 830-880 -> 570-700 ms; bench batch-ack median 0.94 ->
-        0.446 s, send_command 0.80-0.87 -> 0.66-0.80 s (with the
-        n_rows_hint), skewed-hot-key 0.89 -> 0.444 s. Phase split of the
-        fast trigger: collect ~0.04, arrow state read ~0.025, handlers
-        ~0.12, local-frame build ~0.14, arrow commit ~0.09; the remaining
-        ~0.16 s is the streaming engine's own offset/WAL bookkeeping."""
+        pinned equal by cross-mode tests. Set 0 to disable."""
         self.store = store
         self.process_command = process_command
         self.handle_event = handle_event
@@ -214,7 +150,6 @@ class CommandEngine:
         if fold_partitions is not None and fold_partitions < 1:
             raise ValueError(f"fold_partitions must be >= 1, got {fold_partitions}")
         self.fold_partitions = fold_partitions
-        self.prune_state_read = prune_state_read
         self.driver_commit_max_rows = driver_commit_max_rows
         self.driver_fold_max_rows = driver_fold_max_rows
         # cache of the current batch's fold output; see process_batch
@@ -553,7 +488,6 @@ class CommandEngine:
         commands: DataFrame,
         batch_id: str,
         replies_dir: str | None,
-        fp: int | None,
         n_rows_hint: int | None = None,
     ) -> tuple[DataFrame, DataFrame, DataFrame] | None:
         """Driver-side fold fast path (see driver_fold_max_rows in
@@ -697,34 +631,10 @@ class CommandEngine:
             ds = self._split_sides(
                 packed_rows, str(batch_id) if replies_dir is not None else None
             )
-        nf = self.commit_target_files
-        with phase("pb.commit"):
-            self.store.commit(
-                sides["events_df"].coalesce(nf),
-                sides["state_df"].coalesce(nf),
-                batch_id,
-                replies=sides["replies_to_commit"],
-                delete_keys=sides["tombstones"],
-                records=sides["records_df"].coalesce(nf)
-                if self.context_mode
-                else None,
-                updates_unique=True,  # one state row per key group
-                replies_dir=replies_dir,
-                driver_sides=ds,
-                prewarm_partitions=fp,
-            )
-        if not self.prune_state_read:
-            # same next-trigger snapshot-frame prewarm as the distributed
-            # path (the arrow read above doesn't touch the frame memo)
-            import threading
-
-            def _prewarm() -> None:
-                try:
-                    self.store.read_state(spark, partitions=fp)
-                except Exception:  # noqa: BLE001 — best-effort warm
-                    pass
-
-            threading.Thread(target=_prewarm, daemon=True).start()
+        # no next-frame prewarm: the driver fold reads state through the
+        # arrow point read, never the frame memo, and the warm's plan build
+        # competes with this trigger's own driver-side work
+        self._commit(sides, batch_id, replies_dir, ds, prewarm_partitions=None)
         # release the previous batch's fold cache, same lifecycle as the
         # distributed path; local-relation frames need no persist
         if self._prev_packed is not None:
@@ -794,28 +704,12 @@ class CommandEngine:
         # limit+collect before every distributed fold.
         if n_rows_hint is None or n_rows_hint <= self.driver_fold_max_rows:
             fast = self._driver_fold(
-                spark, commands, batch_id, replies_dir, fp, n_rows_hint
+                spark, commands, batch_id, replies_dir, n_rows_hint
             )
             if fast is not None:
                 return fast
         with phase("pb.read_state"):
-            if self.prune_state_read:
-                nb = self.store.num_buckets()
-                bucket_ids = {
-                    str(r[0])
-                    for r in commands.select(
-                        self.store._bucket_expr(
-                            nb, commands[self.key_col]
-                        ).alias("b")
-                    )
-                    .distinct()
-                    .collect()
-                }
-                snapshot = self.store.read_state_buckets(
-                    spark, bucket_ids, partitions=fp
-                )
-            else:
-                snapshot = self.store.read_state(spark, partitions=fp)
+            snapshot = self.store.read_state(spark, partitions=fp)
             if keys_hint is not None and snapshot is not None:
                 # see keys_hint in the docstring: pushed below the
                 # latest-wins aggregate (grouping-key predicate), so the
@@ -882,12 +776,13 @@ class CommandEngine:
         # row per output state/event/reply/tombstone — that stays DISTRIBUTED
         # end to end: the typed frames below are from_json projections of the
         # persisted fold output, and the commit writes them executor-side.
-        # Row data never materializes on the driver (only the per-kind counts
-        # and the touched-bucket ids do), so batch size is bounded by the
-        # cluster, not driver memory. Handler contract: state/event dicts are
-        # JSON-serializable and the declared schemas use JSON-native types
-        # (string/numeric/boolean; from_json also parses ISO-format
-        # timestamp strings, which json.dumps(default=str) produces).
+        # On a COW store row data never materializes on the driver (only the
+        # row count and the commit's touched-bucket ids do), so batch size
+        # is bounded by the cluster, not driver memory. Handler contract:
+        # state/event dicts are JSON-serializable and the declared schemas
+        # use JSON-native types (string/numeric/boolean; from_json also
+        # parses ISO-format timestamp strings, which json.dumps(default=str)
+        # produces).
         # capture only plain values in the executor-shipped closure
         handle_group = CommandEngine._handle_group
         state_key_col = self.store.key_col
@@ -996,146 +891,72 @@ class CommandEngine:
             self._prev_packed.unpersist()
         self._prev_packed = packed
 
-        counts: dict | None = None
-        touched_buckets: set | None = None
-        if not self.store.delta_commits:
-            # one job returns BOTH the per-kind counts and the touched bucket
-            # ids (bucket_expr of every state/tombstone key): the store's
-            # commit would otherwise run its own distinct+collect job to find
-            # the buckets its merge must rewrite — at micro-batch latency
-            # every job counts. collect_set is bounded by the store's bucket
-            # count, never by batch size. A merge-on-read store appends
-            # instead of merging, so the whole stats job is skipped there
-            # (see the commit call below).
-            nb = self.store.num_buckets()
-            bucket = F.when(
-                F.col("kind").isin("state", "tombstone"),
-                self.store._bucket_expr(
-                    nb, F.get_json_object("payload", f"$.{state_key_col}")
-                ),
-            )
-            with phase("pb.stats_job"):
-                stats = (
-                    packed.groupBy("kind")
-                    .agg(F.count("*").alias("n"), F.collect_set(bucket).alias("b"))
-                    .collect()
-                )
-            counts = {r["kind"]: r["n"] for r in stats}
-            touched_buckets = {
-                str(x)
-                for r in stats
-                if r["kind"] in ("state", "tombstone")
-                for x in (r["b"] or [])
-            }
-
         sides = self._project_sides(packed, batch_id, replies_dir)
-        state_df = sides["state_df"]
-        events_df = sides["events_df"]
-        replies_df = sides["replies_df"]
-        records_df = sides["records_df"]
-        tombstones = sides["tombstones"]
-        replies_to_commit = sides["replies_to_commit"]
-        nf = self.commit_target_files
-        if counts is None:
-            # merge-on-read store: the commit is an append, so there is no
-            # selective bucket read to plan for — every side commits
-            # unconditionally (an empty side is an empty parquet dir).
-            # Rejection-only and empty batches still commit, entering the
-            # R4 dedup set exactly like the counted path below.
-            # Materialize the fold ONCE before the commit's three
-            # concurrent write jobs: the persist() dedupe is racy under
-            # concurrent jobs (each job can compute the same partition
-            # before the first finishes caching it — the "Block already
-            # exists; not re-adding" warnings), so without this the Arrow
-            # fold ran up to 3× and the python worker pool thrashed. One
-            # cheap count() job pays a single fold pass; the write jobs
-            # then scan cached blocks only.
-            with phase("pb.materialize"):
-                n_packed = packed.count()
-            # driver-safe batches: collect the cached fold (one fast job
-            # over cached blocks) so the commit can write all its parquet
-            # driver-side — zero Spark write jobs (~0.2 s/job floor). Any
-            # failure here or any value that doesn't coerce exactly inside
-            # commit falls back to the Spark write path below.
-            driver_sides = None
-            if (
-                self.driver_commit_max_rows
-                and n_packed <= self.driver_commit_max_rows
-                and self._driver_structs() is not None
-            ):
-                with phase("pb.collect_rows"):
-                    try:
-                        driver_sides = self._collect_driver_sides(
-                            packed,
-                            str(batch_id) if replies_dir is not None else None,
-                        )
-                    except Exception:  # noqa: BLE001 — Spark path is the truth
-                        driver_sides = None
-            with phase("pb.commit"):
-                self.store.commit(
-                    events_df.coalesce(nf),
-                    state_df.coalesce(nf),
-                    batch_id,
-                    replies=replies_to_commit,
-                    delete_keys=tombstones,
-                    records=records_df.coalesce(nf) if self.context_mode else None,
-                    updates_unique=True,  # fold emits at most one state row/key
-                    replies_dir=replies_dir,
-                    driver_sides=driver_sides,
-                    # build the next trigger's snapshot frame INSIDE the
-                    # commit (overlapped with side writes + manifest
-                    # publish): the post-commit thread below loses ~0.1 s
-                    # of its build to the next trigger's pb.read_state
-                    # every batch; the in-commit warm makes it a dict hit.
-                    prewarm_partitions=fp,
-                )
-            if not self.prune_state_read:
-                # prewarm the NEXT batch's snapshot frame off the critical
-                # path: read_state's plan build (listing + analysis,
-                # ~0.1-0.3 s) is pure driver-side work against the version
-                # just committed — a daemon thread populates the store's
-                # per-version frame memo so the next trigger's
-                # pb.read_state is a dict hit. Skipped under
-                # prune_state_read (its frame depends on the next batch's
-                # keys). Failures are harmless: the next batch would just
-                # build the frame itself.
-                import threading
-
-                fp_warm = fp
-
-                def _prewarm() -> None:
-                    try:
-                        # same partitions hint as the next trigger's call,
-                        # or the memo key misses and the warm is wasted
-                        self.store.read_state(spark, partitions=fp_warm)
-                    except Exception:  # noqa: BLE001 — best-effort warm
-                        pass
-
-                threading.Thread(target=_prewarm, daemon=True).start()
-        elif (
-            counts.get("state")
-            or counts.get("event")
-            or counts.get("tombstone")
-            or counts.get("record")
-            # replies alone still commit: an ALL-rejected/errored batch must
-            # persist its ACKs (replies_for_batch recovery) and enter the R4
-            # dedup set — otherwise a foreachBatch replay re-folds it and, in
-            # context_mode, re-runs side effects registered before rejection
-            or counts.get("reply")
+        # Materialize the fold ONCE before the commit's concurrent write
+        # jobs: the persist() dedupe is racy under concurrent jobs (each
+        # job can compute the same partition before the first finishes
+        # caching it — the "Block already exists; not re-adding"
+        # warnings), so without this the Arrow fold ran up to 3× and the
+        # python worker pool thrashed. One cheap count() job pays a single
+        # fold pass; the write jobs then scan cached blocks only.
+        with phase("pb.materialize"):
+            n_packed = packed.count()
+        # driver-safe batches on a delta store: collect the cached fold
+        # (one fast job over cached blocks) so the append commit can write
+        # all its parquet driver-side — zero Spark write jobs. A COW store
+        # rewrites buckets through Spark anyway, so its fold rows never
+        # reach the driver. Any failure here or any value that doesn't
+        # coerce exactly inside commit falls back to the Spark writes.
+        driver_sides = None
+        if (
+            self.store.delta_commits
+            and self.driver_commit_max_rows
+            and n_packed <= self.driver_commit_max_rows
+            and self._driver_structs() is not None
         ):
-            with phase("pb.commit"):
-                self.store.commit(
-                    events_df.coalesce(nf) if counts.get("event") else None,
-                    state_df.coalesce(nf),
-                    batch_id,
-                    replies=replies_to_commit,
-                    delete_keys=tombstones if counts.get("tombstone") else None,
-                    records=records_df.coalesce(nf) if counts.get("record") else None,
-                    updates_unique=True,  # fold emits at most one state row/key
-                    touched_buckets=touched_buckets,
-                    replies_dir=replies_dir,
-                )
-        return state_df, events_df, replies_df
+            with phase("pb.collect_rows"):
+                try:
+                    driver_sides = self._collect_driver_sides(
+                        packed,
+                        str(batch_id) if replies_dir is not None else None,
+                    )
+                except Exception:  # noqa: BLE001 — Spark path is the truth
+                    driver_sides = None
+        self._commit(sides, batch_id, replies_dir, driver_sides, prewarm_partitions=fp)
+        return sides["state_df"], sides["events_df"], sides["replies_df"]
+
+    def _commit(
+        self,
+        sides: dict,
+        batch_id: str,
+        replies_dir: str | None,
+        driver_sides: dict | None,
+        prewarm_partitions: int | None,
+    ) -> None:
+        """The one commit of a folded batch, shared by the driver fold and
+        the distributed fold on every store mode. Every batch commits, even
+        one that changed nothing: rejection-only and empty batches persist
+        their ACKs (replies_for_batch recovery) and enter the R4 dedup set,
+        so a foreachBatch replay can never re-fold them and re-run side
+        effects. An empty events, records or delta side writes no dir.
+        ``prewarm_partitions`` (the distributed
+        fold passes its fold width) has the commit build the next
+        read_state frame at that width, so the next distributed fold's
+        snapshot read is a memo hit."""
+        nf = self.commit_target_files
+        with phase("pb.commit"):
+            self.store.commit(
+                sides["events_df"].coalesce(nf),
+                sides["state_df"].coalesce(nf),
+                batch_id,
+                replies=sides["replies_to_commit"],
+                delete_keys=sides["tombstones"],
+                records=sides["records_df"].coalesce(nf) if self.context_mode else None,
+                updates_unique=True,  # the fold emits at most one state row/key
+                replies_dir=replies_dir,
+                driver_sides=driver_sides,
+                prewarm_partitions=prewarm_partitions,
+            )
 
     # -- streaming & serving -------------------------------------------------
 

@@ -23,9 +23,7 @@ This module re-creates that protocol transport-agnostically:
   (GenericAsyncAggregateCommandModel.scala:50-76, 84-103), including the
   "Wrong aggregate ids!" validation;
 - ``MultilanguageGateway`` is the gateway service: forward_command /
-  get_state / health_check with the proto reply shapes. ``serve_grpc``
-  binds the real wire protocol when ``grpcio`` is installed (not in this
-  environment — import-gated, not stubbed logic: everything above it runs);
+  get_state / health_check with the proto reply shapes;
 - a REAL cross-process wire the environment does permit:
   ``serve_business_logic`` exposes any BusinessLogicService over a
   loopback socket (stdlib socketserver) speaking REAL proto3 wire format
@@ -494,21 +492,3 @@ class MultilanguageGateway:
         except Exception:  # noqa: BLE001 — unreachable business app
             status = "DOWN"
         return HealthCheckReply(service_name=self.service_name, status=status)
-
-    def serve_grpc(self, port: int = 6667):
-        """Bind the real gRPC wire protocol (proto service
-        MultilanguageGatewayService). Requires ``grpcio`` + generated stubs,
-        which this environment does not ship — everything above this line is
-        transport-independent and fully exercised in-process."""
-        try:
-            import grpc  # noqa: F401
-        except ImportError as e:  # pragma: no cover - env without grpcio
-            raise NotImplementedError(
-                "grpcio is not installed; use the in-process gateway API "
-                "(forward_command/get_state/health_check) or install grpcio "
-                "and generate stubs from multilanguage-protocol.proto"
-            ) from e
-        raise NotImplementedError(
-            "gRPC binding requires stubs generated from "
-            "multilanguage-protocol.proto:82-92"
-        )  # pragma: no cover

@@ -47,6 +47,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import threading
 import time
 import uuid
@@ -75,8 +76,6 @@ def _reply_staging_path(final: str, token: str) -> str:
 def _finish_reply_publication(final: str, staging: str) -> None:
     """Atomically promote a staged external reply dir to its final path
     (idempotent: no-op when already published or nothing staged)."""
-    import shutil
-
     if not os.path.isdir(staging):
         return
     if os.path.isdir(final):
@@ -114,8 +113,8 @@ class SnapshotStore:
         ``delta_commits``: merge-on-read mode. ``None`` (default) keeps the
         copy-on-write commit: every commit reads the touched buckets, merges
         survivors, and rewrites them. With ``delta_commits=N`` a commit
-        instead APPENDS its updates + tombstones as one per-version delta
-        directory (partitioned by bucket, no read of previous state at all),
+        instead APPENDS its updates + tombstones as one flat per-version
+        delta directory (no read of previous state at all),
         and every Nth commit folds the accumulated deltas into the base
         buckets through the same COW merge. Readers do a latest-wins merge
         (``max_by`` over the delta ordinal) across base + deltas. This is
@@ -170,21 +169,19 @@ class SnapshotStore:
         # newest delta dir are identical, so only the ONE new delta dir
         # needs a fresh listing per version (steady micro-batch case)
         self._dir_frames: dict[tuple, tuple[SparkSession, DataFrame]] = {}
-        # the engine's prewarm daemon calls read_state concurrently with the
-        # streaming thread's next trigger: this lock makes the frame-memo
-        # check/build/insert/evict sequence atomic (no reliance on GIL dict
-        # atomicity) and dedupes concurrent builds of the same key — the
-        # second thread blocks briefly and then hits the memo, which is
-        # exactly the prewarm's purpose. RLock: read_state →
+        # the commit's prewarm thread builds frames concurrently with other
+        # readers: this lock makes the frame-memo check/build/insert/evict
+        # sequence atomic (no reliance on GIL dict atomicity) and dedupes
+        # concurrent builds of the same key — the second thread blocks
+        # briefly and then hits the memo. RLock: read_state →
         # _merged_state_frame → _memo_dir_frame nests.
         self._memo_lock = threading.RLock()
         # pyarrow dataset memo for driver-side point reads: version dirs are
         # immutable once a manifest references them, so the file listing +
         # footer metadata a dataset caches stays valid for the dir's life.
-        # Its OWN lock: point reads must never queue behind the prewarm
-        # daemon's 0.1-0.3 s Spark plan build under _memo_lock — the whole
-        # purpose of the arrow path is a sub-50 ms lookup that touches no
-        # Spark state
+        # Its OWN lock: point reads must never queue behind a 0.1-0.3 s
+        # Spark plan build under _memo_lock — the whole purpose of the
+        # arrow path is a sub-50 ms lookup that touches no Spark state
         self._arrow_dsets: dict[str, object] = {}
         self._arrow_lock = threading.Lock()
 
@@ -332,20 +329,9 @@ class SnapshotStore:
             return int(prev_manifest.get("num_buckets", self.default_num_buckets))
         return self.default_num_buckets
 
-    def num_buckets(self) -> int:
-        """Bucket count the NEXT commit will use (current manifest's, or the
-        default for a fresh store) — what a caller precomputing
-        ``touched_buckets`` must hash with."""
-        v = self.latest_version()
-        return self._num_buckets(self._manifest(v) if v is not None else None)
-
-    def _bucket_expr(self, nb: int, col: F.Column | None = None) -> F.Column:
-        """JVM-side bucket id; mirrored driver-side by _bucket_of. ``col``
-        lets callers hash a key expression other than this frame's key
-        column (the engine's prune/stats jobs) — ONE formula, so the
-        'bucket set MUST be exact' contract can never drift between
-        copies."""
-        c = F.col(self.key_col) if col is None else col
+    def _bucket_expr(self, nb: int) -> F.Column:
+        """JVM-side bucket id; mirrored driver-side by _bucket_of."""
+        c = F.col(self.key_col)
         return F.pmod(F.crc32(c.cast("string").cast("binary")), F.lit(nb)).cast(
             "int"
         )
@@ -669,7 +655,7 @@ class SnapshotStore:
         return int(ms[-1]) if ms else 0
 
     def _deltas_scan(
-        self, spark: SparkSession, entries: list[dict], bucket: str | None = None
+        self, spark: SparkSession, entries: list[dict]
     ) -> DataFrame | None:
         """ALL delta dirs as ``state columns + __deleted + __v`` in ONE
         multi-path scan — the plan stays constant-size however deep the
@@ -677,41 +663,18 @@ class SnapshotStore:
         op in classic mode; measured: read_state plan build grew
         0.25→1.1 s over 8 delta versions before this). ``__v`` is the
         writing commit's version, parsed from the file path. Deltas are
-        flat, so the ``bucket`` restriction applies only to legacy
-        bucket-partitioned delta dirs (written before the flat layout);
-        flat deltas are always scanned whole — they are micro-batch-sized
-        and at most delta_commits deep. Falls back to a per-dir union when
-        delta schemas drifted (rare: an engine upgrade mid-chain)."""
-        live = []
-        for e in entries:
-            p = e["path"]
-            if bucket is not None:
-                sub = os.path.join(p, f"{_BUCKET_COL}={bucket}")
-                if os.path.isdir(sub):
-                    p = sub  # legacy bucketed delta: prune to the bucket
-                elif any(
-                    d.startswith(f"{_BUCKET_COL}=")
-                    for d in (os.listdir(p) if os.path.isdir(p) else [])
-                ):
-                    continue  # bucketed delta without this bucket
-            if os.path.isdir(p):
-                live.append((e, p))
+        flat, micro-batch-sized and at most delta_commits deep, so they
+        are always scanned whole. Falls back to a per-dir union when delta
+        schemas drifted (rare: an engine upgrade mid-chain)."""
+        live = [e for e in entries if os.path.isdir(e["path"])]
         if not live:
             return None
-        if all(e["schema"] == live[0][0]["schema"] for e, _ in live):
-            st = T.StructType.fromJson(json.loads(live[0][0]["schema"]))
+        if all(e["schema"] == live[0]["schema"] for e in live):
+            st = T.StructType.fromJson(json.loads(live[0]["schema"]))
             read_schema = T.StructType(
                 list(st.fields) + [T.StructField("__deleted", T.BooleanType())]
             )
-            # recursiveFileLookup: several delta roots each with __bucket=
-            # subdirs have no common basePath — partition discovery would
-            # raise CONFLICTING_DIRECTORY_STRUCTURES; the bucket value is
-            # not needed here (the schema carries everything)
-            df = (
-                spark.read.schema(read_schema)
-                .option("recursiveFileLookup", "true")
-                .parquet(*[p for _, p in live])
-            )
+            df = spark.read.schema(read_schema).parquet(*[e["path"] for e in live])
             return df.select(*[f.name for f in st.fields], "__deleted").withColumn(
                 "__v",
                 F.regexp_extract(
@@ -721,14 +684,14 @@ class SnapshotStore:
         import functools
 
         parts = []
-        for e, p in live:
+        for e in live:
             st = T.StructType.fromJson(json.loads(e["schema"]))
             read_schema = T.StructType(
                 list(st.fields) + [T.StructField("__deleted", T.BooleanType())]
             )
             parts.append(
                 spark.read.schema(read_schema)
-                .parquet(p)
+                .parquet(e["path"])
                 .select(*[f.name for f in st.fields], "__deleted")
                 .withColumn("__v", F.lit(self._delta_version(e["path"])))
             )
@@ -772,27 +735,14 @@ class SnapshotStore:
         self,
         spark: SparkSession,
         m: dict,
-        bucket: str | None = None,
-        buckets: set[str] | None = None,
         partitions: int | None = None,
     ) -> DataFrame | None:
-        """Latest-wins view over base buckets + deltas of one manifest —
-        optionally restricted to a single ``bucket`` (point reads) or a
-        ``buckets`` set (the engine's pruned fold join). The restriction
-        prunes the BASE scan; flat deltas are micro-batch-sized and always
-        scanned whole (their memoized scan frame is therefore shared
-        across restrictions AND versions), so rows outside the requested
-        buckets may appear — callers filter by key. None if neither base
-        nor any delta covers the requested scope."""
+        """Latest-wins view over base buckets + deltas of one manifest. The
+        flat deltas' memoized scan frame is shared across versions. None if
+        the manifest names no base bucket and no live delta dir."""
         schema = T.StructType.fromJson(json.loads(m["state_schema"]))
         cols = [f.name for f in schema.fields]
-        buckets_map = self._state_paths(m)
-        if bucket is not None:
-            base_paths = [buckets_map[bucket]] if bucket in buckets_map else []
-        elif buckets is not None:
-            base_paths = [p for b, p in buckets_map.items() if b in buckets]
-        else:
-            base_paths = list(buckets_map.values())
+        base_paths = list(self._state_paths(m).values())
         parts: list[DataFrame] = []
         if base_paths:
             base_key = (self._session_key(spark), tuple(sorted(base_paths)), m["state_schema"])
@@ -802,14 +752,9 @@ class SnapshotStore:
             parts.append(
                 base.withColumn("__deleted", F.lit(False)).withColumn("__v", F.lit(-1))
             )
-        entries = m.get("state_deltas", [])
-        if entries:
-            dkey = (self._session_key(spark), tuple(e["path"] for e in entries), bucket)
-            d = self._memo_dir_frame(
-                spark, dkey, lambda: self._deltas_scan(spark, entries, bucket=bucket)
-            )
-            if d is not None:
-                parts.append(d)
+        d = self._deltas_frame(spark, m.get("state_deltas", []))
+        if d is not None:
+            parts.append(d)
         if not parts:
             return None
         agg = self._latest_wins(parts, self.key_col, cols, partitions=partitions)
@@ -820,17 +765,115 @@ class SnapshotStore:
             ]
         )
 
+    def _deltas_frame(self, spark: SparkSession, entries: list[dict]) -> DataFrame | None:
+        """Memoized _deltas_scan of a delta chain (None for no deltas)."""
+        if not entries:
+            return None
+        key = (self._session_key(spark), tuple(e["path"] for e in entries))
+        return self._memo_dir_frame(spark, key, lambda: self._deltas_scan(spark, entries))
+
+    def _fold_backlog(
+        self,
+        spark: SparkSession,
+        prev_deltas: list[dict],
+        state_updates: DataFrame,
+        dele: DataFrame | None,
+        state_schema_json: str,
+        version: int,
+    ) -> tuple[DataFrame, DataFrame | None]:
+        """Compaction's effective (updates, deletes): latest-wins across the
+        accumulated deltas plus this batch's own updates/tombstones, which
+        get the committing version as their ordinal — strictly greater than
+        any delta dir's path version. Unchanged when there is nothing to
+        fold."""
+        schema_struct = T.StructType.fromJson(json.loads(state_schema_json))
+        cols = [f.name for f in schema_struct.fields]
+        parts = []
+        backlog = self._deltas_scan(spark, prev_deltas)
+        if backlog is not None:
+            parts.append(backlog)
+        batch = self._updates_with_tombstones(state_updates, dele, state_schema_json)
+        if batch is not None:
+            parts.append(batch.withColumn("__v", F.lit(version)))
+        if not parts:
+            return state_updates, dele
+        agg = self._latest_wins(parts, self.key_col, cols)
+        updates = agg.where(~F.col("__r.__deleted")).select(
+            *[
+                F.col(self.key_col) if c == self.key_col else F.col(f"__r.{c}").alias(c)
+                for c in cols
+            ]
+        )
+        deletes = agg.where(F.col("__r.__deleted")).select(
+            F.col(self.key_col).cast("string").alias(self.key_col)
+        )
+        return updates, deletes
+
+    def _cow_merge(
+        self,
+        spark: SparkSession,
+        state_updates: DataFrame,
+        dele: DataFrame | None,
+        updates_unique: bool,
+        nb: int,
+        prev_manifest: dict,
+        state_schema_json: str,
+    ) -> tuple[set[str], DataFrame]:
+        """(touched bucket ids, rows to write) for a rewriting commit: one
+        small collect job finds the buckets the batch's updated/deleted
+        keys hash into; their previous rows survive unless updated or
+        deleted, and the batch's updates join them."""
+        upd = state_updates.select(F.col(self.key_col).cast("string").alias(self.key_col))
+        if not updates_unique:
+            # the anti-join only tests membership, but the touched-bucket
+            # distinct below assumes a bounded key frame; when the caller
+            # guarantees one row per key the dedup exchange is pure
+            # overhead (AQE is off inside foreachBatch, so it would run at
+            # the full session shuffle-partition count)
+            upd = upd.distinct()
+        touched_keys = upd if dele is None else upd.unionByName(dele).distinct()
+        touched_keys = touched_keys.where(F.col(self.key_col).isNotNull())
+        touched = {
+            str(r[0])
+            for r in touched_keys.select(self._bucket_expr(nb).alias("b"))
+            .distinct()
+            .collect()
+        }
+        paths = self._state_paths(prev_manifest)
+        if "__legacy__" in paths:
+            # legacy store: no bucket map — every key lives in the one
+            # unbucketed path, so the full snapshot is the merge input
+            prev_paths = [p for p in paths.values() if os.path.exists(p)]
+        else:
+            prev_paths = [paths[b] for b in touched if b in paths]
+        if not prev_paths:
+            return touched, state_updates
+        prev_schema = T.StructType.fromJson(
+            json.loads(prev_manifest.get("state_schema", state_schema_json))
+        )
+        prev_touched = spark.read.schema(prev_schema).parquet(*prev_paths)
+        # broadcast anti-join: previous rows of touched buckets whose key is
+        # NOT updated/deleted survive. Null-safe (a NULL key never equals a
+        # touched key, so null-key rows survive) — unlike the NOT-IN literal
+        # filter this replaces.
+        survivors = prev_touched.join(
+            F.broadcast(
+                touched_keys.select(F.col(self.key_col).alias("__touched_key"))
+            ),
+            prev_touched[self.key_col].cast("string") == F.col("__touched_key"),
+            "left_anti",
+        )
+        return touched, survivors.unionByName(state_updates)
+
     def commit(
         self,
         events: DataFrame | None,
         state_updates: DataFrame,
         batch_id: str,
-        update_keys: list | None = None,
         replies: DataFrame | None = None,
         delete_keys: list | DataFrame | None = None,
         records: DataFrame | None = None,
         updates_unique: bool = False,
-        touched_buckets: set | None = None,
         replies_dir: str | None = None,
         prewarm_partitions: int | None = None,
         driver_sides: dict | None = None,
@@ -839,35 +882,23 @@ class SnapshotStore:
         updates into their key-hash buckets, publish a manifest. Returns
         False (no-op) if batch_id was already committed (R4 dedup).
 
-        ``update_keys``: the distinct keys in ``state_updates`` when the
-        caller already knows them — skips one small distinct() job deriving
-        them from ``state_updates``.
         ``delete_keys``: keys to REMOVE from the snapshot (state → None
         tombstones); list or single-column DataFrame. A key must not appear
         in both ``state_updates`` and ``delete_keys``.
         ``records``: raw outbound producer records (the persistRecord
         surface, Context.scala:13-14) — appended like events, readable via
         read_records.
-        ``touched_buckets``: the bucket ids (``_bucket_expr`` of every
-        updated/deleted key, stringified) when the caller already computed
-        them — skips the one collect job this commit otherwise runs. The
-        command engine derives them inside the same aggregate as its
-        per-kind counts, shaving a job off every micro-batch; the set MUST
-        be exact (a missing id loses that bucket's surviving rows from the
-        merge; an extra id rewrites — and without its survivors, drops — an
-        untouched bucket).
         ``prewarm_partitions``: build the NEXT read_state frame (at that
         merge width) on a side thread DURING the commit — started the
         moment the state write lands (its dirs are what the frame lists),
         overlapped with the side writes and manifest publish, and
         published into the read_state memo only AFTER this committer wins
         the manifest race (a loser's frame would describe the wrong
-        content for the version). The engine passes its fold width here
-        so the next trigger's pb.read_state is a guaranteed dict hit —
-        the post-commit prewarm thread alone lost the race to the next
-        trigger by ~0.1 s every batch. Delta-append commits only (the 15
-        of 16 steady-state shape); compaction commits fall back to the
-        engine's post-commit prewarm.
+        content for the version). The engine's distributed fold passes
+        its fold width here so the next distributed fold's pb.read_state
+        is a dict hit. Delta-append commits only (the 15 of 16
+        steady-state shape); the first read after a compaction or COW
+        commit builds its own frame.
         ``driver_sides``: pre-collected typed row dicts for every side
         (keys ``state``/``deletes``/``events``/``replies``/``records`` +
         their ``*_struct`` StructTypes) — the engine passes them for
@@ -967,9 +998,9 @@ class SnapshotStore:
         # events/records ride an Observation so their row count falls out
         # of the write job itself (no extra job): an empty side's dir is
         # dropped after the write and its manifest entry nulled — without
-        # this, an engine that commits sides unconditionally (the
-        # merge-on-read path skips its pre-commit stats job) would leave
-        # one empty events dir per version for read_events to list forever.
+        # this, an engine that commits sides unconditionally (the command
+        # engine does) would leave one empty events dir per version for
+        # read_events to list forever.
         from pyspark.sql import Observation
 
         side_writes = []
@@ -1005,10 +1036,8 @@ class SnapshotStore:
                 if not (driver_sides.get("records") or []):
                     records = None
             except Exception:  # noqa: BLE001 — exact fallback, never guess
-                import shutil as _sh
-
                 for p in (delta_path, events_path, records_path, replies_path):
-                    _sh.rmtree(p, ignore_errors=True)
+                    shutil.rmtree(p, ignore_errors=True)
                 driver_written = False
                 delta_written = False
                 n_events = 0
@@ -1032,215 +1061,89 @@ class SnapshotStore:
                 )
 
         spark = state_updates.sparkSession
-        _merge_plan = phase("commit.merge_plan")
-        _merge_plan.__enter__()
+        delta_df: DataFrame | None = None
+        touched: set[str] = set()  # base buckets this commit rewrites
         if driver_written:
-            # everything this section would build (tombstone frame, delta
+            # everything the merge plan would build (tombstone frame, delta
             # frame) already sits on disk from the arrow writes above;
             # analyzing the lazy twins anyway costs 60-80 ms of eager
             # classic-mode re-analysis per micro-batch for nothing.
             state_schema_json = driver_schema_json
-            dele = None
-            orig_updates, orig_dele = state_updates, None
-            delta_df: DataFrame | None = None
-            touched: set[str] = set()
-            _skip_merge_plan = True
         else:
-            _skip_merge_plan = False
-        if _skip_merge_plan:
-            pass
-        else:
-            dele = self._keys_df(spark, delete_keys)
-            if dele is not None:
-                dele = dele.where(F.col(self.key_col).isNotNull())
-            if self.key_col in state_updates.columns:
-                # a NULL-key row would be written to the
-                # __HIVE_DEFAULT_PARTITION__ bucket, which the driver-side
-                # crc32 bucket math can never address: the row could never be
-                # read back (get_state), updated, or tombstoned, and the next
-                # commit writing another null-key row would replace the bucket
-                # map entry and silently drop it. The merge anti-join already
-                # treats null keys as un-matchable, so they are filtered at
-                # the gate (plan-side, no extra job).
-                state_updates = state_updates.where(F.col(self.key_col).isNotNull())
-            if not updates_unique and state_updates.schema.fields:
-                # enforce the one-row-per-key snapshot invariant on the update
-                # set itself (get_state/read_state assume it); arbitrary
-                # survivor — pre-fold with latest_per_key (A2) for ordered
-                # picks
-                state_updates = state_updates.dropDuplicates([self.key_col])
-            state_schema_json = state_updates.schema.json()
-            if not state_updates.schema.fields and prev_manifest is not None:
-                state_schema_json = prev_manifest.get(
-                    "state_schema", state_schema_json
-                )
-
-            # the batch's OWN updates/tombstones, captured BEFORE the
-            # compaction branch folds the delta backlog into state_updates —
-            # this is what a change-feed record for this version must carry
-            orig_updates, orig_dele = state_updates, dele
-            delta_df = None
-            touched = set()
-        if _skip_merge_plan:
-            pass
-        elif delta_write:
-            delta_df = self._updates_with_tombstones(
-                state_updates, dele, state_schema_json
-            )
-            touched = set()  # base buckets untouched by an append
-        elif prev_deltas:
-            # compaction: latest-wins across accumulated deltas + this
-            # batch's updates/tombstones becomes the effective update set
-            # for the COW merge; the caller's update_keys/touched_buckets
-            # cover only ITS batch, not the delta backlog — ignore them.
-            schema_struct = T.StructType.fromJson(json.loads(state_schema_json))
-            cols = [f.name for f in schema_struct.fields]
-            parts = []
-            backlog = self._deltas_scan(spark, prev_deltas)
-            if backlog is not None:
-                parts.append(backlog)
-            # this batch's rows get the committing version as their ordinal
-            # — strictly greater than any delta dir's path version
-            if state_updates.schema.fields:
-                parts.append(
-                    state_updates.withColumn("__deleted", F.lit(False)).withColumn(
-                        "__v", F.lit(version)
+            with phase("commit.merge_plan"):
+                dele = self._keys_df(spark, delete_keys)
+                if dele is not None:
+                    dele = dele.where(F.col(self.key_col).isNotNull())
+                if self.key_col in state_updates.columns:
+                    # a NULL-key row would be written to the
+                    # __HIVE_DEFAULT_PARTITION__ bucket, which the driver-side
+                    # crc32 bucket math can never address: the row could
+                    # never be read back (get_state), updated, or tombstoned,
+                    # and the next commit writing another null-key row would
+                    # replace the bucket map entry and silently drop it. The
+                    # merge anti-join already treats null keys as
+                    # un-matchable, so they are filtered at the gate
+                    # (plan-side, no extra job).
+                    state_updates = state_updates.where(
+                        F.col(self.key_col).isNotNull()
                     )
-                )
-            if dele is not None and schema_struct.fields:
-                key_field = schema_struct[self.key_col]
-                pad = [
-                    F.col(self.key_col).cast(key_field.dataType).alias(self.key_col)
-                    if f.name == self.key_col
-                    else F.lit(None).cast(f.dataType).alias(f.name)
-                    for f in schema_struct.fields
-                ]
-                parts.append(
-                    dele.select(*pad)
-                    .withColumn("__deleted", F.lit(True))
-                    .withColumn("__v", F.lit(version))
-                )
-            if parts:
-                agg = self._latest_wins(parts, self.key_col, cols)
-                state_updates = agg.where(~F.col("__r.__deleted")).select(
-                    *[
-                        F.col(self.key_col)
-                        if c == self.key_col
-                        else F.col(f"__r.{c}").alias(c)
-                        for c in cols
-                    ]
-                )
-                dele = agg.where(F.col("__r.__deleted")).select(
-                    F.col(self.key_col).cast("string").alias(self.key_col)
-                )
-                update_keys = None
-                touched_buckets = None
-                updates_unique = True  # the merge emits one row per key
-
-        if delta_write:
-            pass
-        elif prev_manifest is None:
-            # first commit: everything is new; one partitioned write
-            touched = set()  # no previous buckets to merge
-            content = state_updates
-        else:
-            upd = self._keys_df(spark, update_keys)
-            if upd is None:
-                upd = state_updates.select(
-                    F.col(self.key_col).cast("string").alias(self.key_col)
-                )
-                if not updates_unique:
-                    # the anti-join only tests membership, but the
-                    # touched-bucket distinct below assumes a bounded key
-                    # frame; when the caller guarantees one row per key the
-                    # dedup exchange is pure overhead (AQE is off inside
-                    # foreachBatch, so it would run at the full session
-                    # shuffle-partition count)
-                    upd = upd.distinct()
-            touched_keys = upd if dele is None else upd.unionByName(dele).distinct()
-            touched_keys = touched_keys.where(F.col(self.key_col).isNotNull())
-            if touched_buckets is not None:
-                touched = {str(b) for b in touched_buckets}
-            else:
-                touched = {
-                    str(r[0])
-                    for r in touched_keys.select(
-                        self._bucket_expr(nb).alias("b")
+                if not updates_unique and state_updates.schema.fields:
+                    # enforce the one-row-per-key snapshot invariant on the
+                    # update set itself (get_state/read_state assume it);
+                    # arbitrary survivor — pre-fold with latest_per_key (A2)
+                    # for ordered picks
+                    state_updates = state_updates.dropDuplicates([self.key_col])
+                state_schema_json = state_updates.schema.json()
+                if not state_updates.schema.fields and prev_manifest is not None:
+                    state_schema_json = prev_manifest.get(
+                        "state_schema", state_schema_json
                     )
-                    .distinct()
-                    .collect()
-                }
-            if legacy_state is not None:
-                # legacy store: no bucket map — every key lives in the one
-                # unbucketed path, so the full snapshot is the merge input
-                prev_paths = [legacy_state] if os.path.exists(legacy_state) else []
-            else:
-                prev_paths = [prev_buckets[b] for b in touched if b in prev_buckets]
-            if prev_paths:
-                prev_schema = T.StructType.fromJson(
-                    json.loads(prev_manifest.get("state_schema", state_schema_json))
-                )
-                prev_touched = spark.read.schema(prev_schema).parquet(*prev_paths)
-                # broadcast anti-join: previous rows of touched buckets whose
-                # key is NOT updated/deleted survive. Null-safe (a NULL key
-                # never equals a touched key, so null-key rows survive) —
-                # unlike the NOT-IN literal filter this replaces.
-                survivors = prev_touched.join(
-                    F.broadcast(
-                        touched_keys.select(
-                            F.col(self.key_col).alias("__touched_key")
+                # the batch's OWN updates/tombstones, captured BEFORE the
+                # compaction folds the delta backlog into state_updates —
+                # this is what a change-feed record for this version carries
+                orig_updates, orig_dele = state_updates, dele
+                if delta_write:
+                    delta_df = self._updates_with_tombstones(
+                        state_updates, dele, state_schema_json
+                    )
+                else:
+                    if prev_deltas:
+                        state_updates, dele = self._fold_backlog(
+                            spark, prev_deltas, state_updates, dele,
+                            state_schema_json, version,
                         )
-                    ),
-                    prev_touched[self.key_col].cast("string")
-                    == F.col("__touched_key"),
-                    "left_anti",
-                )
-                content = survivors.unionByName(state_updates)
-            else:
-                content = state_updates
-
-        _merge_plan.__exit__(None, None, None)
-        # one distributed job writes every touched bucket (and any brand-new
-        # bucket an insert lands in); untouched buckets are never read.
-        # Dynamic-partition file discipline (both modes): without a
-        # pre-shuffle every upstream task writes one tiny file into EVERY
-        # bucket dir it touches — ~tasks×buckets files per commit that the
-        # NEXT commit must list, footer-read, and merge. Hash-repartitioning
-        # on the bucket id lands each bucket's rows in exactly one task →
-        # one file per touched bucket, O(buckets) files forever; at cluster
-        # scale the shuffle spreads buckets across the configured shuffle
-        # partitions, keeping write parallelism.
+                        updates_unique = True  # the merge emits one row per key
+                    if prev_manifest is None:
+                        content = state_updates  # first commit: all new
+                    else:
+                        touched, content = self._cow_merge(
+                            spark, state_updates, dele, updates_unique, nb,
+                            prev_manifest, state_schema_json,
+                        )
         try:
             with phase("commit.state_write"):
-                if delta_write:
-                    if driver_written:
-                        pass  # delta already on disk (arrow write above)
-                    elif delta_df is not None:
-                        # deltas are FLAT (no bucket partitioning): a
-                        # micro-batch's updates are batch-sized, and carving
-                        # them into num_buckets dirs made every delta cost
-                        # O(buckets) files to write, list, and scan
-                        # (measured: read_state plan build grew ~0.1 s per
-                        # accumulated delta). Point reads scan base-bucket +
-                        # every live delta — bounded by delta_commits tiny
-                        # dirs; compaction restores the fully bucketed
-                        # layout. Backfill-sized batches should use COW
-                        # commits (delta_commits=None), where bucket
-                        # pruning pays.
-                        # same Observation treatment as events/records: an
-                        # all-rejected / no-state-change batch must not
-                        # append an empty delta dir for every future read
-                        # to list (no-change-no-write, PersistentActor:212)
-                        delta_obs = Observation()
-                        delta_df.observe(
-                            delta_obs, F.count(F.lit(1)).alias("n")
-                        ).write.mode("overwrite").parquet(delta_path)
-                        if int(delta_obs.get["n"]) == 0:
-                            import shutil as _sh
-
-                            _sh.rmtree(delta_path, ignore_errors=True)
-                            delta_df = None
-                else:
+                if delta_df is not None:
+                    # deltas are FLAT (no bucket partitioning): a
+                    # micro-batch's updates are batch-sized, and carving
+                    # them into num_buckets dirs made every delta cost
+                    # O(buckets) files to write, list, and scan. Point
+                    # reads scan base-bucket + every live delta — bounded
+                    # by delta_commits tiny dirs; compaction restores the
+                    # fully bucketed layout. Backfill-sized batches should
+                    # use COW commits (delta_commits=None), where bucket
+                    # pruning pays.
+                    # same Observation treatment as events/records: an
+                    # all-rejected / no-state-change batch must not append
+                    # an empty delta dir for every future read to list
+                    # (no-change-no-write, PersistentActor:212)
+                    delta_obs = Observation()
+                    delta_df.observe(
+                        delta_obs, F.count(F.lit(1)).alias("n")
+                    ).write.mode("overwrite").parquet(delta_path)
+                    delta_written = int(delta_obs.get["n"]) > 0
+                    if not delta_written:
+                        shutil.rmtree(delta_path, ignore_errors=True)
+                elif not delta_write:
                     # change-feed record for a rewriting commit (first
                     # commit / COW / compaction): the batch's OWN changes
                     # in the delta-file shape, O(batch), concurrent with
@@ -1260,6 +1163,13 @@ class SnapshotStore:
                                     changes_path,
                                 )
                             )
+                    # one job writes every touched bucket (and any
+                    # brand-new bucket an insert lands in); untouched
+                    # buckets are never read. Hash-repartitioning on the
+                    # bucket id lands each bucket's rows in exactly one
+                    # task → one file per touched bucket, O(buckets) files
+                    # forever, instead of ~tasks×buckets tiny files for the
+                    # next commit to list and merge.
                     bucketed = content.withColumn(_BUCKET_COL, self._bucket_expr(nb))
                     bucketed.repartition(F.col(_BUCKET_COL)).write.partitionBy(
                         _BUCKET_COL
@@ -1270,8 +1180,6 @@ class SnapshotStore:
             # so the frame this builds is byte-identical to what read_state
             # would build against the published manifest. Published into
             # the memo only after the os.link fence below succeeds.
-            if not driver_written:
-                delta_written = delta_df is not None and os.path.isdir(delta_path)
             prewarm_thread = None
             prewarm_box: dict = {}
             if prewarm_partitions is not None and delta_write:
@@ -1303,18 +1211,16 @@ class SnapshotStore:
         finally:
             pool.shutdown(wait=True)
 
-        import shutil as _shutil
-
         if ev_obs is not None:
             n_events = int(ev_obs.get["n"])
             if n_events == 0:
-                _shutil.rmtree(events_path, ignore_errors=True)
+                shutil.rmtree(events_path, ignore_errors=True)
                 events = None
         if rec_obs is not None and int(rec_obs.get["n"]) == 0:
-            _shutil.rmtree(records_path, ignore_errors=True)
+            shutil.rmtree(records_path, ignore_errors=True)
             records = None
         if ch_obs is not None and int(ch_obs.get["n"]) == 0:
-            _shutil.rmtree(changes_path, ignore_errors=True)
+            shutil.rmtree(changes_path, ignore_errors=True)
             ch_obs = None
 
         # change record for this version: an append commit's delta dir
@@ -1425,40 +1331,6 @@ class SnapshotStore:
         if "state_buckets" in m:
             return m["state_buckets"]
         return {"__legacy__": m["state"]} if m.get("state") else {}
-
-    def read_state_buckets(
-        self,
-        spark: SparkSession,
-        buckets: set[str] | list[str],
-        partitions: int | None = None,
-    ) -> DataFrame | None:
-        """Latest snapshot restricted to the given bucket ids — the
-        bucket-pruned read a command engine uses when the batch's key set
-        is known: at a 100 TB snapshot, joining commands against
-        ``read_state()`` scans every bucket, while the batch's keys hash
-        into a handful — this reads ONLY those base dirs (plus the flat
-        deltas, which are micro-batch-sized and whose memoized scan frame
-        is shared with full reads across versions). Rows outside the
-        buckets may appear via the deltas — irrelevant to the fold join,
-        which matches on the key (same crc32 both sides, so no key can be
-        missed)."""
-        v = self.latest_version()
-        if v is None:
-            return None
-        m = self._manifest(v)
-        if "state_buckets" not in m:
-            return self.read_state(spark)  # legacy layout: no pruning possible
-        schema = T.StructType.fromJson(json.loads(m["state_schema"]))
-        wanted = {str(b) for b in buckets}
-        if m.get("state_deltas"):
-            df = self._merged_state_frame(
-                spark, m, buckets=wanted, partitions=partitions
-            )
-            return df if df is not None else spark.createDataFrame([], schema)
-        paths = [p for b, p in self._state_paths(m).items() if b in wanted]
-        if not paths:
-            return spark.createDataFrame([], schema)
-        return spark.read.schema(schema).parquet(*paths)
 
     def read_state(
         self,
@@ -1610,72 +1482,21 @@ class SnapshotStore:
             return True, qd
         raise NotImplementedError(f"unsupported key type {dt} for arrow point read")
 
-    def _point_read_arrow(self, m: dict, aggregate_id: str) -> dict | None:
-        """getState as a storage-side indexed fetch, zero Spark jobs: the
-        reference answers getState from a KTable (RocksDB point lookup,
-        SurgeMessagePipeline KTable query path) — a distributed engine job
-        is the wrong tool for a one-key read. This reads ONLY the key's
-        crc32 bucket directory (one file, by the commit's pre-shuffle
-        discipline) plus the micro-batch-sized flat deltas, with the key
-        equality pushed into the parquet scan (row-group statistics +
-        dictionary pruning skip everything else). Latest-wins across
-        base/deltas happens on the ≤ delta_commits+1 matching rows. On an
-        object-store deployment the same pyarrow read runs through fsspec;
-        the Spark scan below remains the fallback for layouts/types this
-        path doesn't cover (equality pinned by test)."""
-        import pyarrow.dataset as pads
-
-        schema = T.StructType.fromJson(json.loads(m["state_schema"]))
-        cols = [f.name for f in schema.fields]
-        matchable, keyv = self._typed_key(schema, aggregate_id)
-        if not matchable:
-            return None
-        nb = int(m.get("num_buckets", self.default_num_buckets))
-        buckets_map = self._state_paths(m)
-        if "__legacy__" in buckets_map:
-            base_path = buckets_map["__legacy__"]  # unbucketed: whole snapshot
-        else:
-            base_path = buckets_map.get(str(self._bucket_of(aggregate_id, nb)))
-        flt = pads.field(self.key_col) == keyv
-        candidates: list[tuple[int, bool, dict]] = []
-        if base_path and os.path.isdir(base_path):
-            for r in self._arrow_dataset(base_path).to_table(filter=flt).to_pylist():
-                candidates.append((-1, False, r))
-        for e in m.get("state_deltas", []):
-            p = e["path"]
-            sub = os.path.join(
-                p, f"{_BUCKET_COL}={self._bucket_of(aggregate_id, nb)}"
-            )
-            if os.path.isdir(sub):
-                p = sub  # legacy bucketed delta: prune to the key's bucket
-            elif any(
-                d.startswith(f"{_BUCKET_COL}=")
-                for d in (os.listdir(p) if os.path.isdir(p) else [])
-            ):
-                continue  # bucketed delta without this bucket
-            if not os.path.isdir(p):
-                continue
-            dv = self._delta_version(e["path"])
-            for r in self._arrow_dataset(p).to_table(filter=flt).to_pylist():
-                # schema drift across deltas: missing columns read as None,
-                # same as the Spark path's unionByName(allowMissingColumns)
-                candidates.append((dv, bool(r.get("__deleted")), r))
-        if not candidates:
-            return None
-        _, deleted, row = max(candidates, key=lambda t: t[0])
-        if deleted:
-            return None
-        return {c: row.get(c) for c in cols}
-
     def _multi_point_read_arrow(
         self, m: dict, keys: list[str]
     ) -> dict[str, dict | None]:
-        """Batched _point_read_arrow over a key set — the driver-side
-        fold's actor-init read: ONE dataset read per TOUCHED base bucket
-        with an isin filter, one isin pass over each delta. Latest-wins
-        per key, semantics pinned equal to get_state. Raises on any key
-        type/layout the arrow path doesn't cover (float/timestamp keys,
-        missing key column) — the caller falls back to the Spark join."""
+        """Point reads as a storage-side indexed fetch, zero Spark jobs —
+        get_state's one-key read and the driver-side fold's actor-init
+        read. The reference answers getState from a KTable (RocksDB point
+        lookup); a distributed engine job is the wrong tool for a few-key
+        read. ONE dataset read per TOUCHED base bucket (one file, by the
+        commit's pre-shuffle discipline) plus one pass over each flat
+        delta, each with an isin filter pushed into the parquet scan
+        (row-group statistics + dictionary pruning skip everything else).
+        Latest-wins per key across base/deltas, semantics pinned equal to
+        the Spark scan. Raises on any key type the arrow path doesn't
+        cover (float/timestamp keys, missing key column) — the caller
+        falls back to Spark."""
         import pyarrow.dataset as pads
 
         schema = T.StructType.fromJson(json.loads(m["state_schema"]))
@@ -1715,35 +1536,19 @@ class SnapshotStore:
                 if kk is not None:
                     cands[kk].append((-1, False, r))
         all_vals = list(typed.values())
-        touched = {str(self._bucket_of(k, nb)) for k in typed}
         for e in m.get("state_deltas", []):
-            p = e["path"]
-            sub_paths: list[str]
-            if os.path.isdir(p) and any(
-                d.startswith(f"{_BUCKET_COL}=") for d in os.listdir(p)
-            ):
-                # legacy bucketed delta: read only the touched buckets
-                sub_paths = [
-                    sp
-                    for b in touched
-                    for sp in [os.path.join(p, f"{_BUCKET_COL}={b}")]
-                    if os.path.isdir(sp)
-                ]
-            elif os.path.isdir(p):
-                sub_paths = [p]
-            else:
+            if not os.path.isdir(e["path"]):
                 continue
             dv = self._delta_version(e["path"])
-            for sp in sub_paths:
-                tbl = self._arrow_dataset(sp).to_table(
-                    filter=key_field.isin(all_vals)
-                )
-                for r in tbl.to_pylist():
-                    kk = by_val.get(r.get(self.key_col))
-                    if kk is not None:
-                        # schema drift across deltas: missing columns read
-                        # as None, same as unionByName(allowMissingColumns)
-                        cands[kk].append((dv, bool(r.get("__deleted")), r))
+            tbl = self._arrow_dataset(e["path"]).to_table(
+                filter=key_field.isin(all_vals)
+            )
+            for r in tbl.to_pylist():
+                kk = by_val.get(r.get(self.key_col))
+                if kk is not None:
+                    # schema drift across deltas: missing columns read as
+                    # None, same as unionByName(allowMissingColumns)
+                    cands[kk].append((dv, bool(r.get("__deleted")), r))
         for k, lst in cands.items():
             if not lst:
                 out[k] = None
@@ -1761,8 +1566,8 @@ class SnapshotStore:
         time-travels like read_state.
 
         Fast path: a driver-side pyarrow fetch with the key pushed into the
-        parquet scan (_point_read_arrow) — no Spark job at all, the KTable-
-        point-lookup analog. The Spark scan below is the fallback for key
+        parquet scan (_multi_point_read_arrow) — no Spark job at all, the
+        KTable-point-lookup analog. The Spark scan below is the fallback for key
         types/layouts the arrow path doesn't cover; both paths are pinned
         equal by test."""
         v = self.latest_version() if version is None else int(version)
@@ -1772,7 +1577,7 @@ class SnapshotStore:
             raise ValueError(f"version {v} was never committed")
         m = self._manifest(v)
         try:
-            return self._point_read_arrow(m, aggregate_id)
+            return self._multi_point_read_arrow(m, [aggregate_id])[str(aggregate_id)]
         except Exception:  # noqa: BLE001 — the Spark scan below is the
             # exact documented fallback, and arrow failure modes are wider
             # than ImportError/NotImplementedError: a schema-drifted delta
@@ -1810,16 +1615,7 @@ class SnapshotStore:
                         "__v", F.lit(-1).cast("long")
                     )
                 )
-            dkey = (
-                self._session_key(spark),
-                tuple(e["path"] for e in m["state_deltas"]),
-                bucket,
-            )
-            d = self._memo_dir_frame(
-                spark,
-                dkey,
-                lambda: self._deltas_scan(spark, m["state_deltas"], bucket=bucket),
-            )
+            d = self._deltas_frame(spark, m["state_deltas"])
             if d is not None:
                 parts.append(d)
             if not parts:
@@ -1984,7 +1780,6 @@ class SnapshotStore:
             )
             parts.append(
                 spark.read.schema(read_schema)
-                .option("recursiveFileLookup", "true")
                 .parquet(p)
                 .select(*[f.name for f in st.fields], "__deleted")
                 .withColumn("_version", F.lit(v).cast("long"))

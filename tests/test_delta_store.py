@@ -101,17 +101,14 @@ def test_delta_point_read_prunes_base_scans_flat_deltas(spark, tmp_path):
     assert store.get_state(spark, "nope") is None
     m = store._manifest(store.latest_version())
     b = str(store._bucket_of("k3", 4))
-    frame = store._merged_state_frame(spark, m, bucket=b)
-    scan_paths = frame.inputFiles()
-    assert scan_paths, "bucket-pruned frame reads no files?"
-    # no OTHER base bucket dir is read; the one delta dir is
-    other_base = [
-        p for bb, p in m["state_buckets"].items() if bb != b
-    ]
-    for p in scan_paths:
-        assert not any(ob in p for ob in other_base), p
-    delta_dir = m["state_deltas"][0]["path"]
-    assert any(delta_dir in p for p in scan_paths)
+    store._arrow_dsets.clear()
+    assert store.get_state(spark, "k3")["n"] == 100
+    # the key's base bucket dir and the one delta dir are read — no OTHER
+    # base bucket dir
+    assert set(store._arrow_dsets) == {
+        m["state_buckets"][b],
+        m["state_deltas"][0]["path"],
+    }
 
 
 def test_cow_writer_compacts_foreign_deltas(spark, tmp_path):
@@ -168,54 +165,6 @@ def test_delta_manifest_schema_recorded_per_delta(spark, tmp_path):
     entry = store._manifest(1)["state_deltas"][0]
     fields = {f["name"] for f in json.loads(entry["schema"])["fields"]}
     assert fields == {"k", "n"}
-
-
-def test_pruned_state_read_matches_full_and_prunes(spark, tmp_path):
-    """prune_state_read: the engine's bucket-pruned fold join produces the
-    SAME states as the full-snapshot join (same crc32 both sides — no key
-    can be missed), and read_state_buckets actually reads only the
-    requested base buckets."""
-    from surge_spark.streaming.command_engine import CommandEngine
-
-    def process(state, cmd):
-        return ([{"k": cmd["k"]}], False)
-
-    def handle(state, ev):
-        return {"k": ev["k"], "n": (state["n"] if state else 0) + 1}
-
-    def build(path, prune):
-        store = SnapshotStore(path, key_col="k", num_buckets=8, delta_commits=4)
-        return store, CommandEngine(
-            store, process, handle, "k string, n long", "k string",
-            key_col="k", order_cols=["command_id"], fold_partitions=2,
-            prune_state_read=prune,
-        )
-
-    cmds = lambda rows: spark.createDataFrame(  # noqa: E731
-        rows, "k string, command_id string"
-    )
-    batches = [
-        [(f"k{i}", f"c{i}") for i in range(12)],
-        [(f"k{i}", f"d{i}") for i in range(0, 12, 2)],
-        [(f"k{i}", f"e{i}") for i in range(0, 12, 3)],
-    ]
-    store_a, eng_a = build(str(tmp_path / "full"), prune=False)
-    store_b, eng_b = build(str(tmp_path / "pruned"), prune=True)
-    for j, rows in enumerate(batches):
-        eng_a.process_batch(cmds(rows), f"b{j}")
-        eng_b.process_batch(cmds(rows), f"b{j}")
-    full = {r.k: r.n for r in store_a.read_state(spark).collect()}
-    pruned = {r.k: r.n for r in store_b.read_state(spark).collect()}
-    assert full == pruned
-    assert full["k0"] == 3 and full["k1"] == 1
-
-    # the pruned read touches only the requested base buckets
-    one = str(store_b._bucket_of("k0", 8))
-    frame = store_b.read_state_buckets(spark, {one})
-    m = store_b._manifest(store_b.latest_version())
-    other_bases = [p for b, p in m["state_buckets"].items() if b != one]
-    for f in frame.inputFiles():
-        assert not any(ob in f for ob in other_bases), f
 
 
 def test_empty_state_delta_not_appended(spark, tmp_path):
@@ -306,73 +255,15 @@ def test_point_read_arrow_matches_spark_fallback(spark, tmp_path):
     ):
         m = store._manifest(store.latest_version())
         for k in keys:
-            arrow = store._point_read_arrow(m, k)
+            arrow = store._multi_point_read_arrow(m, [k])[k]
             via_spark = store._point_read_spark(spark, m, k)
             assert arrow == via_spark, (k, arrow, via_spark)
             assert store.get_state(spark, k) == via_spark
 
     # tombstone visible through the arrow path at the pre-resurrect version
     m2 = d._manifest(2)
-    assert d._point_read_arrow(m2, "k5") is None
+    assert d._multi_point_read_arrow(m2, ["k5"])["k5"] is None
     assert d._point_read_spark(spark, m2, "k5") is None
-
-
-def test_point_read_arrow_integer_key_semantics(spark, tmp_path):
-    """Integer key columns: the arrow filter compares typed values, which
-    must mirror the Spark path's cast(key as string) == aggregate_id —
-    canonical spellings hit, non-canonical ('05', '5.0', 'abc') are
-    definitive misses on both paths."""
-    store = SnapshotStore(
-        str(tmp_path / "s"), key_col="k", num_buckets=4, delta_commits=4
-    )
-    upd = spark.createDataFrame([(5, 50), (7, 70)], "k long, n long")
-    store.commit(None, upd, "b0", updates_unique=True)
-    m = store._manifest(0)
-    assert store._point_read_arrow(m, "5") == {"k": 5, "n": 50}
-    assert store._point_read_spark(spark, m, "5") == {"k": 5, "n": 50}
-    for bad in ("05", "5.0", "abc", ""):
-        assert store._point_read_arrow(m, bad) is None
-        assert store._point_read_spark(spark, m, bad) is None
-    assert store.get_state(spark, "7")["n"] == 70
-
-
-def test_point_read_arrow_date_key_semantics(spark, tmp_path):
-    """Date key columns stay on the arrow fast path (r7 VERDICT item 2):
-    Spark casts dates to canonical ISO 'yyyy-MM-dd', so the canonical-
-    spelling check extends directly — ISO spellings hit, anything else
-    ('2024-1-5', '2024-01-05T00:00:00', 'abc') is a definitive miss on
-    both paths. Equality pinned across deltas and tombstones."""
-    import datetime
-
-    store = SnapshotStore(
-        str(tmp_path / "s"), key_col="k", num_buckets=4, delta_commits=4
-    )
-    d1, d2 = datetime.date(2024, 1, 5), datetime.date(2023, 12, 31)
-    upd = spark.createDataFrame([(d1, 10), (d2, 20)], "k date, n long")
-    store.commit(None, upd, "b0", updates_unique=True)
-    store.commit(
-        None,
-        spark.createDataFrame([(d1, 11)], "k date, n long"),
-        "b1",
-        updates_unique=True,
-    )
-    store.commit(
-        None,
-        spark.createDataFrame([], "k date, n long"),
-        "b2",
-        delete_keys=["2023-12-31"],
-        updates_unique=True,
-    )
-    m = store._manifest(store.latest_version())
-    for key in ("2024-01-05", "2023-12-31", "1999-09-09"):
-        arrow = store._point_read_arrow(m, key)
-        via_spark = store._point_read_spark(spark, m, key)
-        assert arrow == via_spark, (key, arrow, via_spark)
-    assert store._point_read_arrow(m, "2024-01-05") == {"k": d1, "n": 11}
-    assert store._point_read_arrow(m, "2023-12-31") is None  # tombstoned
-    for bad in ("2024-1-5", "2024-01-05T00:00:00", "abc", ""):
-        assert store._point_read_arrow(m, bad) is None
-        assert store._point_read_spark(spark, m, bad) is None
 
 
 def test_point_read_arrow_decimal_key_semantics(spark, tmp_path):
@@ -398,12 +289,15 @@ def test_point_read_arrow_decimal_key_semantics(spark, tmp_path):
     )
     m = store._manifest(store.latest_version())
     for key in ("5.00", "-3.10", "9.99"):
-        arrow = store._point_read_arrow(m, key)
+        arrow = store._multi_point_read_arrow(m, [key])[key]
         via_spark = store._point_read_spark(spark, m, key)
         assert arrow == via_spark, (key, arrow, via_spark)
-    assert store._point_read_arrow(m, "5.00") == {"k": Decimal("5.00"), "n": 51}
+    assert store._multi_point_read_arrow(m, ["5.00"])["5.00"] == {
+        "k": Decimal("5.00"),
+        "n": 51,
+    }
     for bad in ("5", "5.0", "5.000", "05.00", "1E+2", "-0.00", "abc", ""):
-        assert store._point_read_arrow(m, bad) is None
+        assert store._multi_point_read_arrow(m, [bad])[bad] is None
         assert store._point_read_spark(spark, m, bad) is None
     # the fast path really is job-free for these key types
     tracker = spark.sparkContext.statusTracker()

@@ -532,9 +532,10 @@ def test_null_key_state_rows_filtered_at_commit(spark, tmp_path):
 
 def test_process_batch_never_materializes_rows_on_driver(spark, tmp_path):
     """100 TB design guard: process_batch's only driver-side actions are
-    metadata-sized (per-kind counts, touched bucket ids) — never the batch's
+    metadata-sized (the commit's touched bucket ids) — never the batch's
     state/event/reply rows. Spy on every collect() during a 2000-command
-    batch and assert nothing row-sized crosses the driver."""
+    batch against a store that already holds a version, and assert
+    nothing row-sized crosses the driver."""
     from pyspark.sql.classic.dataframe import DataFrame as ClassicDF
 
     store = SnapshotStore(str(tmp_path / "s7"), key_col="aggregate_id")
@@ -552,6 +553,14 @@ def test_process_batch_never_materializes_rows_on_driver(spark, tmp_path):
         event_schema="kind string, aggregate_id string",
         key_col="user_id",
         order_cols=["ts"],
+    )
+    # one prior version, so the batch's commit is a bucket merge — the
+    # commit that collects its touched bucket ids on the driver
+    store.commit(
+        None,
+        spark.createDataFrame([("seed", 0)], "aggregate_id string, n int"),
+        "b0",
+        updates_unique=True,
     )
     cmds = spark.range(2000).select(
         F.col("id").alias("event_id"),
@@ -574,7 +583,7 @@ def test_process_batch_never_materializes_rows_on_driver(spark, tmp_path):
         engine.process_batch(cmds, "big1")
     finally:
         ClassicDF.collect = orig
-    # per-kind counts (<=4 rows) + touched-bucket ids (<=num_buckets)
+    # touched-bucket ids (<=num_buckets)
     assert sizes and max(sizes) <= store.default_num_buckets
     assert store.get_state(spark, "7")["n"] == 4  # 2000/500 commands per key
 
@@ -1362,96 +1371,6 @@ def test_run_stream_crash_between_staging_and_manifest_recovers(spark, tmp_path)
     assert not [d for d in os.listdir(replies) if ".staging-" in d]
 
 
-def test_transform_with_state_running_counts_and_ttl(spark, tmp_path):
-    """The Spark-4 transformWithState API (typed state handles + native
-    TTL): counts accumulate across micro-batches AND across stream
-    restarts from the same checkpoint; with a short ttl_ms the state
-    passivates after idle (R7 — the actor passivation analog) and the
-    next batch restarts the key from zero.
-
-    ENV-SKIPPED here: the TWS driver worker needs the google.protobuf
-    runtime (Spark's StateMessage protocol), broken in this container —
-    see surge_spark/streaming/tws.py's gate. Runs on a standard cluster."""
-    import time as _time
-
-    import pytest as _pytest
-
-    from surge_spark.streaming.tws import running_counts_tws, tws_available
-
-    if not tws_available():
-        _pytest.skip("google.protobuf runtime unavailable (TWS driver worker)")
-
-    src = str(tmp_path / "src")
-    schema = "k string, v long"
-
-    def write(rows):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-
-    def run_once(ckpt, ttl_ms=None):
-        stream = spark.readStream.schema(schema).parquet(src)
-        seen = {}
-
-        def sink(batch_df, _bid):
-            for r in batch_df.collect():
-                seen[r.key] = r.n
-
-        q = (
-            running_counts_tws(stream, "k", ttl_ms=ttl_ms)
-            .writeStream.foreachBatch(sink)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        return seen
-
-    write([("a", 1), ("a", 2), ("b", 1)])
-    ck = str(tmp_path / "ck")
-    assert run_once(ck) == {"a": 2, "b": 1}
-    # restart from the checkpoint: state survived, counts continue
-    write([("a", 3), ("c", 1)])
-    got = run_once(ck)
-    assert got["a"] == 3 and got["c"] == 1
-
-    # TTL variant: state for an idle key expires between runs
-    src2 = str(tmp_path / "src2")
-    src, write2 = src2, None  # noqa: F841 — reuse write via closure below
-
-    def write_b(rows):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(src2)
-
-    def run_ttl(ckpt):
-        stream = spark.readStream.schema(schema).parquet(src2)
-        seen = {}
-
-        def sink(batch_df, _bid):
-            for r in batch_df.collect():
-                seen[r.key] = r.n
-
-        q = (
-            running_counts_tws(stream, "k", ttl_ms=500)
-            .writeStream.foreachBatch(sink)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        return seen
-
-    ck2 = str(tmp_path / "ck2")
-    write_b([("x", 1), ("x", 2)])
-    assert run_ttl(ck2)["x"] == 2
-    _time.sleep(2.0)  # > ttl: the value state ages out
-    write_b([("x", 3)])
-    assert run_ttl(ck2)["x"] == 1  # passivated — restarted from None
-
-
 def test_streaming_change_replication_follows_live_primary(spark, tmp_path):
     """R10 streaming form: run_change_replication follows a LIVE primary
     run_stream — including mid-stream compactions (change_feed=True makes
@@ -1652,7 +1571,8 @@ def test_dr_failover_promotes_standby_engine(spark, tmp_path):
     assert best == final
 
 
-def test_driver_fold_equals_distributed_fold(spark, tmp_path):
+@pytest.mark.parametrize("delta_commits", [2, None])
+def test_driver_fold_equals_distributed_fold(spark, tmp_path, delta_commits):
     """Cross-mode pin for the driver-side fold fast path
     (driver_fold_max_rows): the SAME command stream through the driver
     fold (default) and the distributed fold (=0) yields identical
@@ -1660,7 +1580,10 @@ def test_driver_fold_equals_distributed_fold(spark, tmp_path):
     tombstones, rejections, handler errors, a nullable long state field
     (the NaN-through-pandas representation both paths share), multiple
     commits, and a compaction. The distributed fold remains the semantic
-    source of truth; this is the contract that lets the fast path exist."""
+    source of truth; this is the contract that lets the fast path exist.
+    Run on both store modes — merge-on-read (delta_commits=2) and COW
+    (None) — since both folds commit through the engine's one commit
+    call; a COW store always takes the distributed fold."""
     import math
 
     def process(state, cmd):
@@ -1697,7 +1620,10 @@ def test_driver_fold_equals_distributed_fold(spark, tmp_path):
 
     def run(tag, fold_rows):
         store = SnapshotStore(
-            str(tmp_path / tag), key_col="k", num_buckets=4, delta_commits=2
+            str(tmp_path / tag),
+            key_col="k",
+            num_buckets=4,
+            delta_commits=delta_commits,
         )
         eng = CommandEngine(
             store,
