@@ -393,7 +393,7 @@ def bench_streaming(spark) -> dict:
         # MEDIAN OF 3 CALLS (r12): the single-shot form declined three
         # consecutive driver rounds (1742->1297->984 cmds/s) while every
         # interleaved tree A/B showed no regression; a driver-conditions
-        # profile (scripts/profile_submit_many.py) then showed session age
+        # profile (now perfbench's traced cmd-bulk run) then showed session age
         # does NOT degrade the path (aged reused-engine medians ~2x the
         # cold number) and the whole decline lives inside the documented
         # 426-1675 single-shot spread — the metric was one draw from a

@@ -26,8 +26,8 @@ Two folds share that pipeline. Batches at or under ``driver_fold_max_rows``
 fold driver-side: the batch's state comes from the batched arrow point read
 and the handlers run in-process. Larger batches take the distributed fold (a
 snapshot join plus a grouped Arrow fold), which stays the semantic source of
-truth. Both hand their output to the same single ``SnapshotStore.commit``
-call (``_commit``).
+truth. Both run their keys through one kernel, ``_fold_frame``, and hand its
+output to the same single ``SnapshotStore.commit`` call (``_commit``).
 """
 
 from __future__ import annotations
@@ -44,7 +44,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..operators.eventsourcing import _iter_rows
 from ..session import ensure_shipped
 from ._prof import phase
 from .context import ContextCommandHandler, SurgeContext
@@ -61,6 +60,21 @@ REPLY_SCHEMA = (
     "rejection string, reply string"
 )
 RECORD_SCHEMA = "topic string, key string, value string"
+
+_INTEGRAL = (T.LongType, T.IntegerType, T.ShortType, T.ByteType)
+
+
+def _null_rep(dt: T.DataType) -> Any:
+    """What a null of Spark type ``dt`` reads as in an Arrow-converted pandas
+    column (the distributed fold's bucket): NaN for a fractional type, NaT
+    for a temporal one (NTZ and intervals are not TimestampType subclasses
+    but null as NaT all the same), None for anything else. Integral columns
+    are typed per key by ``CommandEngine._fold_frame`` instead."""
+    if isinstance(dt, (T.DoubleType, T.FloatType)):
+        return float("nan")
+    if isinstance(dt, (T.TimestampType, T.TimestampNTZType, T.DayTimeIntervalType)):
+        return pd.NaT
+    return None
 
 
 class CommandEngine:
@@ -122,8 +136,10 @@ class CommandEngine:
         driver_commit_max_rows' write twin): collect the batch (one tiny
         narrow job), fetch the batch keys' state through the batched
         arrow point read (SnapshotStore._multi_point_read_arrow — zero
-        Spark jobs), run the SAME _handle_group per key in-process, and
-        commit through the existing driver-side arrow writes. The whole
+        Spark jobs), fold the whole batch as one frame through the SAME
+        per-key kernel the distributed fold runs per bucket
+        (_fold_frame), and commit through the driver-side arrow writes.
+        The whole
         distributed fold job — the two exchanges, the snapshot scan, the
         Arrow python round trip, ~0.4 s of a 0.85 s trigger at 128-command
         batches — disappears. The exchange itself is NOT elidable any
@@ -322,45 +338,108 @@ class CommandEngine:
     # -- core ----------------------------------------------------------------
 
     @staticmethod
-    def _handle_group(
+    def _fold_frame(
         pdf: pd.DataFrame,
         state_fields: list[str],
+        integral_cols: list[str],
         key_col: str,
         store_key_col: str,
         order_cols: list[str],
         process_command: CommandHandler | ContextCommandHandler,
         handle_event: EventHandler | None,
         context_mode: bool,
+    ) -> list[tuple[str, str]]:
+        """The one per-key fold of both folds: a frame of MANY keys in (the
+        distributed fold's Arrow bucket, or the driver fold's whole batch),
+        packed (kind, json) rows out. Columns: the command columns, ``__k``
+        (the canonical string key; None is the distributed groupBy's NULL
+        group, whose state join always misses), the ``__state__*`` columns
+        of the snapshot join (actor init, §3.1.5), and maybe the salt
+        ``__g``. Handlers see each row as a dict of every column except
+        ``__k``/``__g``.
+
+        Each column becomes Python values ONCE (``tolist``); the per-key
+        work is plain list indexing, in first-appearance order of ``__k``:
+        - integral columns are typed per key, as a per-key Arrow conversion
+          would: int when the key's own slice is null-free, float (NaN for
+          the nulls) otherwise. A null elsewhere in the frame promotes the
+          bucket's column to float64 and must not leak floats into a key
+          without one (from_json against a long field parses a float
+          token to NULL);
+        - a multi-command key runs in ``order_cols`` order: a stable sort,
+          nulls last per column, as ``sort_values(kind="mergesort")``;
+        - the initial state is the first row's ``__state__*`` values, None
+          when its ``__state__<store key>`` is null.
+
+        Static with plain-value args: the fold closure shipped to executors
+        must not capture the engine instance (it holds the cached previous
+        batch DataFrame → unpicklable SparkContext)."""
+        names = [c for c in pdf.columns if c not in ("__k", "__g")]
+        cols = {c: pdf[c].tolist() for c in names}
+        groups: dict[Any, list[int]] = {}
+        for i, k in enumerate(pdf["__k"].tolist()):
+            groups.setdefault(k, []).append(i)
+        for c in integral_cols:
+            if pdf[c].dtype.kind in "iu":
+                continue  # null-free in the whole frame: already ints
+            vals, nulls = cols[c], pdf[c].isna().tolist()
+            for idx in groups.values():
+                if any(nulls[i] for i in idx):
+                    for i in idx:
+                        vals[i] = float("nan") if nulls[i] else float(vals[i])
+                else:
+                    for i in idx:
+                        vals[i] = int(vals[i])
+        rows = [dict(zip(names, r)) for r in zip(*cols.values())]
+        order = [
+            (cols[c], pdf[c].isna().tolist()) for c in order_cols if c in cols
+        ]
+
+        def order_key(i: int) -> tuple:
+            return tuple((1, 0) if nulls[i] else (0, vals[i]) for vals, nulls in order)
+
+        state_nulls = (
+            pdf[f"__state__{store_key_col}"].isna().tolist() if state_fields else []
+        )
+        out: list[tuple[str, str]] = []
+        for idx in groups.values():
+            first = rows[idx[0]]
+            state = None
+            if state_fields and not state_nulls[idx[0]]:
+                state = {f: first[f"__state__{f}"] for f in state_fields}
+            if order and len(idx) > 1:
+                idx = sorted(idx, key=order_key)
+            s, e, r, d, recs = CommandEngine._handle_group(
+                str(first[key_col]),
+                state,
+                [rows[i] for i in idx],
+                store_key_col,
+                process_command,
+                handle_event,
+                context_mode,
+            )
+            out.extend(CommandEngine._pack_rows(s, e, r, d, recs, store_key_col))
+        return out
+
+    @staticmethod
+    def _handle_group(
+        key: str,
+        state: dict | None,
+        cmds: list[dict],
+        store_key_col: str,
+        process_command: CommandHandler | ContextCommandHandler,
+        handle_event: EventHandler | None,
+        context_mode: bool,
     ):
-        """Run one key's commands serially (R1). Returns (state_rows,
-        event_rows, reply_rows, deleted_keys, record_rows). Each event row
-        is ``(event_dict, topic_or_None)`` — None routes to the default
-        events output, a string is a persist_to_topic destination. Initial
-        state arrives as __state__-prefixed columns from the snapshot join
-        (actor init, §3.1.5). Static with plain-value args: the fold closure
-        shipped to executors must not capture the engine instance (it holds
-        the cached previous batch DataFrame → unpicklable SparkContext)."""
-        key = str(pdf[key_col].iloc[0])
-        state = None
-        if state_fields and pdf[f"__state__{store_key_col}"].notna().iloc[0]:
-            first = pdf.iloc[0]
-            # .item() unwraps numpy scalars so downstream from_json parsing
-            # against the declared state schema sees Python natives
-            state = {
-                f: (v.item() if hasattr(v, "item") else v)
-                for f in state_fields
-                for v in [first[f"__state__{f}"]]
-            }
+        """Run one key's commands serially (R1), starting from ``state``.
+        Returns (state_rows, event_rows, reply_rows, deleted_keys,
+        record_rows). Each event row is ``(event_dict, topic_or_None)`` —
+        None routes to the default events output, a string is a
+        persist_to_topic destination."""
         initial_state = state
         events_out: list[tuple[dict, str | None]] = []
         records_out: list[dict] = []
         replies: list[dict] = []
-        present_order = [c for c in order_cols if c in pdf.columns]
-        if present_order and len(pdf) > 1:
-            # single-command groups (the submit_many distinct-key shape)
-            # skip the sort: 2048 one-row sort_values calls are pure
-            # per-key overhead in the salted fold loop
-            pdf = pdf.sort_values(present_order, kind="mergesort")
 
         # one event loop per key group services every awaited handler (U3)
         loop: asyncio.AbstractEventLoop | None = None
@@ -390,7 +469,7 @@ class CommandEngine:
             }
 
         try:
-            for cmd in _iter_rows(pdf):
+            for cmd in cmds:
                 if context_mode:
                     # U4: handler drives a SurgeContext
                     # (AggregateProcessingModel.scala:36-64)
@@ -482,6 +561,48 @@ class CommandEngine:
             + [("record", json.dumps(x, default=str)) for x in recs]
         )
 
+    @staticmethod
+    def _batch_frame(
+        rows: list,
+        key_col: str,
+        command_fields: list[T.StructField],
+        state_struct_fields: list[T.StructField],
+        state_map: dict[str, dict | None],
+    ) -> tuple[pd.DataFrame, list[str]]:
+        """The driver fold's whole batch as ONE ``_fold_frame`` input, in
+        the shape of the distributed fold's joined bucket: the command
+        columns, ``__k`` (the state lookup key; None for a NULL key, which
+        joins nothing) and a ``__state__*`` column per state field from
+        ``state_map``. Nulls take the bucket's representation
+        (``_null_rep``: NaN, NaT or None). Integral columns stay exact
+        Python ints in an object column, so a null elsewhere in the batch
+        never rounds them through float64; ``_fold_frame`` types them per
+        key. Returns the frame and its integral column names."""
+        data: dict[str, Any] = {}
+        integral_cols: list[str] = []
+
+        def put(name: str, dt: T.DataType, vals: list) -> None:
+            if isinstance(dt, _INTEGRAL):
+                integral_cols.append(name)
+                data[name] = pd.Series(vals, dtype=object)
+                return
+            null = _null_rep(dt)
+            data[name] = vals if null is None else [null if x is None else x for x in vals]
+
+        for j, f in enumerate(command_fields):
+            put(f.name, f.dataType, [r[j] for r in rows])
+        data["__k"] = [
+            None if r[key_col] is None else str(r[key_col]) for r in rows
+        ]
+        states = [state_map.get(k) if k is not None else None for k in data["__k"]]
+        for f in state_struct_fields:
+            put(
+                f"__state__{f.name}",
+                f.dataType,
+                [None if st is None else st.get(f.name) for st in states],
+            )
+        return pd.DataFrame(data), integral_cols
+
     def _driver_fold(
         self,
         spark: SparkSession,
@@ -531,9 +652,8 @@ class CommandEngine:
                 for r in rows
                 if r[self.key_col] is not None
             ]
-            state_fields: list[str] = []
+            state_struct_fields: list[T.StructField] = []
             state_map: dict[str, dict | None] = {}
-            null_reps: dict[str, Any] = {}
             v = self.store.latest_version()
             if v is not None:
                 m = self.store._manifest(v)
@@ -541,85 +661,31 @@ class CommandEngine:
                     state_map = self.store._multi_point_read_arrow(
                         m, list(dict.fromkeys(keys))
                     )
-                struct = T.StructType.fromJson(json.loads(m["state_schema"]))
-                state_fields = [f.name for f in struct.fields]
-                # null representation PER FIELD TYPE, mirroring what the
-                # distributed fold's Arrow batch hands handlers: a null
-                # numeric state field arrives as float NaN (int-with-null
-                # promotion), a null timestamp as NaT, everything else as
-                # None. A plain-None scalar assignment would hand the
-                # fast-path handler None where the distributed path hands
-                # NaN — a cross-mode behavioral divergence for handlers
-                # written against the documented NaN contract.
-                for f in struct.fields:
-                    if isinstance(
-                        f.dataType,
-                        (
-                            T.LongType,
-                            T.IntegerType,
-                            T.ShortType,
-                            T.ByteType,
-                            T.DoubleType,
-                            T.FloatType,
-                        ),
-                    ):
-                        null_reps[f.name] = float("nan")
-                    elif isinstance(
-                        f.dataType,
-                        # NTZ/interval are NOT TimestampType subclasses but
-                        # null them as NaT through Arrow all the same. Today
-                        # no temporal type reaches this path (_driver_structs
-                        # gates on _arrow_write_schema, which rejects them);
-                        # the mapping is here so widening that gate can never
-                        # reopen a None-vs-NaT cross-mode divergence.
-                        (
-                            T.TimestampType,
-                            T.TimestampNTZType,
-                            T.DayTimeIntervalType,
-                        ),
-                    ):
-                        null_reps[f.name] = pd.NaT
-                    else:
-                        null_reps[f.name] = None
+                state_struct_fields = T.StructType.fromJson(
+                    json.loads(m["state_schema"])
+                ).fields
+            with phase("pb.df_frame"):
+                pdf, integral_cols = CommandEngine._batch_frame(
+                    rows,
+                    self.key_col,
+                    commands.schema.fields,
+                    state_struct_fields,
+                    state_map,
+                )
         except Exception:  # noqa: BLE001 — exact fallback, never guess
             return None
-        state_key_col = self.store.key_col
         with phase("pb.df_handlers"):
-            # group key None = the distributed groupBy's NULL group; its
-            # state lookup is always a miss (NULL joins nothing)
-            groups: dict[str | None, list] = {}
-            for r in rows:
-                kraw = r[self.key_col]
-                groups.setdefault(
-                    None if kraw is None else str(kraw), []
-                ).append(r)
-            packed_rows: list[tuple[str, str]] = []
-            for key, krows in groups.items():
-                # same frame shape the distributed fold hands _handle_group:
-                # command columns + __state__* columns, pandas-typed (a
-                # nulled long state field arrives as float NaN on BOTH
-                # paths — pd.DataFrame int-with-null promotion matches the
-                # Arrow batch's)
-                pdf = pd.DataFrame([rr.asDict() for rr in krows])
-                st = state_map.get(key) if key is not None else None
-                for f in state_fields:
-                    sv = st.get(f) if st is not None else None
-                    if sv is None:
-                        sv = null_reps[f]  # NaN/NaT parity, see above
-                    pdf[f"__state__{f}"] = sv
-                s, e, rep, d, recs = CommandEngine._handle_group(
-                    pdf,
-                    state_fields,
-                    self.key_col,
-                    state_key_col,
-                    self.order_cols,
-                    self.process_command,
-                    self.handle_event,
-                    self.context_mode,
-                )
-                packed_rows.extend(
-                    CommandEngine._pack_rows(s, e, rep, d, recs, state_key_col)
-                )
+            packed_rows = CommandEngine._fold_frame(
+                pdf,
+                [f.name for f in state_struct_fields],
+                integral_cols,
+                self.key_col,
+                self.store.key_col,
+                self.order_cols,
+                self.process_command,
+                self.handle_event,
+                self.context_mode,
+            )
         # local relation carrying the fold output: the typed frames below
         # are the RETURN VALUE and the commit's exact fallback; the actual
         # writes go driver-side through driver_sides
@@ -716,8 +782,8 @@ class CommandEngine:
                 # merge runs over the batch's keys, not the snapshot.
                 # ONE parsed IN string, never Column.isin(2048 values) —
                 # the py4j literal-list marshalling costs >1 s per call
-                # at submit_many cardinality (the plan-build-tax class,
-                # measured in scripts/profile_hc_submit_many.py)
+                # at submit_many cardinality (the plan-build-tax class;
+                # perfbench's traced cmd-bulk run shows this layer)
                 # backslash BEFORE quote: Spark's lexer treats \x inside a
                 # single-quoted literal as an escape, so an unescaped
                 # backslash in a key ('a\b') silently changes the literal
@@ -784,28 +850,16 @@ class CommandEngine:
         # parses ISO-format timestamp strings, which json.dumps(default=str)
         # produces).
         # capture only plain values in the executor-shipped closure
-        handle_group = CommandEngine._handle_group
         state_key_col = self.store.key_col
         # integral columns of the joined frame (command AND __state__*):
         # the salted fold's Arrow bucket mixes keys, so a NULL anywhere in
         # the bucket (a stateless key's left-join miss) promotes the WHOLE
-        # column to float64 — a stateful key's handler would then see
-        # n=5.0 where the per-key grouping handed int 5, emit 6.0, and
-        # from_json against 'n long' parses the float token to NULL
-        # (verified) — silent state corruption. fold() restores int64 per
-        # KEY group wherever that group's slice is null-free, reproducing
-        # the old per-key Arrow conversion exactly (a null WITHIN the
-        # key's own slice stays NaN — the documented NaN contract).
-        # Residual (documented): an int > 2^53 sharing a bucket with a
-        # null-bearing key already lost precision in the bucket's own
-        # Arrow->pandas float pass, same as any float64 channel.
+        # column to float64; _fold_frame types each key's slice back (see
+        # there). Residual (documented): an int > 2^53 sharing a bucket
+        # with a null-bearing key already lost precision in the bucket's
+        # own Arrow->pandas float pass, same as any float64 channel.
         integral_cols = [
-            f.name
-            for f in commands.schema.fields
-            if isinstance(
-                f.dataType,
-                (T.LongType, T.IntegerType, T.ShortType, T.ByteType),
-            )
+            f.name for f in commands.schema.fields if isinstance(f.dataType, _INTEGRAL)
         ]
         key_col = self.key_col
         order_cols = self.order_cols
@@ -814,45 +868,27 @@ class CommandEngine:
         context_mode = self.context_mode
 
         def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-            # ONE Arrow group carries MANY key groups (__g is a salted
-            # hash of __k, see below): applyInPandas pays a per-GROUP
-            # JVM<->Python framing cost (~0.5 ms measured — 2048 distinct
-            # keys cost ~1.0 s of pure framing at fold width 4, the named
-            # term in hc_submit_many, r12 task 3), while a pandas groupby
-            # inside one batch walks key groups at microseconds each. The
-            # per-key fold itself is UNCHANGED — same handle_group per
-            # key, same row order within each key (groupby preserves
-            # within-group order), dropna=False keeps the NULL-key group
-            # (the distributed groupBy's NULL group; its state join is
-            # always a miss).
-            out: list[tuple[str, str]] = []
-            pdf = pdf.drop(columns=["__g"])  # once, not per key group
-            for _, kpdf in pdf.groupby("__k", sort=False, dropna=False):
-                # handlers must see the same cmd dicts they saw before r7
-                # (strict-field validators, Command(**cmd) constructors)
-                kpdf = kpdf.drop(columns=["__k"])
-                for c in integral_cols:
-                    col = kpdf[c]
-                    # restore the per-key Arrow dtype (see integral_cols
-                    # note above): bucket-wide NaN promotion must not leak
-                    # floats into a key whose own slice is null-free
-                    if col.dtype.kind == "f" and col.notna().all():
-                        kpdf[c] = col.astype("int64")
-                s, e, r, d, recs = handle_group(
-                    kpdf,
+            # ONE Arrow group carries MANY keys (__g is a salted hash of
+            # __k, see below): applyInPandas pays a JVM<->Python framing
+            # cost per GROUP (~0.5 ms measured), so 2048 one-key groups
+            # would cost ~1.0 s of framing at fold width 4. Per key,
+            # _fold_frame costs 23 us on a 128-row, 128-key bucket of the
+            # submit_many shape (3.0 ms per bucket, handlers and JSON
+            # included; Xeon, one core), where a pandas frame per key
+            # (groupby slice, astype, iloc, sort_values, row iteration)
+            # cost 605 us (77 ms); with 37 keys, 2.3 ms against 26 ms.
+            return pd.DataFrame(
+                CommandEngine._fold_frame(
+                    pdf,
                     state_fields,
+                    integral_cols,
                     key_col,
                     state_key_col,
                     order_cols,
                     process_command,
                     handle_event,
                     context_mode,
-                )
-                out.extend(
-                    CommandEngine._pack_rows(s, e, r, d, recs, state_key_col)
-                )
-            return pd.DataFrame(
-                [{"kind": k, "payload": p} for k, p in out],
+                ),
                 columns=["kind", "payload"],
             )
 

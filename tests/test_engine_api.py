@@ -368,6 +368,48 @@ def test_submit_many_distributed_fold_at_scale(spark, tmp_path):
         assert engine.aggregate_for(k).get_state()["balance"] == bal, k
 
 
+def test_command_sized_batch_takes_the_driver_fold(spark, tmp_path):
+    """A 128-command micro-batch of the streaming shape (string key,
+    ``aggregate_id string, n long`` state, merge-on-read store, repeated
+    and unseeded keys) must fold driver-side: a decline here would move
+    every command-sized batch onto the distributed fold without failing
+    anything."""
+    from surge_spark.streaming.command_engine import CommandEngine
+    from surge_spark.streaming.snapshot_store import SnapshotStore
+
+    def process(state, cmd):
+        return [{"aggregate_id": cmd["aggregate_id"]}], False
+
+    def handle(state, ev):
+        return {"aggregate_id": ev["aggregate_id"], "n": (state["n"] if state else 0) + 1}
+
+    store = SnapshotStore(
+        str(tmp_path / "s"), key_col="aggregate_id", num_buckets=4, delta_commits=4
+    )
+    seed = spark.range(64).selectExpr(
+        "CAST(id AS STRING) AS aggregate_id", "CAST(0 AS LONG) AS n"
+    )
+    store.commit(None, seed, "seed", updates_unique=True)
+    engine = CommandEngine(
+        store,
+        process,
+        handle,
+        "aggregate_id string, n long",
+        "aggregate_id string",
+        key_col="aggregate_id",
+        order_cols=["command_id"],
+        fold_partitions=4,
+    )
+    # keys 0..95: a hot head repeats, keys 64..95 have no stored state
+    rows = [(str((i * i) % 96), f"c{i:04d}") for i in range(128)]
+    batch = spark.createDataFrame(rows, "aggregate_id string, command_id string")
+    out = engine._driver_fold(spark, batch, "b0", None)
+    assert out is not None
+    replies = out[2].collect()
+    assert len(replies) == 128 and {r.status for r in replies} == {"success"}
+    assert store.get_state(spark, "0")["n"] == sum(k == "0" for k, _ in rows)
+
+
 @pytest.mark.slow  # r16 fast-tier split (>10 s; see pytest.ini)
 def test_salted_fold_preserves_long_state_in_mixed_buckets(spark, tmp_path):
     """Review-finding regression: the salted fold's Arrow bucket mixes

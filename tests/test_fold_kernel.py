@@ -1,0 +1,387 @@
+"""Parity pin for the per-key fold kernel (``CommandEngine._fold_frame``).
+
+The kernel replaced a per-key pandas path: ``groupby("__k")`` over the
+distributed fold's Arrow bucket, a per-key ``astype`` restoring integral
+columns, and a ``_handle_group`` that took a per-key frame (``iloc`` for the
+key and initial state, ``sort_values`` for command order, a row iterator
+for the command dicts). A frozen copy of that path is the oracle below.
+Generated multi-key buckets must fold to the same packed rows, and every
+handler must receive the same cmd/state dicts (same keys, same order, same
+Python value types, NaN and NaT included), for plain, async and
+context-mode handlers. The driver fold's batch frame
+(``CommandEngine._batch_frame``) built from the same commands must fold
+identically too: the distributed fold is the source of truth.
+
+No Spark session: buckets are built with pyarrow and converted the way
+applyInPandas converts them.
+"""
+
+from __future__ import annotations
+
+import asyncio
+import datetime as dt
+import inspect
+import json
+
+import pandas as pd
+import pyarrow as pa
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
+from pyspark.sql import Row
+from pyspark.sql import types as T
+
+from surge_spark.streaming.command_engine import CommandEngine
+from surge_spark.streaming.context import ProducerRecord, SurgeContext
+
+# -- the frozen per-key path (the oracle) ----------------------------------
+
+
+def _ref_handle_group(
+    pdf, state_fields, key_col, store_key_col, order_cols,
+    process_command, handle_event, context_mode,
+):
+    key = str(pdf[key_col].iloc[0])
+    state = None
+    if state_fields and pdf[f"__state__{store_key_col}"].notna().iloc[0]:
+        first = pdf.iloc[0]
+        state = {
+            f: (v.item() if hasattr(v, "item") else v)
+            for f in state_fields
+            for v in [first[f"__state__{f}"]]
+        }
+    initial_state = state
+    events_out: list = []
+    records_out: list = []
+    replies: list = []
+    present_order = [c for c in order_cols if c in pdf.columns]
+    if present_order and len(pdf) > 1:
+        pdf = pdf.sort_values(present_order, kind="mergesort")
+    loop = None
+
+    def run(value):
+        nonlocal loop
+        if inspect.iscoroutine(value):
+            if loop is None:
+                loop = asyncio.new_event_loop()
+            return loop.run_until_complete(value)
+        return value
+
+    def reply_row(status, new_state=None, rejection=None, reply=None):
+        return {
+            "command_id": str(cmd.get("command_id", "")),
+            "aggregate_id": key,
+            "status": status,
+            "new_state": json.dumps(new_state, default=str) if new_state is not None else None,
+            "rejection": json.dumps(rejection, default=str) if rejection is not None else None,
+            "reply": json.dumps(reply, default=str) if reply is not None else None,
+        }
+
+    cols = list(pdf.columns)
+    try:
+        for vals in zip(*(pdf[c].tolist() for c in cols)):
+            cmd = dict(zip(cols, vals))
+            if context_mode:
+                try:
+                    ctx = run(process_command(SurgeContext(state=state), state, cmd))
+                except Exception as e:  # noqa: BLE001
+                    replies.append(reply_row(f"error: {type(e).__name__}"))
+                    continue
+                if ctx.rejected:
+                    replies.append(reply_row("rejected", state, rejection=ctx.rejection))
+                    continue
+                pre_state, pre_ev, pre_rec = state, len(events_out), len(records_out)
+                try:
+                    state = ctx.state
+                    for ev, topic in ctx.events:
+                        events_out.append(({**ev, store_key_col: key}, topic))
+                    for rec in ctx.records:
+                        records_out.append({"topic": rec.topic, "key": rec.key, "value": rec.value})
+                    for fn in ctx.side_effects:
+                        run(fn(state))
+                    reply = run(ctx.reply_fn(state)) if ctx.reply_fn else None
+                except Exception as e:  # noqa: BLE001
+                    state = pre_state
+                    del events_out[pre_ev:]
+                    del records_out[pre_rec:]
+                    replies.append(reply_row(f"error: {type(e).__name__}"))
+                    continue
+                replies.append(reply_row("success", state, reply=reply))
+                continue
+            try:
+                events, rejected = run(process_command(state, cmd))
+            except Exception as e:  # noqa: BLE001
+                replies.append(reply_row(f"error: {type(e).__name__}"))
+                continue
+            if rejected:
+                replies.append(reply_row("rejected", state))
+                continue
+            pre_state, pre_ev = state, len(events_out)
+            try:
+                for ev in events:
+                    state = run(handle_event(state, ev))
+                    events_out.append(({**ev, store_key_col: key}, None))
+            except Exception as e:  # noqa: BLE001
+                state = pre_state
+                del events_out[pre_ev:]
+                replies.append(reply_row(f"error: {type(e).__name__}"))
+                continue
+            replies.append(reply_row("success", state))
+    finally:
+        if loop is not None:
+            loop.close()
+    state_rows = [state] if state != initial_state and state is not None else []
+    deleted_keys = [key] if initial_state is not None and state is None else []
+    return state_rows, events_out, replies, deleted_keys, records_out
+
+
+def _ref_pack_rows(s, e, r, d, recs, state_key_col):
+    return (
+        [("state", json.dumps(x, default=str)) for x in s]
+        + [("event", json.dumps({"event": ev, "topic": t}, default=str)) for ev, t in e]
+        + [("reply", json.dumps(x, default=str)) for x in r]
+        + [("tombstone", json.dumps({state_key_col: k})) for k in d]
+        + [("record", json.dumps(x, default=str)) for x in recs]
+    )
+
+
+def _ref_fold(pdf, state_fields, integral_cols, key_col, store_key_col,
+              order_cols, process_command, handle_event, context_mode):
+    out = []
+    pdf = pdf.drop(columns=["__g"])
+    for _, kpdf in pdf.groupby("__k", sort=False, dropna=False):
+        kpdf = kpdf.drop(columns=["__k"])
+        for c in integral_cols:
+            col = kpdf[c]
+            if col.dtype.kind == "f" and col.notna().all():
+                kpdf[c] = col.astype("int64")
+        s, e, r, d, recs = _ref_handle_group(
+            kpdf, state_fields, key_col, store_key_col, order_cols,
+            process_command, handle_event, context_mode,
+        )
+        out.extend(_ref_pack_rows(s, e, r, d, recs, store_key_col))
+    return out
+
+
+# -- generated buckets -----------------------------------------------------
+
+COMMAND_FIELDS = [
+    T.StructField("k", T.StringType()),
+    T.StructField("command_id", T.StringType()),
+    T.StructField("seq", T.LongType()),
+    T.StructField("sub", T.IntegerType()),
+    T.StructField("amt", T.LongType()),
+    T.StructField("op", T.StringType()),
+]
+STATE_FIELDS = [
+    T.StructField("k", T.StringType()),
+    T.StructField("n", T.LongType()),
+    T.StructField("ts", T.TimestampType()),
+]
+ARROW_TYPES = {
+    "k": pa.string(), "command_id": pa.string(), "seq": pa.int64(),
+    "sub": pa.int32(), "amt": pa.int64(), "op": pa.string(),
+}
+INTEGRAL = ["seq", "sub", "amt", "__state__n"]
+ORDER = ["seq", "sub"]
+OPS = ["ok", "ok", "reject", "boom", "evboom", "del", "topic"]
+
+_small = st.integers(0, 2)
+_long = st.integers(-(2**40), 2**40)
+_ts = st.datetimes(dt.datetime(2020, 1, 1), dt.datetime(2030, 1, 1))
+
+
+@st.composite
+def batches(draw):
+    """(commands, states): command dicts over a few keys, NULL key included,
+    with nullable order/amount columns; per-key stored state or None."""
+    keys = draw(st.lists(st.sampled_from(["a", "b", "c", "d", None]),
+                         min_size=1, max_size=5, unique=True))
+    states = {}
+    for k in keys:
+        if k is not None and draw(st.booleans()):
+            states[k] = {"k": k, "n": draw(st.none() | _long), "ts": draw(st.none() | _ts)}
+    commands = [
+        {
+            "k": draw(st.sampled_from(keys)),
+            "command_id": f"c{i}",
+            "seq": draw(st.none() | _small),
+            "sub": draw(st.none() | _small),
+            "amt": draw(st.none() | _long),
+            "op": draw(st.sampled_from(OPS)),
+        }
+        for i in range(draw(st.integers(1, 14)))
+    ]
+    return commands, states
+
+
+def _bucket(commands, states) -> pd.DataFrame:
+    """The distributed fold's joined Arrow bucket, converted to pandas as
+    applyInPandas converts it."""
+    st_rows = [states.get(c["k"]) if c["k"] is not None else None for c in commands]
+    cols = {f: pa.array([c[f] for c in commands], t) for f, t in ARROW_TYPES.items()}
+    cols["__k"] = pa.array([c["k"] for c in commands], pa.string())
+    for f, t in (("k", pa.string()), ("n", pa.int64()), ("ts", pa.timestamp("us"))):
+        cols[f"__state__{f}"] = pa.array([s[f] if s else None for s in st_rows], t)
+    cols["__g"] = pa.array([0] * len(commands), pa.int64())
+    return pa.table(cols).to_pandas(date_as_object=True, coerce_temporal_nanoseconds=True)
+
+
+def _driver_frame(commands, states) -> tuple[pd.DataFrame, list[str]]:
+    rows = [Row(**c) for c in commands]
+    return CommandEngine._batch_frame(rows, "k", COMMAND_FIELDS, STATE_FIELDS, states)
+
+
+# -- recording handlers ------------------------------------------------------
+
+
+def _norm(v):
+    if isinstance(v, dict):
+        return [(k, _norm(x)) for k, x in v.items()]
+    return (type(v).__name__, "NaN" if v != v else v)
+
+
+def _handlers(mode: str, log: list):
+    def process(state, cmd):
+        log.append(("cmd", _norm(state), _norm(cmd)))
+        op = cmd["op"]
+        if op == "reject":
+            return [], True
+        if op == "boom":
+            raise RuntimeError("boom")
+        return [{"k": cmd["k"], "op": op, "amt": cmd["amt"], "cid": cmd["command_id"]}], False
+
+    def handle(state, ev):
+        log.append(("event", _norm(state), _norm(ev)))
+        if ev["op"] == "evboom":
+            raise ValueError("evboom")
+        if ev["op"] == "del":
+            return None
+        n = state["n"] if state else 0
+        return {"k": ev["k"], "n": (n if n == n else 0) + 1,
+                "ts": state["ts"] if state else None, "last": ev["cid"]}
+
+    if mode == "plain":
+        return process, handle
+    if mode == "async":
+        async def aprocess(state, cmd):
+            await asyncio.sleep(0)
+            return process(state, cmd)
+
+        return aprocess, handle
+
+    def ctx_process(ctx, state, cmd):
+        log.append(("ctx", _norm(state), _norm(cmd)))
+        op = cmd["op"]
+        if op == "reject":
+            return ctx.reject({"why": cmd["command_id"]})
+        if op == "boom":
+            raise RuntimeError("boom")
+        if op == "del":
+            return ctx.update_state(None)
+        ev = {"k": cmd["k"], "amt": cmd["amt"]}
+        n = state["n"] if state else 0
+        new = {"k": cmd["k"], "n": (n if n == n else 0) + 1, "ts": state["ts"] if state else None}
+        ctx = ctx.update_state(new).reply(lambda s: {"n": s["n"]})
+        if op == "evboom":
+            def fail(s):
+                raise ValueError("side effect")
+
+            return ctx.persist_event(ev).side_effect(fail)
+        if op == "topic":
+            return ctx.persist_to_topic(ev, "audit").persist_record(
+                ProducerRecord("audit", cmd["k"], cmd["command_id"])
+            )
+        return ctx.persist_event(ev)
+
+    return ctx_process, None
+
+
+def _fold_all(mode, commands, states):
+    """Fold one batch three ways: the oracle and the kernel over the Arrow
+    bucket, and the kernel over the driver fold's batch frame. Returns
+    (packed rows, handler log) per way."""
+    results = []
+    for fold, (pdf, integral) in (
+        (_ref_fold, (_bucket(commands, states), INTEGRAL)),
+        (CommandEngine._fold_frame, (_bucket(commands, states), INTEGRAL)),
+        (CommandEngine._fold_frame, _driver_frame(commands, states)),
+    ):
+        log: list = []
+        pc, he = _handlers(mode, log)
+        packed = fold(
+            pdf, ["k", "n", "ts"], integral, "k", "k", ORDER, pc, he, mode == "context"
+        )
+        results.append((packed, log))
+    return results
+
+
+# -- tests -----------------------------------------------------------------
+
+_SETTINGS = settings(
+    max_examples=120, deadline=None, suppress_health_check=[HealthCheck.too_slow]
+)
+
+
+def _check(mode, batch):
+    commands, states = batch
+    (ref, ref_log), (kern, kern_log), (drv, drv_log) = _fold_all(mode, commands, states)
+    assert kern_log == ref_log
+    assert kern == ref
+    assert drv_log == ref_log
+    assert drv == ref
+
+
+@_SETTINGS
+@given(batches())
+def test_kernel_matches_per_key_path_plain(batch):
+    _check("plain", batch)
+
+
+@_SETTINGS
+@given(batches())
+def test_kernel_matches_per_key_path_async(batch):
+    _check("async", batch)
+
+
+@_SETTINGS
+@given(batches())
+def test_kernel_matches_per_key_path_context(batch):
+    _check("context", batch)
+
+
+def test_kernel_types_each_key_slice():
+    """The cases the generator must reach, pinned by hand: a long promoted
+    to float64 by a null in ANOTHER key comes back as int; a null in the
+    key's own slice keeps the slice float; an all-null slice reads NaN on
+    both folds (the driver fold's old per-key frame handed None); nulls
+    sort last and ties keep arrival order."""
+    commands = [
+        {"k": "a", "command_id": "c0", "seq": 2, "sub": 0, "amt": 7, "op": "ok"},
+        {"k": "b", "command_id": "c1", "seq": None, "sub": 0, "amt": None, "op": "ok"},
+        {"k": "a", "command_id": "c2", "seq": None, "sub": 1, "amt": 8, "op": "ok"},
+        {"k": "a", "command_id": "c3", "seq": 1, "sub": 0, "amt": 9, "op": "ok"},
+        {"k": "a", "command_id": "c4", "seq": 2, "sub": 0, "amt": 5, "op": "ok"},
+        {"k": "c", "command_id": "c5", "seq": 0, "sub": 0, "amt": 3, "op": "ok"},
+        {"k": "c", "command_id": "c6", "seq": 0, "sub": 0, "amt": None, "op": "ok"},
+    ]
+    states = {"a": {"k": "a", "n": 2**40 + 1, "ts": dt.datetime(2024, 5, 1)}}
+    results = _fold_all("plain", commands, states)
+    for _, log in results:
+        cmds = [c for kind, _, c in log if kind == "cmd"]
+        got = [(dict(c)["command_id"][1], dict(c)["amt"], dict(c)["__state__n"]) for c in cmds]
+        assert got == [
+            ("c3", ("int", 9), ("int", 2**40 + 1)),
+            ("c0", ("int", 7), ("int", 2**40 + 1)),
+            ("c4", ("int", 5), ("int", 2**40 + 1)),
+            ("c2", ("int", 8), ("int", 2**40 + 1)),
+            ("c1", ("float", "NaN"), ("float", "NaN")),
+            ("c5", ("float", 3.0), ("float", "NaN")),
+            ("c6", ("float", "NaN"), ("float", "NaN")),
+        ]
+        first_state = log[0][1]
+        assert first_state == [
+            ("k", ("str", "a")),
+            ("n", ("int", 2**40 + 1)),
+            ("ts", ("Timestamp", pd.Timestamp("2024-05-01"))),
+        ]
+    assert results[0] == results[1] == results[2]

@@ -1583,8 +1583,16 @@ def test_driver_fold_equals_distributed_fold(spark, tmp_path, delta_commits):
     source of truth; this is the contract that lets the fast path exist.
     Run on both store modes — merge-on-read (delta_commits=2) and COW
     (None) — since both folds commit through the engine's one commit
-    call; a COW store always takes the distributed fold."""
+    call; a COW store always takes the distributed fold. Two pins on the
+    shared per-key kernel: key f's three commands arrive out of
+    command_id order (its trail records the order they ran in), and the
+    nullable long command column amt is null for some keys and set for
+    others in one batch (each event records the type amt reached the
+    handler as: int, or float NaN for a null in the key's own slice)."""
     import math
+
+    def seen(v):
+        return f"{type(v).__name__}:{'NaN' if v != v else v}"
 
     def process(state, cmd):
         op = cmd.get("op")
@@ -1592,7 +1600,10 @@ def test_driver_fold_equals_distributed_fold(spark, tmp_path, delta_commits):
             return ([], True)
         if op == "boom":
             raise RuntimeError("handler exploded")
-        return ([{"k": cmd["k"], "op": op}], False)
+        return (
+            [{"k": cmd["k"], "op": op, "cid": cmd["command_id"], "amt": seen(cmd["amt"])}],
+            False,
+        )
 
     def handle(state, ev):
         if ev["op"] == "del":
@@ -1609,13 +1620,21 @@ def test_driver_fold_equals_distributed_fold(spark, tmp_path, delta_commits):
         prev_extra = state["extra"] if state else None
         was_null = isinstance(prev_extra, float) and math.isnan(prev_extra)
         extra = None if ev["op"] == "addnull" else (2 if was_null else 1)
-        return {"k": ev["k"], "n": int(cur) + 1, "extra": extra}
+        trail = (state["trail"] if state and state["trail"] else "") + ev["cid"] + ","
+        return {"k": ev["k"], "n": int(cur) + 1, "extra": extra, "trail": trail}
 
     batches = [
-        [("a", "add", "c1"), ("b", "add", "c2"), ("a", "add", "c3")],
-        [("a", "addnull", "c4"), ("c", "add", "c5"), ("b", "reject", "c6")],
-        [("b", "del", "c7"), ("d", "boom", "c8"), ("a", "add", "c9")],
-        [("c", "add", "c10"), ("e", "add", "c11")],  # crosses compaction
+        [("a", "add", "c1", None), ("b", "add", "c2", 1), ("a", "add", "c3", None)],
+        [("a", "addnull", "c4", 2), ("c", "add", "c5", None), ("b", "reject", "c6", None)],
+        [("b", "del", "c7", None), ("d", "boom", "c8", 3), ("a", "add", "c9", None)],
+        [("c", "add", "c10", None), ("e", "add", "c11", 4)],  # crosses compaction
+        [
+            ("f", "add", "c14", None),
+            ("g", "add", "c15", 5),
+            ("f", "add", "c12", 6),
+            ("h", "add", "c16", None),
+            ("f", "add", "c13", None),
+        ],
     ]
 
     def run(tag, fold_rows):
@@ -1629,8 +1648,8 @@ def test_driver_fold_equals_distributed_fold(spark, tmp_path, delta_commits):
             store,
             process,
             handle,
-            "k string, n long, extra long",
-            "k string, op string",
+            "k string, n long, extra long, trail string",
+            "k string, op string, cid string, amt string",
             key_col="k",
             order_cols=["command_id"],
             fold_partitions=2,
@@ -1638,7 +1657,9 @@ def test_driver_fold_equals_distributed_fold(spark, tmp_path, delta_commits):
         )
         acks = []
         for i, rows in enumerate(batches):
-            df = spark.createDataFrame(rows, "k string, op string, command_id string")
+            df = spark.createDataFrame(
+                rows, "k string, op string, command_id string, amt long"
+            )
             out = eng.process_batch(df, f"b{i}")
             assert out is not None
             _, _, replies = out
@@ -1646,25 +1667,32 @@ def test_driver_fold_equals_distributed_fold(spark, tmp_path, delta_commits):
                 (r.command_id, r.status, r.new_state)
                 for r in replies.collect()
             )
-        state = {
-            r.k: (r.n, r.extra) for r in store.read_state(spark).collect()
-        }
+        snap = store.read_state(spark).collect()
+        state = {r.k: (r.n, r.extra) for r in snap}
+        trails = {r.k: r.trail for r in snap}
         events = sorted(
-            (r.k, r.op) for r in store.read_events(spark).collect()
+            (r.k, r.op, r.cid, r.amt) for r in store.read_events(spark).collect()
         )
-        return sorted(acks), state, events
+        return sorted(acks), state, events, trails
 
     fast = run("fast", 512)
     slow = run("slow", 0)
     assert fast == slow, (fast, slow)
     # sanity on the content itself, not just cross-mode agreement
-    acks, state, _ = fast
+    acks, state, events, trails = fast
     # a: add, add, addnull, add — the final add SAW the NaN-null extra
     assert state["a"] == (4, 2)
     assert "b" not in state  # deleted
     statuses = {c: s for c, s, _ in acks}
     assert statuses["c6"] == "rejected"
     assert statuses["c8"].startswith("error:")
+    # f ran in command_id order, not arrival order
+    assert trails["f"] == "c12,c13,c14,"
+    amt = {cid: a for _, _, cid, a in events}
+    # f's slice holds a null, so its set value arrives as float too
+    assert (amt["c12"], amt["c13"], amt["c14"]) == ("float:6.0", "float:NaN", "float:NaN")
+    assert amt["c15"] == "int:5"  # g: null-free slice, exact int
+    assert amt["c16"] == "float:NaN"  # h: all-null slice, NaN on both folds
 
 
 def test_driver_fold_falls_back_on_oversized_batch(spark, tmp_path):
