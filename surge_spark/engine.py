@@ -28,9 +28,10 @@ from collections.abc import Sequence
 from dataclasses import dataclass
 from typing import Any
 
+import pyarrow as pa
 from pyspark.sql import SparkSession
 
-from .streaming.command_engine import CommandEngine
+from .streaming.command_engine import CommandEngine, arrow_frame
 from .streaming.snapshot_store import SnapshotStore
 
 
@@ -207,30 +208,18 @@ class SurgeEngine:
     # -- internals -------------------------------------------------------
 
     def _create_batch_frame(self, rows: list[dict]):
-        """Command rows -> DataFrame. submit_many-scale local relations
-        pay ~0.15 s in py4j row marshalling; the Arrow-pandas path is
-        ~2x faster and content-identical EXCEPT that it coerces float NaN
-        to null (measured) — so it is gated on NaN absence, and the
-        row-marshalled path stays the semantic fallback. _infer_schema
-        already rejects nested values, so primitives are guaranteed."""
-        schema = self._infer_schema(rows[0])
-        if len(rows) >= 64 and not any(
-            isinstance(v, float) and v != v for r in rows for v in r.values()
-        ):
-            import pandas as pd
-
-            return self._spark.createDataFrame(
-                pd.DataFrame(rows, dtype=object), schema=schema
-            )
-        return self._spark.createDataFrame(rows, schema=schema)
+        """Command rows -> DataFrame through Arrow (``arrow_frame``): one
+        builder for every batch size, exact ints, and a double NaN kept
+        apart from null. _infer_schema rejects nested values and rows that
+        disagree on a field's type, so primitives of one type are
+        guaranteed."""
+        return arrow_frame(self._spark, rows, self._infer_schema(rows))
 
     def _submit(self, aggregate_id: str, cmd: dict) -> CommandResult:
         n = next(self._seq)
         command_id = str(cmd.get("command_id") or f"cmd-{n}")
         row = {**cmd, self._model.key_col: aggregate_id, "command_id": command_id}
-        batch = self._spark.createDataFrame(
-            [row], schema=self._infer_schema(row)
-        )
+        batch = self._create_batch_frame([row])
         # uuid batch ids: a per-engine counter would collide with a prior
         # engine instance on the same store and be silently R4-deduped
         batch_id = f"submit-{uuid.uuid4().hex}"
@@ -278,17 +267,22 @@ class SurgeEngine:
         return state
 
     @staticmethod
-    def _infer_schema(row: dict) -> str:
-        parts = []
-        for k, v in row.items():
+    def _infer_schema(rows: list[dict]) -> pa.Schema:
+        """Arrow schema of a command batch: each field takes the type of
+        its value in the first row (None reads as string), and every other
+        row must hold a value of exactly that type or None — pyarrow would
+        otherwise convert a mismatch silently (2.5 in a long field reads
+        back as 2)."""
+        fields = []
+        for k, v in rows[0].items():
             if isinstance(v, bool):
-                t = "boolean"
+                t, ok = pa.bool_(), bool
             elif isinstance(v, int):
-                t = "long"
+                t, ok = pa.int64(), int
             elif isinstance(v, float):
-                t = "double"
+                t, ok = pa.float64(), float
             elif v is None or isinstance(v, str):
-                t = "string"
+                t, ok = pa.string(), str
             else:
                 raise TypeError(
                     f"command field {k!r} has unsupported type "
@@ -296,5 +290,15 @@ class SurgeEngine:
                     "(e.g. json.dumps) — the engine moves opaque strings/"
                     "bytes like the reference (SerializedMessage.scala:6)"
                 )
-            parts.append(f"{k} {t}")
-        return ", ".join(parts)
+            for r in rows:
+                x = r[k]
+                # bool is an int subclass: only a boolean field takes one
+                if x is not None and (
+                    not isinstance(x, ok) or isinstance(x, bool) is not (ok is bool)
+                ):
+                    raise TypeError(
+                        f"command field {k!r} holds {type(x).__name__} "
+                        f"{x!r} where the batch's first row set {t}"
+                    )
+            fields.append(pa.field(k, t))
+        return pa.schema(fields)

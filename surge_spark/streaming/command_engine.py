@@ -25,9 +25,13 @@ batch replays call directly.
 Two folds share that pipeline. Batches at or under ``driver_fold_max_rows``
 fold driver-side: the batch's state comes from the batched arrow point read
 and the handlers run in-process. Larger batches take the distributed fold (a
-snapshot join plus a grouped Arrow fold), which stays the semantic source of
-truth. Both run their keys through one kernel, ``_fold_frame``, and hand its
-output to the same single ``SnapshotStore.commit`` call (``_commit``).
+snapshot join plus ``groupBy.applyInArrow``), which stays the semantic source
+of truth. Both run their keys through one kernel, ``_fold_frame``, over plain
+column lists (what Arrow's ``to_pylist`` yields), with one handler-value
+contract (``_handler_values``), and hand its output to the same single
+``SnapshotStore.commit`` call (``_commit``). Rows cross between the JVM and
+Python as Arrow: the fold's buckets, and every local relation the command
+path builds (``arrow_frame``).
 """
 
 from __future__ import annotations
@@ -40,6 +44,7 @@ from collections.abc import Callable, Sequence
 from typing import Any
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -62,19 +67,56 @@ REPLY_SCHEMA = (
 RECORD_SCHEMA = "topic string, key string, value string"
 
 _INTEGRAL = (T.LongType, T.IntegerType, T.ShortType, T.ByteType)
+PACKED_SCHEMA = pa.schema([("kind", pa.string()), ("payload", pa.string())])
 
 
-def _null_rep(dt: T.DataType) -> Any:
-    """What a null of Spark type ``dt`` reads as in an Arrow-converted pandas
-    column (the distributed fold's bucket): NaN for a fractional type, NaT
-    for a temporal one (NTZ and intervals are not TimestampType subclasses
-    but null as NaT all the same), None for anything else. Integral columns
-    are typed per key by ``CommandEngine._fold_frame`` instead."""
+def arrow_frame(spark: SparkSession, rows: list[dict], schema: pa.Schema) -> DataFrame:
+    """A local relation of ``rows`` built through Arrow: the one way the
+    command path turns driver-side rows into a DataFrame (the facade's
+    command batches, the driver fold's packed output). Arrow keeps a double
+    NaN and a null apart at every batch size, and ints stay exact."""
+    return spark.createDataFrame(pa.Table.from_pylist(rows, schema=schema))
+
+
+def _handler_values(
+    vals: list, dt: T.DataType, slices: Sequence[list[int]], tz: str
+) -> list:
+    """The handler-value contract, in one place. ``vals`` is one column as
+    Arrow's ``to_pylist`` yields it (exact ints, None for null, a NaN kept
+    apart from null), ``slices`` the row indices of each key. Returns the
+    values handlers see:
+    - integral: int when the key's slice has no null, otherwise float with
+      NaN for the nulls (the per-key typing a pandas frame per key gave);
+    - float/double: NaN for null;
+    - timestamp: a naive ``pd.Timestamp`` in the session time zone ``tz``
+      (timestamp_ntz: naive as stored), NaT for null;
+    - day-time interval: ``pd.Timedelta``, NaT for null;
+    - map: a dict;
+    - anything else as it is, None for null."""
+    if isinstance(dt, _INTEGRAL):
+        if None not in vals:
+            return vals
+        out = list(vals)
+        for idx in slices:
+            if any(vals[i] is None for i in idx):
+                for i in idx:
+                    out[i] = float("nan") if vals[i] is None else float(vals[i])
+        return out
     if isinstance(dt, (T.DoubleType, T.FloatType)):
-        return float("nan")
-    if isinstance(dt, (T.TimestampType, T.TimestampNTZType, T.DayTimeIntervalType)):
-        return pd.NaT
-    return None
+        return [float("nan") if v is None else v for v in vals]
+    if isinstance(dt, T.TimestampType):
+        return [
+            pd.NaT if v is None
+            else pd.Timestamp(v).tz_convert(tz).tz_localize(None).as_unit("ns")
+            for v in vals
+        ]
+    if isinstance(dt, T.TimestampNTZType):
+        return [pd.NaT if v is None else pd.Timestamp(v).as_unit("ns") for v in vals]
+    if isinstance(dt, T.DayTimeIntervalType):
+        return [pd.NaT if v is None else pd.Timedelta(v).as_unit("ns") for v in vals]
+    if isinstance(dt, T.MapType):
+        return [None if v is None else dict(v) for v in vals]
+    return vals
 
 
 class CommandEngine:
@@ -113,7 +155,7 @@ class CommandEngine:
         batches so the commit write isn't funneled through one task.
 
         ``fold_partitions`` right-sizes the fold's shuffle for micro-batch
-        latency: groupBy.applyInPandas otherwise inherits
+        latency: groupBy.applyInArrow otherwise inherits
         spark.sql.shuffle.partitions (sized for the analytic queries — 32+),
         and a 50 ms-flush-sized batch pays one Python worker round-trip per
         mostly-empty partition. Pre-repartitioning by key satisfies the
@@ -136,7 +178,7 @@ class CommandEngine:
         driver_commit_max_rows' write twin): collect the batch (one tiny
         narrow job), fetch the batch keys' state through the batched
         arrow point read (SnapshotStore._multi_point_read_arrow — zero
-        Spark jobs), fold the whole batch as one frame through the SAME
+        Spark jobs), fold the whole batch's column lists through the SAME
         per-key kernel the distributed fold runs per bucket
         (_fold_frame), and commit through the driver-side arrow writes.
         The whole
@@ -339,73 +381,59 @@ class CommandEngine:
 
     @staticmethod
     def _fold_frame(
-        pdf: pd.DataFrame,
+        cols: dict[str, list],
+        types: dict[str, T.DataType],
         state_fields: list[str],
-        integral_cols: list[str],
         key_col: str,
         store_key_col: str,
         order_cols: list[str],
         process_command: CommandHandler | ContextCommandHandler,
         handle_event: EventHandler | None,
         context_mode: bool,
+        tz: str,
     ) -> list[tuple[str, str]]:
-        """The one per-key fold of both folds: a frame of MANY keys in (the
-        distributed fold's Arrow bucket, or the driver fold's whole batch),
-        packed (kind, json) rows out. Columns: the command columns, ``__k``
-        (the canonical string key; None is the distributed groupBy's NULL
-        group, whose state join always misses), the ``__state__*`` columns
-        of the snapshot join (actor init, §3.1.5), and maybe the salt
-        ``__g``. Handlers see each row as a dict of every column except
-        ``__k``/``__g``.
+        """The one per-key fold of both folds: the columns of MANY keys in
+        (the distributed fold's Arrow bucket, or the driver fold's whole
+        batch), packed (kind, json) rows out. ``cols`` holds plain value
+        lists as ``to_pylist`` yields them, ``types`` each column's Spark
+        type. Columns: the command columns, ``__k`` (the canonical string
+        key; None is the distributed groupBy's NULL group, whose state join
+        always misses), the ``__state__*`` columns of the snapshot join
+        (actor init, §3.1.5), and maybe the salt ``__g``. Handlers see each
+        row as a dict of every column except ``__k``/``__g``, valued by
+        ``_handler_values`` (``tz`` is the session time zone).
 
-        Each column becomes Python values ONCE (``tolist``); the per-key
-        work is plain list indexing, in first-appearance order of ``__k``:
-        - integral columns are typed per key, as a per-key Arrow conversion
-          would: int when the key's own slice is null-free, float (NaN for
-          the nulls) otherwise. A null elsewhere in the frame promotes the
-          bucket's column to float64 and must not leak floats into a key
-          without one (from_json against a long field parses a float
-          token to NULL);
+        The per-key work is plain list indexing, in first-appearance order
+        of ``__k``:
         - a multi-command key runs in ``order_cols`` order: a stable sort,
-          nulls last per column, as ``sort_values(kind="mergesort")``;
+          nulls (and NaN/NaT) last per column;
         - the initial state is the first row's ``__state__*`` values, None
           when its ``__state__<store key>`` is null.
 
         Static with plain-value args: the fold closure shipped to executors
         must not capture the engine instance (it holds the cached previous
         batch DataFrame → unpicklable SparkContext)."""
-        names = [c for c in pdf.columns if c not in ("__k", "__g")]
-        cols = {c: pdf[c].tolist() for c in names}
+        names = [c for c in cols if c not in ("__k", "__g")]
         groups: dict[Any, list[int]] = {}
-        for i, k in enumerate(pdf["__k"].tolist()):
+        for i, k in enumerate(cols["__k"]):
             groups.setdefault(k, []).append(i)
-        for c in integral_cols:
-            if pdf[c].dtype.kind in "iu":
-                continue  # null-free in the whole frame: already ints
-            vals, nulls = cols[c], pdf[c].isna().tolist()
-            for idx in groups.values():
-                if any(nulls[i] for i in idx):
-                    for i in idx:
-                        vals[i] = float("nan") if nulls[i] else float(vals[i])
-                else:
-                    for i in idx:
-                        vals[i] = int(vals[i])
-        rows = [dict(zip(names, r)) for r in zip(*cols.values())]
-        order = [
-            (cols[c], pdf[c].isna().tolist()) for c in order_cols if c in cols
-        ]
+        vals = {
+            c: _handler_values(cols[c], types[c], groups.values(), tz) for c in names
+        }
+        rows = [dict(zip(names, r)) for r in zip(*vals.values())]
+        order = [vals[c] for c in order_cols if c in vals]
 
         def order_key(i: int) -> tuple:
-            return tuple((1, 0) if nulls[i] else (0, vals[i]) for vals, nulls in order)
+            return tuple(
+                (1, 0) if v[i] is None or v[i] != v[i] else (0, v[i]) for v in order
+            )
 
-        state_nulls = (
-            pdf[f"__state__{store_key_col}"].isna().tolist() if state_fields else []
-        )
+        state_key = cols.get(f"__state__{store_key_col}")
         out: list[tuple[str, str]] = []
         for idx in groups.values():
             first = rows[idx[0]]
             state = None
-            if state_fields and not state_nulls[idx[0]]:
+            if state_fields and state_key[idx[0]] is not None:
                 state = {f: first[f"__state__{f}"] for f in state_fields}
             if order and len(idx) > 1:
                 idx = sorted(idx, key=order_key)
@@ -562,46 +590,34 @@ class CommandEngine:
         )
 
     @staticmethod
-    def _batch_frame(
+    def _batch_columns(
         rows: list,
         key_col: str,
         command_fields: list[T.StructField],
         state_struct_fields: list[T.StructField],
         state_map: dict[str, dict | None],
-    ) -> tuple[pd.DataFrame, list[str]]:
-        """The driver fold's whole batch as ONE ``_fold_frame`` input, in
-        the shape of the distributed fold's joined bucket: the command
-        columns, ``__k`` (the state lookup key; None for a NULL key, which
-        joins nothing) and a ``__state__*`` column per state field from
-        ``state_map``. Nulls take the bucket's representation
-        (``_null_rep``: NaN, NaT or None). Integral columns stay exact
-        Python ints in an object column, so a null elsewhere in the batch
-        never rounds them through float64; ``_fold_frame`` types them per
-        key. Returns the frame and its integral column names."""
-        data: dict[str, Any] = {}
-        integral_cols: list[str] = []
-
-        def put(name: str, dt: T.DataType, vals: list) -> None:
-            if isinstance(dt, _INTEGRAL):
-                integral_cols.append(name)
-                data[name] = pd.Series(vals, dtype=object)
-                return
-            null = _null_rep(dt)
-            data[name] = vals if null is None else [null if x is None else x for x in vals]
-
+    ) -> tuple[dict[str, list], dict[str, T.DataType]]:
+        """The driver fold's whole batch as ONE ``_fold_frame`` input: the
+        column lists the distributed fold's joined Arrow bucket yields
+        (the command columns, ``__k`` — the state lookup key, None for a
+        NULL key, which joins nothing — and a ``__state__*`` column per
+        state field from ``state_map``), with each column's Spark type."""
+        cols: dict[str, list] = {}
+        types: dict[str, T.DataType] = {}
         for j, f in enumerate(command_fields):
-            put(f.name, f.dataType, [r[j] for r in rows])
-        data["__k"] = [
-            None if r[key_col] is None else str(r[key_col]) for r in rows
-        ]
-        states = [state_map.get(k) if k is not None else None for k in data["__k"]]
+            vals = [r[j] for r in rows]
+            if isinstance(f.dataType, T.TimestampType):
+                # a collected Row holds a naive datetime in the driver's
+                # local time; Arrow hands the same instant time-zone aware
+                vals = [None if v is None else v.astimezone() for v in vals]
+            cols[f.name], types[f.name] = vals, f.dataType
+        cols["__k"] = [None if r[key_col] is None else str(r[key_col]) for r in rows]
+        states = [state_map.get(k) if k is not None else None for k in cols["__k"]]
         for f in state_struct_fields:
-            put(
-                f"__state__{f.name}",
-                f.dataType,
-                [None if st is None else st.get(f.name) for st in states],
-            )
-        return pd.DataFrame(data), integral_cols
+            name = f"__state__{f.name}"
+            cols[name] = [None if st is None else st.get(f.name) for st in states]
+            types[name] = f.dataType
+        return cols, types
 
     def _driver_fold(
         self,
@@ -623,10 +639,9 @@ class CommandEngine:
             return None
         if self._driver_structs() is None:
             return None
-        # complex-typed COMMAND columns gate: Row.asDict() below is
-        # non-recursive, so struct commands would reach handlers as Row
-        # objects while the distributed Arrow path hands dicts (and
-        # array/map pandas representations differ too) — _driver_structs
+        # complex-typed COMMAND columns gate: a collected Row nests Row
+        # objects (and converts nested timestamps its own way) where the
+        # distributed fold's to_pylist hands dicts — _driver_structs
         # covers state/event/reply/record schemas, not the command batch.
         if any(
             isinstance(f.dataType, (T.StructType, T.ArrayType, T.MapType))
@@ -665,42 +680,43 @@ class CommandEngine:
                     json.loads(m["state_schema"])
                 ).fields
             with phase("pb.df_frame"):
-                pdf, integral_cols = CommandEngine._batch_frame(
+                cols, types = CommandEngine._batch_columns(
                     rows,
                     self.key_col,
                     commands.schema.fields,
                     state_struct_fields,
                     state_map,
                 )
+                tz = spark.conf.get("spark.sql.session.timeZone")
         except Exception:  # noqa: BLE001 — exact fallback, never guess
             return None
         with phase("pb.df_handlers"):
             packed_rows = CommandEngine._fold_frame(
-                pdf,
+                cols,
+                types,
                 [f.name for f in state_struct_fields],
-                integral_cols,
                 self.key_col,
                 self.store.key_col,
                 self.order_cols,
                 self.process_command,
                 self.handle_event,
                 self.context_mode,
+                tz,
             )
         # local relation carrying the fold output: the typed frames below
         # are the RETURN VALUE and the commit's exact fallback; the actual
         # writes go driver-side through driver_sides
         with phase("pb.df_frames"):
-            packed_local = spark.createDataFrame(
-                packed_rows, "kind string, payload string"
+            packed_local = arrow_frame(
+                spark,
+                [{"kind": k, "payload": p} for k, p in packed_rows],
+                PACKED_SCHEMA,
             )
             sides = self._project_sides(packed_local, batch_id, replies_dir)
             ds = self._split_sides(
                 packed_rows, str(batch_id) if replies_dir is not None else None
             )
-        # no next-frame prewarm: the driver fold reads state through the
-        # arrow point read, never the frame memo, and the warm's plan build
-        # competes with this trigger's own driver-side work
-        self._commit(sides, batch_id, replies_dir, ds, prewarm_partitions=None)
+        self._commit(sides, batch_id, replies_dir, ds)
         # release the previous batch's fold cache, same lifecycle as the
         # distributed path; local-relation frames need no persist
         if self._prev_packed is not None:
@@ -816,7 +832,7 @@ class CommandEngine:
         if fp is not None:
             # pre-shuffle BEFORE the snapshot join: with the snapshot side
             # partitioned the same way the join is exchange-free, and
-            # groupBy.applyInPandas reuses the join output's clustering —
+            # groupBy.applyInArrow reuses the join output's clustering —
             # the fold pipeline is 2 exchanges total
             commands = commands.repartition(fp, F.col("__k"))
         state_fields: list[str] = []
@@ -851,45 +867,38 @@ class CommandEngine:
         # produces).
         # capture only plain values in the executor-shipped closure
         state_key_col = self.store.key_col
-        # integral columns of the joined frame (command AND __state__*):
-        # the salted fold's Arrow bucket mixes keys, so a NULL anywhere in
-        # the bucket (a stateless key's left-join miss) promotes the WHOLE
-        # column to float64; _fold_frame types each key's slice back (see
-        # there). Residual (documented): an int > 2^53 sharing a bucket
-        # with a null-bearing key already lost precision in the bucket's
-        # own Arrow->pandas float pass, same as any float64 channel.
-        integral_cols = [
-            f.name for f in commands.schema.fields if isinstance(f.dataType, _INTEGRAL)
-        ]
+        types = {f.name: f.dataType for f in commands.schema.fields}
+        tz = spark.conf.get("spark.sql.session.timeZone")
         key_col = self.key_col
         order_cols = self.order_cols
         process_command = self.process_command
         handle_event = self.handle_event
         context_mode = self.context_mode
 
-        def fold(pdf: pd.DataFrame) -> pd.DataFrame:
+        def fold(table: pa.Table) -> pa.Table:
             # ONE Arrow group carries MANY keys (__g is a salted hash of
-            # __k, see below): applyInPandas pays a JVM<->Python framing
-            # cost per GROUP (~0.5 ms measured), so 2048 one-key groups
-            # would cost ~1.0 s of framing at fold width 4. Per key,
-            # _fold_frame costs 23 us on a 128-row, 128-key bucket of the
-            # submit_many shape (3.0 ms per bucket, handlers and JSON
-            # included; Xeon, one core), where a pandas frame per key
-            # (groupby slice, astype, iloc, sort_values, row iteration)
-            # cost 605 us (77 ms); with 37 keys, 2.3 ms against 26 ms.
-            return pd.DataFrame(
-                CommandEngine._fold_frame(
-                    pdf,
-                    state_fields,
-                    integral_cols,
-                    key_col,
-                    state_key_col,
-                    order_cols,
-                    process_command,
-                    handle_event,
-                    context_mode,
-                ),
-                columns=["kind", "payload"],
+            # __k, see below): the grouped map pays a JVM<->Python framing
+            # cost per GROUP (~0.5 ms measured under applyInPandas), so
+            # 2048 one-key groups would cost ~1.0 s of framing at fold
+            # width 4, while _fold_frame's per-key work is list indexing
+            # (23 us per key on a 128-key bucket of the submit_many shape,
+            # handlers and JSON included; Xeon, one core). The bucket stays
+            # Arrow until to_pylist, so a null in one key's slice never
+            # rounds another key's ints through float64.
+            packed = CommandEngine._fold_frame(
+                {c: table.column(c).to_pylist() for c in table.column_names},
+                types,
+                state_fields,
+                key_col,
+                state_key_col,
+                order_cols,
+                process_command,
+                handle_event,
+                context_mode,
+                tz,
+            )
+            return pa.Table.from_pylist(
+                [{"kind": k, "payload": p} for k, p in packed], schema=PACKED_SCHEMA
             )
 
         ensure_shipped(spark)
@@ -920,7 +929,7 @@ class CommandEngine:
             )
             packed = (
                 commands.groupBy("__g")
-                .applyInPandas(fold, "kind string, payload string")
+                .applyInArrow(fold, "kind string, payload string")
                 .persist()
             )
         if self._prev_packed is not None:
@@ -958,7 +967,7 @@ class CommandEngine:
                     )
                 except Exception:  # noqa: BLE001 — Spark path is the truth
                     driver_sides = None
-        self._commit(sides, batch_id, replies_dir, driver_sides, prewarm_partitions=fp)
+        self._commit(sides, batch_id, replies_dir, driver_sides)
         return sides["state_df"], sides["events_df"], sides["replies_df"]
 
     def _commit(
@@ -967,18 +976,13 @@ class CommandEngine:
         batch_id: str,
         replies_dir: str | None,
         driver_sides: dict | None,
-        prewarm_partitions: int | None,
     ) -> None:
         """The one commit of a folded batch, shared by the driver fold and
         the distributed fold on every store mode. Every batch commits, even
         one that changed nothing: rejection-only and empty batches persist
         their ACKs (replies_for_batch recovery) and enter the R4 dedup set,
         so a foreachBatch replay can never re-fold them and re-run side
-        effects. An empty events, records or delta side writes no dir.
-        ``prewarm_partitions`` (the distributed
-        fold passes its fold width) has the commit build the next
-        read_state frame at that width, so the next distributed fold's
-        snapshot read is a memo hit."""
+        effects. An empty events, records or delta side writes no dir."""
         nf = self.commit_target_files
         with phase("pb.commit"):
             self.store.commit(
@@ -991,7 +995,6 @@ class CommandEngine:
                 updates_unique=True,  # the fold emits at most one state row/key
                 replies_dir=replies_dir,
                 driver_sides=driver_sides,
-                prewarm_partitions=prewarm_partitions,
             )
 
     # -- streaming & serving -------------------------------------------------

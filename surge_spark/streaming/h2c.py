@@ -36,9 +36,9 @@ both sides: receivers replenish
 connection+stream windows after every DATA frame, and senders track the
 peer's windows (seeded from its SETTINGS_INITIAL_WINDOW_SIZE, credited by
 WINDOW_UPDATE) and wait for credit before each chunk — see _ConnState.
-The server dispatches by :path into the same proto3 dispatch table as the
-length-prefixed loopback (multilanguage._dispatch), so both transports
-execute identical semantics.
+The server dispatches by :path into the proto3 dispatch table in
+multilanguage._dispatch, and the client speaks the proto3 payloads of
+multilanguage.BusinessLogicCallerMixin.
 """
 
 from __future__ import annotations
@@ -691,12 +691,12 @@ def make_client_ssl_context(
 def serve_business_logic_h2c(
     service, host: str = "127.0.0.1", port: int = 0, ssl_context=None
 ) -> _H2cServer:
-    """Serve a BusinessLogicService as a wire-true h2c gRPC endpoint: the
-    same dispatch semantics as serve_business_logic, but the transport is
-    real HTTP/2 framing — a grpc client on an insecure channel
+    """Serve a BusinessLogicService as a wire-true h2c gRPC endpoint (the
+    analog of the reference's business app serving BusinessLogicService
+    over gRPC, multilanguage-protocol.proto:88-92): multilanguage._dispatch
+    over real HTTP/2 framing — a grpc client on an insecure channel
     interoperates (Huffman-coded headers included). One connection handles
-    many
-    sequential or interleaved streams (client stream ids are odd and
+    many sequential or interleaved streams (client stream ids are odd and
     increasing, as the RFC requires).
 
     ``ssl_context`` (make_server_ssl_context) upgrades the endpoint to
@@ -839,11 +839,10 @@ from .multilanguage import BusinessLogicCallerMixin  # noqa: E402
 
 
 class H2cBusinessLogicClient(BusinessLogicCallerMixin):
-    """BusinessLogicService client over h2c gRPC frames. Like
-    RemoteBusinessLogicClient it holds only (host, port, timeout) so it
-    pickles into Spark Python workers; each call dials a fresh connection
-    (stream id 1) — the per-call handshake is 3 tiny frames each way,
-    microseconds on loopback."""
+    """BusinessLogicService client over h2c gRPC frames. It holds only
+    (host, port, timeout) so it pickles into Spark Python workers; each
+    call dials a fresh connection (stream id 1) — the per-call handshake
+    is 3 tiny frames each way, microseconds on loopback."""
 
     def __init__(
         self,

@@ -24,24 +24,18 @@ This module re-creates that protocol transport-agnostically:
   "Wrong aggregate ids!" validation;
 - ``MultilanguageGateway`` is the gateway service: forward_command /
   get_state / health_check with the proto reply shapes;
-- a REAL cross-process wire the environment does permit:
-  ``serve_business_logic`` exposes any BusinessLogicService over a
-  loopback socket (stdlib socketserver) speaking REAL proto3 wire format
-  (proto_wire.py — hand-rolled varint/length-delimited encoding of the
-  reference's exact message shapes, golden-byte-pinned), framed as
-  length | method-byte | proto payload; ``RemoteBusinessLogicClient`` is
-  the matching client — it implements the same three-method contract, so
-  it plugs into ``GenericCommandModel`` / ``MultilanguageGateway``
-  unchanged. The client carries only (host, port) and dials per call, so
-  it pickles into Spark's Python workers and the distributed fold really
-  does call out of process, exactly like the reference engine calling a
-  business app over gRPC. The payload bytes on the socket are the same
-  bytes a grpcio stub would put in an HTTP/2 DATA frame — and since r7
-  the sibling module ``h2c.py`` provides the HTTP/2 framing itself
-  (serve_business_logic_h2c / H2cBusinessLogicClient): cleartext-HTTP/2
-  frames, HPACK header blocks, the 5-byte gRPC message prefix, and
-  grpc-status trailers, golden-byte-pinned against RFC 7541's published
-  vectors. grpcio itself stays uninstallable here, but the wire is now
+- the cross-process wire is ``h2c.py`` (serve_business_logic_h2c /
+  H2cBusinessLogicClient): cleartext-HTTP/2 frames, HPACK header blocks,
+  the 5-byte gRPC message prefix and grpc-status trailers around REAL
+  proto3 payloads (proto_wire.py — hand-rolled varint/length-delimited
+  encoding of the reference's exact message shapes, golden-byte-pinned).
+  This module holds the transport-independent half both ends share: the
+  server-side dispatch table (``_dispatch``) and the client's three-method
+  contract over one ``_call`` (``BusinessLogicCallerMixin``). The client
+  carries only (host, port) and dials per call, so it pickles into Spark's
+  Python workers and the distributed fold really does call out of
+  process, exactly like the reference engine calling a business app over
+  gRPC. grpcio itself stays uninstallable here, but the wire is
   frame-for-frame gRPC-over-h2c.
 
 Payloads are opaque bytes end to end. Inside the engine they ride as
@@ -53,9 +47,6 @@ from __future__ import annotations
 
 import base64
 import json
-import socket
-import socketserver
-import struct
 import uuid
 from dataclasses import dataclass
 from typing import Any, Protocol
@@ -205,44 +196,13 @@ class GenericCommandModel:
         return ctx.update_state(new_state)
 
 
-# -- loopback wire: proto3 frames over TCP -----------------------------------
+# -- the proto3 method table shared by both wire ends ------------------------
 #
-# The env permits no grpcio, but the PAYLOAD byte format need not suffer for
-# it: requests and replies are encoded in real proto3 wire format
-# (proto_wire.py, byte-compatible with the reference's generated stubs —
-# golden-byte tests pin this) and framed as
-#   4-byte big-endian length | 1-byte method/status | proto3 message bytes
-# The method byte stands in for gRPC's ``:path`` pseudo-header and the
-# status byte for ``grpc-status`` trailers; only HTTP/2 framing itself
-# remains environment-blocked.
+# Requests and replies are real proto3 wire format (proto_wire.py,
+# byte-compatible with the reference's generated stubs — golden-byte tests
+# pin this). The method ids map to gRPC ``:path`` values in h2c.py.
 
 _M_PROCESS_COMMAND, _M_HANDLE_EVENTS, _M_HEALTH_CHECK = 1, 2, 3
-_S_OK, _S_ERROR = 0, 1
-
-
-def _send_frame(sock: socket.socket, code: int, payload: bytes) -> None:
-    sock.sendall(struct.pack(">IB", len(payload) + 1, code) + payload)
-
-
-def _recv_exact(sock: socket.socket, n: int) -> bytes:
-    buf = b""
-    while len(buf) < n:
-        chunk = sock.recv(n - len(buf))
-        if not chunk:
-            raise EOFError("peer closed")
-        buf += chunk
-    return buf
-
-
-def _recv_frame(sock: socket.socket) -> tuple[int, bytes]:
-    (n,) = struct.unpack(">I", _recv_exact(sock, 4))
-    if n < 1:
-        # a frame without even the method/status byte is a protocol
-        # violation (port scanner, broken peer) — treat as a closed
-        # connection rather than crashing the handler thread
-        raise EOFError("zero-length frame")
-    body = _recv_exact(sock, n)
-    return body[0], body[1:]
 
 
 def _state_proto(s: State | None) -> bytes | None:
@@ -294,48 +254,10 @@ def _dispatch(service: BusinessLogicService, method: int, body: bytes) -> bytes:
     raise ValueError(f"unknown method id {method!r}")
 
 
-class _BusinessLogicTCPServer(socketserver.ThreadingTCPServer):
-    allow_reuse_address = True
-    daemon_threads = True
-
-
-def serve_business_logic(
-    service: BusinessLogicService, host: str = "127.0.0.1", port: int = 0
-) -> _BusinessLogicTCPServer:
-    """Expose a BusinessLogicService on a loopback socket — the process
-    hosting the user's business logic runs this (the analog of the
-    reference's business app serving BusinessLogicService over gRPC,
-    multilanguage-protocol.proto:88-92). Returns the bound server; call
-    ``serve_forever()`` (or run it in a thread) and read
-    ``server_address`` for the actual port when ``port=0``. Errors raised
-    by the service are shipped back as ``{"error": ...}`` frames and
-    re-raised client-side, so a failing handler fails the command, not the
-    transport."""
-
-    class Handler(socketserver.BaseRequestHandler):
-        def handle(self) -> None:  # one connection, many frames
-            while True:
-                try:
-                    method, body = _recv_frame(self.request)
-                except (EOFError, ConnectionError):
-                    return
-                try:
-                    reply = _dispatch(service, method, body)
-                    code = _S_OK
-                except Exception as exc:  # noqa: BLE001 — ship to caller
-                    reply = f"{type(exc).__name__}: {exc}".encode("utf-8")
-                    code = _S_ERROR
-                _send_frame(self.request, code, reply)
-
-    return _BusinessLogicTCPServer((host, port), Handler)
-
-
 class BusinessLogicCallerMixin:
     """The three BusinessLogicService methods expressed over a transport's
-    ``self._call(method_int, proto_request_bytes) -> proto_reply_bytes`` —
-    shared by the length-prefixed loopback client below and the h2c gRPC
-    client (h2c.py), so both speak identical proto3 payloads and differ
-    ONLY in framing."""
+    ``self._call(method_int, proto_request_bytes) -> proto_reply_bytes``;
+    the h2c gRPC client (h2c.py) supplies the transport."""
 
     def _call(self, method: int, payload: bytes) -> bytes:  # pragma: no cover
         raise NotImplementedError
@@ -384,31 +306,6 @@ class BusinessLogicCallerMixin:
             service_name=name,
             status="DOWN" if status == pw.HEALTH_DOWN else "UP",
         )
-
-
-class RemoteBusinessLogicClient(BusinessLogicCallerMixin):
-    """BusinessLogicService implementation that calls a remote (other-
-    process) service over the loopback wire. Holds only (host, port,
-    timeout) — picklable, so the engine's distributed fold can carry it
-    into Spark Python workers; each call dials a fresh connection, which on
-    loopback costs microseconds and never leaks sockets across forks."""
-
-    def __init__(self, host: str, port: int, timeout: float = 30.0) -> None:
-        self.host = host
-        self.port = port
-        self.timeout = timeout
-
-    def _call(self, method: int, payload: bytes) -> bytes:
-        with socket.create_connection(
-            (self.host, self.port), timeout=self.timeout
-        ) as sock:
-            _send_frame(sock, method, payload)
-            code, body = _recv_frame(sock)
-        if code != _S_OK:
-            raise RuntimeError(
-                f"remote business logic failed: {body.decode('utf-8', 'replace')}"
-            )
-        return body
 
 
 # -- the gateway service -----------------------------------------------------

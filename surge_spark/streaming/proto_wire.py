@@ -4,9 +4,8 @@ Byte-compatible encoding of the reference's message shapes
 (modules/multilanguage-protocol/src/main/protobuf/multilanguage-protocol.proto:7-92)
 using only the stdlib: varints, tag = (field_number << 3) | wire_type,
 length-delimited strings/bytes/sub-messages, proto3 default-value omission,
-unknown-field tolerance on parse. With this, the loopback TCP transport
-(multilanguage.py) ships the SAME bytes a grpcio-generated stub would put in
-a DATA frame — only the HTTP/2 framing layer remains environment-blocked
+unknown-field tolerance on parse. With this, the h2c transport (h2c.py)
+ships the SAME bytes a grpcio-generated stub would put in a DATA frame
 (grpcio is not installable here).
 
 Field numbers (from the proto):

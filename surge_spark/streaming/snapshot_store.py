@@ -169,12 +169,12 @@ class SnapshotStore:
         # newest delta dir are identical, so only the ONE new delta dir
         # needs a fresh listing per version (steady micro-batch case)
         self._dir_frames: dict[tuple, tuple[SparkSession, DataFrame]] = {}
-        # the commit's prewarm thread builds frames concurrently with other
-        # readers: this lock makes the frame-memo check/build/insert/evict
-        # sequence atomic (no reliance on GIL dict atomicity) and dedupes
-        # concurrent builds of the same key — the second thread blocks
-        # briefly and then hits the memo. RLock: read_state →
-        # _merged_state_frame → _memo_dir_frame nests.
+        # readers may share one store across threads (a gateway serving
+        # reads beside the command stream): this lock makes the frame-memo
+        # check/build/insert/evict sequence atomic (no reliance on GIL dict
+        # atomicity) and dedupes concurrent builds of the same key — the
+        # second thread blocks briefly and then hits the memo. RLock:
+        # read_state → _merged_state_frame → _memo_dir_frame nests.
         self._memo_lock = threading.RLock()
         # pyarrow dataset memo for driver-side point reads: version dirs are
         # immutable once a manifest references them, so the file listing +
@@ -576,9 +576,8 @@ class SnapshotStore:
     def _session_key(spark: SparkSession):
         """Stable identity for the UNDERLYING JVM session. foreachBatch
         hands a fresh Python SparkSession wrapper every trigger, so
-        ``id(spark)`` / ``is`` checks miss the memo on every micro-batch —
-        the prewarm built frames the next trigger could never see (the
-        pb.read_state ~0.1 s that survived every prewarm attempt). The JVM
+        ``id(spark)`` / ``is`` checks would miss the memo on every
+        micro-batch and rebuild the read_state plan each trigger. The JVM
         object's identity hashCode is the same across wrappers of one
         session and differs across cloned sessions; a frame memoized under
         wrapper A is valid for wrapper B iff their JVM session is the same
@@ -599,19 +598,6 @@ class SnapshotStore:
             return bool(a._jsparkSession.equals(b._jsparkSession))
         except Exception:  # noqa: BLE001 — mocked/connect sessions
             return a is b
-
-    def _insert_read_state_frame(
-        self, key: tuple, value: tuple[SparkSession, DataFrame]
-    ) -> None:
-        """Insert into the read_state frame memo WITH the 8-entry eviction
-        (caller holds _memo_lock). Both the miss path and the prewarm
-        adoption go through here — steady-state delta-append triggers
-        always hit, so an adoption without eviction would grow one entry
-        (a session wrapper + plan with JVM refs) per commit, unbounded."""
-        self._read_state_frames[key] = value
-        if len(self._read_state_frames) > 8:
-            for k in sorted(self._read_state_frames, key=lambda k: k[1])[:-8]:
-                self._read_state_frames.pop(k, None)
 
     def _memo_dir_frame(self, spark: SparkSession, key: tuple, build) -> DataFrame | None:
         """Session-keyed memo of raw directory frames (immutable dirs);
@@ -875,7 +861,6 @@ class SnapshotStore:
         records: DataFrame | None = None,
         updates_unique: bool = False,
         replies_dir: str | None = None,
-        prewarm_partitions: int | None = None,
         driver_sides: dict | None = None,
     ) -> bool:
         """Atomically commit one micro-batch: append events, merge state
@@ -888,17 +873,6 @@ class SnapshotStore:
         ``records``: raw outbound producer records (the persistRecord
         surface, Context.scala:13-14) — appended like events, readable via
         read_records.
-        ``prewarm_partitions``: build the NEXT read_state frame (at that
-        merge width) on a side thread DURING the commit — started the
-        moment the state write lands (its dirs are what the frame lists),
-        overlapped with the side writes and manifest publish, and
-        published into the read_state memo only AFTER this committer wins
-        the manifest race (a loser's frame would describe the wrong
-        content for the version). The engine's distributed fold passes
-        its fold width here so the next distributed fold's pb.read_state
-        is a dict hit. Delta-append commits only (the 15 of 16
-        steady-state shape); the first read after a compaction or COW
-        commit builds its own frame.
         ``driver_sides``: pre-collected typed row dicts for every side
         (keys ``state``/``deletes``/``events``/``replies``/``records`` +
         their ``*_struct`` StructTypes) — the engine passes them for
@@ -1174,37 +1148,6 @@ class SnapshotStore:
                     bucketed.repartition(F.col(_BUCKET_COL)).write.partitionBy(
                         _BUCKET_COL
                     ).mode("overwrite").parquet(state_path)
-            # prewarm the next read_state frame WHILE the side writes and
-            # manifest publish run: the delta branch's manifest content is
-            # fully determined here (delta_df already observed/suppressed),
-            # so the frame this builds is byte-identical to what read_state
-            # would build against the published manifest. Published into
-            # the memo only after the os.link fence below succeeds.
-            prewarm_thread = None
-            prewarm_box: dict = {}
-            if prewarm_partitions is not None and delta_write:
-                nd_warm = list(prev_deltas)
-                if delta_written:
-                    nd_warm.append(
-                        {"path": delta_path, "schema": state_schema_json}
-                    )
-                m_warm = {
-                    "state_schema": state_schema_json,
-                    "state_buckets": dict(prev_buckets),
-                    **({"state_deltas": nd_warm} if nd_warm else {}),
-                }
-
-                def _build_warm() -> None:
-                    try:
-                        prewarm_box["df"] = self._state_frame_for_manifest(
-                            spark, m_warm, prewarm_partitions
-                        )
-                        prewarm_box["ok"] = True
-                    except Exception:  # noqa: BLE001 — best-effort warm
-                        pass
-
-                prewarm_thread = threading.Thread(target=_build_warm, daemon=True)
-                prewarm_thread.start()
             with phase("commit.side_writes_wait"):
                 for w in side_writes:
                     w.result()  # surface any side-write failure BEFORE the manifest
@@ -1301,22 +1244,6 @@ class SnapshotStore:
         self._batch_id_cache[version] = str(batch_id)
         self._version_by_batch.setdefault(str(batch_id), version)
         self._latest_seen = max(self._latest_seen, version)
-        if prewarm_thread is not None:
-            # we WON the race, so the prewarmed frame describes this
-            # version's real content; adopt it. join() is effectively
-            # immediate — the build overlapped the side writes + publish.
-            prewarm_thread.join(timeout=10)
-            if prewarm_box.get("ok"):
-                df_warm = prewarm_box.get("df")
-                if df_warm is None:  # empty snapshot: read_state's semantics
-                    df_warm = spark.createDataFrame(
-                        [], T.StructType.fromJson(json.loads(state_schema_json))
-                    )
-                with self._memo_lock:
-                    self._insert_read_state_frame(
-                        (self._session_key(spark), version, prewarm_partitions),
-                        (spark, df_warm),
-                    )
         if self.checkpoint_interval and (version + 1) % self.checkpoint_interval == 0:
             self._write_checkpoint(version)
         return True
@@ -1378,36 +1305,25 @@ class SnapshotStore:
             if cached is not None and self._same_jvm_session(cached[0], spark):
                 return cached[1]
             m = self._manifest(v)
-            df = self._state_frame_for_manifest(spark, m, partitions)
-            if df is None:
-                return spark.createDataFrame(
-                    [], T.StructType.fromJson(json.loads(m["state_schema"]))
-                )
-            self._insert_read_state_frame(key, (spark, df))
+            schema = T.StructType.fromJson(json.loads(m["state_schema"]))
+            # merge-on-read view when deltas exist, plain bucket scan
+            # otherwise (``partitions`` shapes only the delta merge — a
+            # compacted scan carries no partitioning to reuse)
+            if m.get("state_deltas"):
+                df = self._merged_state_frame(spark, m, partitions=partitions)
+                if df is None:
+                    df = spark.createDataFrame([], schema)
+            else:
+                paths = list(self._state_paths(m).values())
+                if not paths:
+                    # no rows at all: an empty typed frame, not memoized
+                    return spark.createDataFrame([], schema)
+                df = spark.read.schema(schema).parquet(*paths)
+            self._read_state_frames[key] = (spark, df)
+            if len(self._read_state_frames) > 8:
+                for k in sorted(self._read_state_frames, key=lambda k: k[1])[:-8]:
+                    self._read_state_frames.pop(k, None)
             return df
-
-    def _state_frame_for_manifest(
-        self, spark: SparkSession, m: dict, partitions: int | None
-    ) -> DataFrame | None:
-        """The read_state frame for one manifest dict: merge-on-read view
-        when deltas exist, plain bucket scan otherwise (``partitions``
-        shapes only the delta merge — a compacted scan carries no
-        partitioning to reuse). None when the snapshot has no rows at all
-        — the caller supplies the empty-frame semantics (read_state
-        returns an empty typed frame WITHOUT memoizing it). Shared by
-        read_state and commit's prewarm: the prewarm passes the manifest
-        it is ABOUT to publish, so both paths build byte-identical plans
-        and the memo hit is exact."""
-        schema = T.StructType.fromJson(json.loads(m["state_schema"]))
-        if m.get("state_deltas"):
-            df = self._merged_state_frame(spark, m, partitions=partitions)
-            if df is None:
-                df = spark.createDataFrame([], schema)
-            return df
-        paths = list(self._state_paths(m).values())
-        if not paths:
-            return None
-        return spark.read.schema(schema).parquet(*paths)
 
     # -- driver-side point read (pyarrow) -------------------------------------
 

@@ -710,9 +710,9 @@ def test_driver_commit_falls_back_on_uncoercible_value(spark, tmp_path):
 
 def test_read_state_memo_survives_fresh_session_wrappers(spark, tmp_path):
     """foreachBatch hands a NEW Python SparkSession wrapper every trigger;
-    the frame memo must hit across wrappers of the same JVM session (this
-    was the bug that defeated every prewarm: id(spark) keys + `is` checks
-    rebuilt the read_state plan on every micro-batch)."""
+    the frame memo must hit across wrappers of the same JVM session
+    (id(spark) keys + `is` checks rebuilt the read_state plan on every
+    micro-batch)."""
     from pyspark.sql import SparkSession
 
     store = SnapshotStore(
@@ -817,25 +817,18 @@ def test_streaming_replication_prefix_replay_property(spark, tmp_path):
 # -- memo hygiene (r9 advice defects: eviction, collision, dup-key gate) ------
 
 
-def test_prewarm_adoption_evicts_like_miss_path(spark, tmp_path):
-    """The prewarm adoption inserts into the read_state frame memo; in a
-    steady delta-append stream every trigger adopts, so the insert must
-    apply the same 8-entry eviction as the miss path or the memo grows one
-    (session wrapper + plan) entry per commit forever."""
+def test_read_state_memo_stays_bounded(spark, tmp_path):
+    """Every delta-append version is a new read_state memo key; the memo
+    must keep only the 8 newest (session wrapper + plan) entries instead
+    of growing one per commit forever, and still read the latest state."""
     store = SnapshotStore(
         str(tmp_path / "s"), key_col="k", num_buckets=4, delta_commits=64
     )
     store.commit(None, _upd(spark, [("a", 0)]), "b0", updates_unique=True)
     for i in range(1, 13):
-        store.commit(
-            None,
-            _upd(spark, [("a", i)]),
-            f"b{i}",
-            updates_unique=True,
-            prewarm_partitions=2,
-        )
+        store.commit(None, _upd(spark, [("a", i)]), f"b{i}", updates_unique=True)
+        store.read_state(spark, partitions=2)
     assert len(store._read_state_frames) <= 8
-    # and the latest adopted frame is still correct
     assert _state(spark, store) == {"a": 12}
 
 

@@ -410,6 +410,123 @@ def test_command_sized_batch_takes_the_driver_fold(spark, tmp_path):
     assert store.get_state(spark, "0")["n"] == sum(k == "0" for k, _ in rows)
 
 
+def test_distributed_fold_keeps_exact_ints_and_nan_contract(spark, tmp_path):
+    """Fast-tier guard for the Arrow fold: one small batch forced through
+    the distributed fold, with a stateful key sharing its salt bucket with
+    stateless keys (whose left-join misses null the state columns) and
+    with keys whose nullable command columns are null. The stored long
+    above 2^53 must come back exact, and handlers must see the handler
+    value contract: an int for a null-free long slice, float NaN for a
+    null long, NaN for a double NaN AND for a double null, None for a
+    null string."""
+    import json
+
+    import pyarrow as pa
+    from pyspark.sql import functions as F
+
+    from surge_spark.streaming.command_engine import CommandEngine, arrow_frame
+    from surge_spark.streaming.snapshot_store import SnapshotStore
+
+    def process(state, cmd):
+        # each received value as [type name, value], NaN spelled out
+        seen = {
+            c: [type(cmd[c]).__name__, "NaN" if cmd[c] != cmd[c] else cmd[c]]
+            for c in ("amt", "x", "note", "__state__n")
+        }
+        return [{"k": cmd["k"], "seen": json.dumps(seen)}], False
+
+    def handle(state, ev):
+        return {"k": ev["k"], "n": (state["n"] if state else 0) + 1}
+
+    store = SnapshotStore(str(tmp_path / "s"), key_col="k", num_buckets=2, delta_commits=4)
+    store.commit(
+        None,
+        spark.createDataFrame([("big", 2**60 + 5)], "k string, n long"),
+        "seed",
+        updates_unique=True,
+    )
+    engine = CommandEngine(
+        store, process, handle, "k string, n long", "k string, seen string",
+        key_col="k", order_cols=["command_id"], fold_partitions=1,
+        driver_fold_max_rows=0,
+    )
+    schema = pa.schema([("k", pa.string()), ("command_id", pa.string()),
+                        ("amt", pa.int64()), ("x", pa.float64()), ("note", pa.string())])
+    rows = [{"k": "big", "command_id": "c0", "amt": 2**60 + 7, "x": float("nan"), "note": "hi"}]
+    rows += [
+        {"k": f"f{i}", "command_id": f"c{i + 1}", "amt": None if i % 2 else 2**55 + 1 + i,
+         "x": None if i % 2 else 1.5, "note": None}
+        for i in range(12)
+    ]
+    cmds = arrow_frame(spark, rows, schema)
+    # the case under test: "big" shares its salt bucket (fold width 1 →
+    # 4 buckets) with a stateless key whose long command column is null
+    g = {
+        r.k: r.g
+        for r in cmds.select("k", F.pmod(F.xxhash64("k"), F.lit(4)).alias("g")).collect()
+    }
+    assert any(g[f"f{i}"] == g["big"] for i in range(1, 12, 2)), g
+    out = engine.process_batch(cmds, "b0")
+    assert out is not None
+    seen = {r.k: json.loads(r.seen) for r in out[1].collect()}
+    assert seen["big"] == {
+        "amt": ["int", 2**60 + 7], "x": ["float", "NaN"],
+        "note": ["str", "hi"], "__state__n": ["int", 2**60 + 5],
+    }
+    assert seen["f0"] == {
+        "amt": ["int", 2**55 + 1], "x": ["float", 1.5],
+        "note": ["NoneType", None], "__state__n": ["float", "NaN"],
+    }
+    assert seen["f1"] == {
+        "amt": ["float", "NaN"], "x": ["float", "NaN"],
+        "note": ["NoneType", None], "__state__n": ["float", "NaN"],
+    }
+    assert store.get_state(spark, "big")["n"] == 2**60 + 6
+    assert store.get_state(spark, "f1")["n"] == 1
+
+
+@pytest.mark.parametrize("n", [1, 64])
+def test_batch_frame_keeps_nan_apart_from_null(spark, tmp_path, n):
+    """The facade's one Arrow frame builder at both sides of the old
+    64-row switch: a double NaN stays NaN (isnan) and a double null stays
+    null (isNull), and a long above 2^53 stays exact. The deleted pandas
+    path turned NaN into null, which is why it was gated on NaN absence."""
+    from pyspark.sql import functions as F
+
+    engine = SurgeEngine(spark, _bank_model(), str(tmp_path / "s"))
+    xs = [float("nan")] if n == 1 else [[1.5, float("nan"), None][i % 3] for i in range(n)]
+    rows = [
+        {"aggregate_id": str(i), "command_id": f"c{i}", "x": x, "big": 2**60 + i}
+        for i, x in enumerate(xs)
+    ]
+    got = engine._create_batch_frame(rows).select(
+        F.sum(F.isnan("x").cast("int")).alias("nan"),
+        F.sum(F.col("x").isNull().cast("int")).alias("null"),
+        F.collect_list("big").alias("big"),
+    ).first()
+    assert got.nan == sum(1 for x in xs if x is not None and x != x)
+    assert got.null == sum(1 for x in xs if x is None)
+    assert sorted(got.big) == [2**60 + i for i in range(n)]
+
+
+def test_batch_schema_rejects_rows_that_disagree_on_a_type():
+    """The facade's Arrow batch schema comes from the first row; a later
+    row whose value has another type must raise, at any batch size,
+    because pyarrow would convert it silently (2.5 in a long field reads
+    back as 2), where PySpark's row check rejected it. None fits every
+    type."""
+    import pyarrow as pa
+
+    infer = SurgeEngine._infer_schema
+    assert infer([{"a": 1, "b": 1.5, "c": None}, {"a": None, "b": 2.5, "c": "x"}]) == pa.schema(
+        [("a", pa.int64()), ("b", pa.float64()), ("c", pa.string())]
+    )
+    for n in (1, 64):
+        for first, bad in ((1, 2.5), (1.5, 2), (1, True), (True, 1), (None, 3), (1.5, False)):
+            with pytest.raises(TypeError, match="first row"):
+                infer([{"a": first}] * n + [{"a": bad}])
+
+
 @pytest.mark.slow  # r16 fast-tier split (>10 s; see pytest.ini)
 def test_salted_fold_preserves_long_state_in_mixed_buckets(spark, tmp_path):
     """Review-finding regression: the salted fold's Arrow bucket mixes
@@ -446,16 +563,25 @@ def test_salted_fold_preserves_long_state_in_mixed_buckets(spark, tmp_path):
     for _ in range(5):
         assert engine.submit_many([("k0", {"kind": "bump"})])[0].is_success
     assert engine.aggregate_for("k0").get_state()["n"] == 5
+    # and "big" with a long no float64 holds exactly (2^60 + 5)
+    engine._store.commit(
+        None,
+        spark.createDataFrame([("big", 2**60 + 5)], "aggregate_id string, n long"),
+        "seed-big",
+        updates_unique=True,
+    )
     # force the DISTRIBUTED fold for the mixed batch
     engine._engine.driver_fold_max_rows = 0
     res = engine.submit_many(
-        [("k0", {"kind": "bump"})]
+        [("k0", {"kind": "bump"}), ("big", {"kind": "bump"})]
         + [(f"fresh-{i}", {"kind": "bump"}) for i in range(200)]
     )
     assert all(r.is_success for r in res)
     got = engine.aggregate_for("k0").get_state()
     assert got is not None and got["n"] == 6, got
     assert engine.aggregate_for("fresh-7").get_state()["n"] == 1
+    assert res[1].state["n"] == 2**60 + 6, res[1]
+    assert engine.aggregate_for("big").get_state()["n"] == 2**60 + 6
 
 
 @pytest.mark.slow  # r16 fast-tier split (>10 s; see pytest.ini)

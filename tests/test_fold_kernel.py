@@ -1,19 +1,23 @@
 """Parity pin for the per-key fold kernel (``CommandEngine._fold_frame``).
 
 The kernel replaced a per-key pandas path: ``groupby("__k")`` over the
-distributed fold's Arrow bucket, a per-key ``astype`` restoring integral
-columns, and a ``_handle_group`` that took a per-key frame (``iloc`` for the
-key and initial state, ``sort_values`` for command order, a row iterator
-for the command dicts). A frozen copy of that path is the oracle below.
-Generated multi-key buckets must fold to the same packed rows, and every
+distributed fold's bucket, a per-key ``astype`` restoring integral columns,
+and a ``_handle_group`` that took a per-key frame (``iloc`` for the key and
+initial state, ``sort_values`` for command order, a row iterator for the
+command dicts). A frozen copy of that path is the oracle below, fed each
+key's slice of the Arrow bucket converted to pandas on its own
+(``table.take(idx).to_pandas()``, timestamps made naive in the session time
+zone as applyInPandas makes them): that per-key conversion is the semantics
+the kernel claims. Generated multi-key buckets, with ints above 2^53 next to
+nulls in other keys' slices, must fold to the same packed rows, and every
 handler must receive the same cmd/state dicts (same keys, same order, same
 Python value types, NaN and NaT included), for plain, async and
-context-mode handlers. The driver fold's batch frame
-(``CommandEngine._batch_frame``) built from the same commands must fold
+context-mode handlers. The driver fold's batch columns
+(``CommandEngine._batch_columns``) built from the same commands must fold
 identically too: the distributed fold is the source of truth.
 
-No Spark session: buckets are built with pyarrow and converted the way
-applyInPandas converts them.
+No Spark session: buckets are built with pyarrow, typed as applyInArrow
+hands them to the fold.
 """
 
 from __future__ import annotations
@@ -144,12 +148,20 @@ def _ref_pack_rows(s, e, r, d, recs, state_key_col):
     )
 
 
-def _ref_fold(pdf, state_fields, integral_cols, key_col, store_key_col,
-              order_cols, process_command, handle_event, context_mode):
+def _ref_fold(table, state_fields, integral_cols, key_col, store_key_col,
+              order_cols, process_command, handle_event, context_mode, tz):
     out = []
-    pdf = pdf.drop(columns=["__g"])
-    for _, kpdf in pdf.groupby("__k", sort=False, dropna=False):
-        kpdf = kpdf.drop(columns=["__k"])
+    groups: dict = {}
+    for i, k in enumerate(table.column("__k").to_pylist()):
+        groups.setdefault(k, []).append(i)
+    for idx in groups.values():
+        kpdf = table.take(idx).to_pandas(
+            date_as_object=True, coerce_temporal_nanoseconds=True
+        )
+        for c in kpdf.columns:
+            if isinstance(kpdf[c].dtype, pd.DatetimeTZDtype):
+                kpdf[c] = kpdf[c].dt.tz_convert(tz).dt.tz_localize(None)
+        kpdf = kpdf.drop(columns=["__g", "__k"])
         for c in integral_cols:
             col = kpdf[c]
             if col.dtype.kind == "f" and col.notna().all():
@@ -171,6 +183,7 @@ COMMAND_FIELDS = [
     T.StructField("sub", T.IntegerType()),
     T.StructField("amt", T.LongType()),
     T.StructField("op", T.StringType()),
+    T.StructField("at", T.TimestampType()),
 ]
 STATE_FIELDS = [
     T.StructField("k", T.StringType()),
@@ -181,19 +194,32 @@ ARROW_TYPES = {
     "k": pa.string(), "command_id": pa.string(), "seq": pa.int64(),
     "sub": pa.int32(), "amt": pa.int64(), "op": pa.string(),
 }
+SPARK_TYPES = {
+    **{f.name: f.dataType for f in COMMAND_FIELDS},
+    "__k": T.StringType(),
+    **{f"__state__{f.name}": f.dataType for f in STATE_FIELDS},
+    "__g": T.LongType(),
+}
 INTEGRAL = ["seq", "sub", "amt", "__state__n"]
 ORDER = ["seq", "sub"]
 OPS = ["ok", "ok", "reject", "boom", "evboom", "del", "topic"]
+ZONES = ["UTC", "America/New_York"]
 
 _small = st.integers(0, 2)
-_long = st.integers(-(2**40), 2**40)
-_ts = st.datetimes(dt.datetime(2020, 1, 1), dt.datetime(2030, 1, 1))
+# above 2^53 a float64 no longer holds every int: a bucket-wide float pass
+# would round these
+_long = st.integers(-(2**40), 2**40) | st.integers(2**53 + 1, 2**63 - 1)
+_ts = st.datetimes(dt.datetime(2020, 1, 1), dt.datetime(2030, 1, 1)).map(
+    lambda t: t.replace(tzinfo=dt.timezone.utc)
+)
 
 
 @st.composite
 def batches(draw):
-    """(commands, states): command dicts over a few keys, NULL key included,
-    with nullable order/amount columns; per-key stored state or None."""
+    """(commands, states, tz): command dicts over a few keys, NULL key
+    included, with nullable order/amount columns; per-key stored state or
+    None (timestamps time-zone aware, as Arrow reads them); the session
+    time zone."""
     keys = draw(st.lists(st.sampled_from(["a", "b", "c", "d", None]),
                          min_size=1, max_size=5, unique=True))
     states = {}
@@ -208,27 +234,39 @@ def batches(draw):
             "sub": draw(st.none() | _small),
             "amt": draw(st.none() | _long),
             "op": draw(st.sampled_from(OPS)),
+            "at": draw(st.none() | _ts),
         }
         for i in range(draw(st.integers(1, 14)))
     ]
-    return commands, states
+    return commands, states, draw(st.sampled_from(ZONES))
 
 
-def _bucket(commands, states) -> pd.DataFrame:
-    """The distributed fold's joined Arrow bucket, converted to pandas as
-    applyInPandas converts it."""
+def _bucket(commands, states, tz) -> pa.Table:
+    """The distributed fold's joined Arrow bucket, as applyInArrow hands
+    it over (timestamps in the session time zone)."""
     st_rows = [states.get(c["k"]) if c["k"] is not None else None for c in commands]
     cols = {f: pa.array([c[f] for c in commands], t) for f, t in ARROW_TYPES.items()}
+    cols["at"] = pa.array([c["at"] for c in commands], pa.timestamp("us", tz=tz))
     cols["__k"] = pa.array([c["k"] for c in commands], pa.string())
-    for f, t in (("k", pa.string()), ("n", pa.int64()), ("ts", pa.timestamp("us"))):
+    for f, t in (("k", pa.string()), ("n", pa.int64()), ("ts", pa.timestamp("us", tz=tz))):
         cols[f"__state__{f}"] = pa.array([s[f] if s else None for s in st_rows], t)
     cols["__g"] = pa.array([0] * len(commands), pa.int64())
-    return pa.table(cols).to_pandas(date_as_object=True, coerce_temporal_nanoseconds=True)
+    return pa.table(cols)
 
 
-def _driver_frame(commands, states) -> tuple[pd.DataFrame, list[str]]:
-    rows = [Row(**c) for c in commands]
-    return CommandEngine._batch_frame(rows, "k", COMMAND_FIELDS, STATE_FIELDS, states)
+def _arrow_columns(commands, states, tz):
+    table = _bucket(commands, states, tz)
+    return {c: table.column(c).to_pylist() for c in table.column_names}, SPARK_TYPES
+
+
+def _driver_columns(commands, states, tz):
+    # a collected Row holds a timestamp as a naive datetime in the
+    # process's local time zone
+    rows = [
+        Row(**{**c, "at": c["at"] and c["at"].astimezone().replace(tzinfo=None)})
+        for c in commands
+    ]
+    return CommandEngine._batch_columns(rows, "k", COMMAND_FIELDS, STATE_FIELDS, states)
 
 
 # -- recording handlers ------------------------------------------------------
@@ -296,21 +334,21 @@ def _handlers(mode: str, log: list):
     return ctx_process, None
 
 
-def _fold_all(mode, commands, states):
-    """Fold one batch three ways: the oracle and the kernel over the Arrow
-    bucket, and the kernel over the driver fold's batch frame. Returns
-    (packed rows, handler log) per way."""
+def _fold_all(mode, commands, states, tz):
+    """Fold one batch three ways: the oracle over the Arrow bucket's
+    per-key slices, the kernel over the bucket's column lists, and the
+    kernel over the driver fold's batch columns. Returns (packed rows,
+    handler log) per way."""
     results = []
-    for fold, (pdf, integral) in (
-        (_ref_fold, (_bucket(commands, states), INTEGRAL)),
-        (CommandEngine._fold_frame, (_bucket(commands, states), INTEGRAL)),
-        (CommandEngine._fold_frame, _driver_frame(commands, states)),
-    ):
+    for way in ("oracle", "arrow", "driver"):
         log: list = []
         pc, he = _handlers(mode, log)
-        packed = fold(
-            pdf, ["k", "n", "ts"], integral, "k", "k", ORDER, pc, he, mode == "context"
-        )
+        args = (["k", "n", "ts"], "k", "k", ORDER, pc, he, mode == "context", tz)
+        if way == "oracle":
+            packed = _ref_fold(_bucket(commands, states, tz), args[0], INTEGRAL, *args[1:])
+        else:
+            build = _arrow_columns if way == "arrow" else _driver_columns
+            packed = CommandEngine._fold_frame(*build(commands, states, tz), *args)
         results.append((packed, log))
     return results
 
@@ -323,8 +361,7 @@ _SETTINGS = settings(
 
 
 def _check(mode, batch):
-    commands, states = batch
-    (ref, ref_log), (kern, kern_log), (drv, drv_log) = _fold_all(mode, commands, states)
+    (ref, ref_log), (kern, kern_log), (drv, drv_log) = _fold_all(mode, *batch)
     assert kern_log == ref_log
     assert kern == ref
     assert drv_log == ref_log
@@ -350,38 +387,48 @@ def test_kernel_matches_per_key_path_context(batch):
 
 
 def test_kernel_types_each_key_slice():
-    """The cases the generator must reach, pinned by hand: a long promoted
-    to float64 by a null in ANOTHER key comes back as int; a null in the
-    key's own slice keeps the slice float; an all-null slice reads NaN on
-    both folds (the driver fold's old per-key frame handed None); nulls
-    sort last and ties keep arrival order."""
+    """The cases the generator must reach, pinned by hand: a long above
+    2^53 next to a null in ANOTHER key's slice comes back as the exact int;
+    a null in the key's own slice keeps the slice float; an all-null slice
+    reads NaN on both folds; nulls sort last and ties keep arrival order;
+    a timestamp (stored or commanded) reaches handlers naive in the
+    session time zone, a null one as NaT."""
+    at = dt.datetime(2024, 5, 1, 4, tzinfo=dt.timezone.utc)  # 00:00 in New York
+
+    def cmd(k, cid, seq, sub, amt, at=None):
+        return {"k": k, "command_id": cid, "seq": seq, "sub": sub, "amt": amt,
+                "op": "ok", "at": at}
+
     commands = [
-        {"k": "a", "command_id": "c0", "seq": 2, "sub": 0, "amt": 7, "op": "ok"},
-        {"k": "b", "command_id": "c1", "seq": None, "sub": 0, "amt": None, "op": "ok"},
-        {"k": "a", "command_id": "c2", "seq": None, "sub": 1, "amt": 8, "op": "ok"},
-        {"k": "a", "command_id": "c3", "seq": 1, "sub": 0, "amt": 9, "op": "ok"},
-        {"k": "a", "command_id": "c4", "seq": 2, "sub": 0, "amt": 5, "op": "ok"},
-        {"k": "c", "command_id": "c5", "seq": 0, "sub": 0, "amt": 3, "op": "ok"},
-        {"k": "c", "command_id": "c6", "seq": 0, "sub": 0, "amt": None, "op": "ok"},
+        cmd("a", "c0", 2, 0, 7, at),
+        cmd("b", "c1", None, 0, None),
+        cmd("a", "c2", None, 1, 8),
+        cmd("a", "c3", 1, 0, 2**60 + 9),
+        cmd("a", "c4", 2, 0, 5),
+        cmd("c", "c5", 0, 0, 3),
+        cmd("c", "c6", 0, 0, None),
     ]
-    states = {"a": {"k": "a", "n": 2**40 + 1, "ts": dt.datetime(2024, 5, 1)}}
-    results = _fold_all("plain", commands, states)
+    states = {"a": {"k": "a", "n": 2**60 + 1, "ts": at}}
+    results = _fold_all("plain", commands, states, "America/New_York")
     for _, log in results:
         cmds = [c for kind, _, c in log if kind == "cmd"]
         got = [(dict(c)["command_id"][1], dict(c)["amt"], dict(c)["__state__n"]) for c in cmds]
         assert got == [
-            ("c3", ("int", 9), ("int", 2**40 + 1)),
-            ("c0", ("int", 7), ("int", 2**40 + 1)),
-            ("c4", ("int", 5), ("int", 2**40 + 1)),
-            ("c2", ("int", 8), ("int", 2**40 + 1)),
+            ("c3", ("int", 2**60 + 9), ("int", 2**60 + 1)),
+            ("c0", ("int", 7), ("int", 2**60 + 1)),
+            ("c4", ("int", 5), ("int", 2**60 + 1)),
+            ("c2", ("int", 8), ("int", 2**60 + 1)),
             ("c1", ("float", "NaN"), ("float", "NaN")),
             ("c5", ("float", 3.0), ("float", "NaN")),
             ("c6", ("float", "NaN"), ("float", "NaN")),
         ]
+        ats = {dict(c)["command_id"][1]: dict(c)["at"] for c in cmds}
+        assert ats["c0"] == ("Timestamp", pd.Timestamp("2024-05-01"))
+        assert ats["c1"] == ("NaTType", "NaN")
         first_state = log[0][1]
         assert first_state == [
             ("k", ("str", "a")),
-            ("n", ("int", 2**40 + 1)),
+            ("n", ("int", 2**60 + 1)),
             ("ts", ("Timestamp", pd.Timestamp("2024-05-01"))),
         ]
     assert results[0] == results[1] == results[2]

@@ -264,6 +264,52 @@ def test_h2c_client_server_roundtrip_and_grpc_status_errors():
         srv.server_close()
 
 
+class _FlakyAsyncService:
+    """Async service whose handlers fail on demand, for error isolation."""
+
+    async def process_command(self, aggregate_id, state, command):
+        if command.payload == b"boom":
+            raise RuntimeError("handler exploded")
+        return ml.ProcessCommandReply(
+            aggregate_id, True, "", (ml.Event(aggregate_id, command.payload),)
+        )
+
+    async def handle_events(self, aggregate_id, state, events):
+        if any(e.payload == b"bad" for e in events):
+            raise ValueError("bad event")
+        return ml.State(aggregate_id, b"|".join(e.payload for e in events))
+
+    async def health_check(self):
+        return ml.HealthCheckReply("flaky", "UP")
+
+
+def test_h2c_async_service_errors_fail_the_command_not_the_transport():
+    """Async service methods are awaited server-side and bytes round-trip
+    exactly; an exception in either handler fails that one call as a
+    client-side RuntimeError carrying the message, and the same client
+    and server keep serving afterwards."""
+    srv = h2c.serve_business_logic_h2c(_FlakyAsyncService())
+    t = threading.Thread(target=srv.serve_forever, daemon=True)
+    t.start()
+    try:
+        client = h2c.H2cBusinessLogicClient("127.0.0.1", srv.server_address[1])
+        with pytest.raises(RuntimeError, match="handler exploded"):
+            client.process_command("k", None, ml.Command("k", b"boom"))
+        with pytest.raises(RuntimeError, match="bad event"):
+            client.handle_events("k", None, [ml.Event("k", b"bad")])
+        payload = bytes(range(256))  # every byte value survives the frames
+        r = client.process_command("k", None, ml.Command("k", payload))
+        assert r.is_success and r.events[0].payload == payload
+        s = client.handle_events(
+            "k", ml.State("k", b"old"), [ml.Event("k", b"a"), ml.Event("k", b"b")]
+        )
+        assert s.payload == b"a|b"
+        assert client.health_check().status == "UP"
+    finally:
+        srv.shutdown()
+        srv.server_close()
+
+
 # -- cross-process integration through the Spark engine -----------------------
 
 CHILD_SRC = '''
@@ -300,8 +346,8 @@ srv.serve_forever()
 def test_cross_process_h2c_business_logic(spark, tmp_path):
     """The engine's distributed fold dials business logic in a CHILD
     process over wire-true h2c gRPC frames; commits, rejections and
-    read-your-writes behave exactly as over the length-prefixed loopback
-    (same proto3 payloads, different framing — the mixin guarantees it)."""
+    read-your-writes hold across the process boundary (proto3 payloads
+    from the shared mixin, h2c framing)."""
     script = tmp_path / "svc_h2c.py"
     script.write_text(CHILD_SRC.format(repo=REPO))
     proc = subprocess.Popen(

@@ -1588,7 +1588,8 @@ def test_driver_fold_equals_distributed_fold(spark, tmp_path, delta_commits):
     command_id order (its trail records the order they ran in), and the
     nullable long command column amt is null for some keys and set for
     others in one batch (each event records the type amt reached the
-    handler as: int, or float NaN for a null in the key's own slice)."""
+    handler as: int, or float NaN for a null in the key's own slice), with
+    one value above 2^53 that must arrive exact."""
     import math
 
     def seen(v):
@@ -1634,6 +1635,7 @@ def test_driver_fold_equals_distributed_fold(spark, tmp_path, delta_commits):
             ("f", "add", "c12", 6),
             ("h", "add", "c16", None),
             ("f", "add", "c13", None),
+            ("i", "add", "c17", 2**60 + 3),  # above 2^53, beside nulls
         ],
     ]
 
@@ -1693,6 +1695,7 @@ def test_driver_fold_equals_distributed_fold(spark, tmp_path, delta_commits):
     assert (amt["c12"], amt["c13"], amt["c14"]) == ("float:6.0", "float:NaN", "float:NaN")
     assert amt["c15"] == "int:5"  # g: null-free slice, exact int
     assert amt["c16"] == "float:NaN"  # h: all-null slice, NaN on both folds
+    assert amt["c17"] == f"int:{2**60 + 3}"  # i: exact, no float64 pass
 
 
 def test_driver_fold_falls_back_on_oversized_batch(spark, tmp_path):
