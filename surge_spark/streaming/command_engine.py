@@ -52,7 +52,7 @@ from pyspark.sql import types as T
 from ..session import ensure_shipped
 from ._prof import phase
 from .context import ContextCommandHandler, SurgeContext
-from .snapshot_store import SnapshotStore
+from .snapshot_store import DRIVER_COMMIT_MAX_ROWS, SnapshotStore
 
 # handler contracts (mirror AggregateProcessingModel.scala:18-34):
 #   process_command(state|None, cmd) -> (events: list[dict], rejected: bool)
@@ -132,7 +132,7 @@ class CommandEngine:
         context_mode: bool = False,
         commit_target_files: int = 1,
         fold_partitions: int | None = None,
-        driver_commit_max_rows: int = 65536,
+        driver_commit_max_rows: int = DRIVER_COMMIT_MAX_ROWS,
         driver_fold_max_rows: int = 512,
     ) -> None:
         """Handler models supported (CommandModels.scala:12-74):
@@ -171,7 +171,11 @@ class CommandEngine:
         measured ~0.2 s/job floor saved). Requires every engine schema to
         be arrow-writable primitives (checked once, cached); any per-batch
         value that doesn't coerce exactly falls back to the Spark path.
-        Set 0 to disable.
+        The same bound gates the compaction: a compacting commit merges on
+        the driver (SnapshotStore._driver_compaction) only when the live
+        deltas plus the touched base buckets hold at most this many rows,
+        counted from the parquet footers; larger stores compact on Spark.
+        Set 0 to disable (driver-fold batches still append driver-side).
 
         ``driver_fold_max_rows``: command batches at or under this row
         count run the ENTIRE fold driver-side (the read twin completing
@@ -324,6 +328,8 @@ class CommandEngine:
             "replies": rep,
             "records_struct": structs["records_struct"],
             "records": rec if self.context_mode else [],
+            # the row bound the store applies to a driver-side compaction
+            "max_rows": self.driver_commit_max_rows,
         }
 
     def _project_sides(

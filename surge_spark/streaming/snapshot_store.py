@@ -62,6 +62,21 @@ from ._prof import phase
 
 _BUCKET_COL = "__bucket"
 
+# the default row bound on the driver-side commit writes and compaction
+# (CommandEngine's driver_commit_max_rows); the engine passes its own
+# bound in driver_sides["max_rows"]
+DRIVER_COMMIT_MAX_ROWS = 65536
+
+# key types whose str() spelling equals Spark's cast to string, so
+# _bucket_of places their rows where _bucket_expr does (floats differ:
+# str(1e20) is '1e+20', Spark's cast gives '1.0E20')
+_BUCKET_MIRRORED_KEYS = (T.StringType, T.LongType, T.IntegerType, T.ShortType, T.ByteType)
+
+
+class _Declined(Exception):
+    """A driver-side commit gate did not hold; the message is the reason
+    recorded as the manifest's ``fallback``."""
+
 
 def _reply_staging_path(final: str, token: str) -> str:
     """WRITER-UNIQUE staging sibling of an external reply dir: suffixed
@@ -116,8 +131,15 @@ class SnapshotStore:
         instead APPENDS its updates + tombstones as one flat per-version
         delta directory (no read of previous state at all),
         and every Nth commit folds the accumulated deltas into the base
-        buckets through the same COW merge. Readers do a latest-wins merge
-        (``max_by`` over the delta ordinal) across base + deltas. This is
+        buckets. Readers do a latest-wins merge
+        (``max_by`` over the delta ordinal) across base + deltas. A
+        compaction that receives the engine's ``driver_sides`` merges on the
+        driver with pyarrow (_driver_compaction) when the live deltas plus
+        the touched base buckets hold at most ``driver_sides["max_rows"]``
+        rows (the engine's ``driver_commit_max_rows``), the key is a string
+        or integral type, every delta has the commit's schema, and the
+        store is bucketed; otherwise it runs the Spark COW merge. Every
+        manifest records which (``writes``) and why not (``fallback``). This is
         the reference's own shape — a Kafka transaction APPENDS events +
         state to topics and the KTable compacts in the background
         (KafkaProducerActorImpl.scala:421-453) — and the Delta/Hudi
@@ -453,16 +475,13 @@ class SnapshotStore:
                 raise ValueError(f"{f.name}: unsupported {f.dataType}")
         return out
 
-    @classmethod
-    def _arrow_write_dir(cls, path: str, rows: list[dict], struct: T.StructType) -> None:
-        """One-file parquet dir, the driver-side stand-in for a one-task
-        Spark write (snappy, the same default codec)."""
-        import pyarrow as pa
+    @staticmethod
+    def _arrow_write_table(path: str, table) -> None:
+        """One parquet file in ``path``, the driver-side stand-in for one
+        Spark write task (snappy, the same default codec)."""
         import pyarrow.parquet as pq
 
-        schema = cls._arrow_write_schema(struct)
         os.makedirs(path, exist_ok=True)
-        table = pa.Table.from_pylist(rows, schema=schema)
         # write hidden, rename into place: a concurrent lister (the
         # change-feed stream source) must never read a partial footer —
         # Spark's own writes get this from the _temporary-dir committer,
@@ -472,36 +491,25 @@ class SnapshotStore:
         pq.write_table(table, tmp)
         os.rename(tmp, os.path.join(path, name))
 
-    def _driver_commit_writes(
-        self,
-        ds: dict,
-        delta_path: str,
-        events_path: str | None,
-        replies_path: str | None,
-        records_path: str | None,
-        prev_manifest: dict | None,
-        updates_unique: bool = False,
-    ) -> tuple[int, bool, str]:
-        """Write a delta-append commit's parquet sides driver-side from
-        pre-collected rows. Returns (n_events, delta_written,
-        state_schema_json). Raises on ANY schema/value that doesn't coerce
-        exactly — the caller cleans up and falls back to the Spark writes.
+    @classmethod
+    def _arrow_write_dir(cls, path: str, rows: list[dict], struct: T.StructType) -> None:
+        """One-file parquet dir of typed row dicts."""
+        import pyarrow as pa
+
+        schema = cls._arrow_write_schema(struct)
+        cls._arrow_write_table(path, pa.Table.from_pylist(rows, schema=schema))
+
+    def _driver_change_rows(self, ds: dict, updates_unique: bool) -> list[dict]:
+        """The batch's state rows and tombstones in the delta-file shape
+        (state columns + ``__deleted``): a delta append's delta file, and a
+        driver compaction's merge input and change record.
 
         Parity contracts mirrored from the Spark path: null-key state rows
         are dropped at the gate (unaddressable by the bucket math);
         tombstone keys are cast from their string spelling to the key
-        column's type (int()/float() raise like ANSI casts do); an empty
-        delta writes NO dir (no-change-no-write); an empty events/records
-        side writes no dir and reports n=0; replies are always written
-        (even empty — ack recovery reads the dir's existence)."""
+        column's type (int()/float() raise like ANSI casts do)."""
         state_struct: T.StructType = ds["state_struct"]
-        schema_json = state_struct.json()
-        if not state_struct.fields and prev_manifest is not None:
-            schema_json = prev_manifest.get("state_schema", schema_json)
         key_field = state_struct[self.key_col]
-        delta_struct = T.StructType(
-            list(state_struct.fields) + [T.StructField("__deleted", T.BooleanType())]
-        )
         rows: list[dict] = []
         seen_keys: set = set()
         for d in ds.get("state") or []:
@@ -544,31 +552,197 @@ class SnapshotStore:
             r[self.key_col] = kv
             r["__deleted"] = True
             rows.append(r)
-        n_events = 0
-        # coerce EVERY side before writing ANY file: a late coercion error
-        # must leave nothing to clean up beyond what the caller rmtree's
-        ev_rows = rep_rows = rec_rows = None
+        return rows
+
+    def _driver_side_rows(
+        self,
+        ds: dict,
+        events_path: str | None,
+        replies_path: str | None,
+        records_path: str | None,
+    ) -> dict:
+        """Coerced events/replies/records rows (None for a side not
+        written). Coerced before any file is written, so a late coercion
+        error leaves nothing to clean up beyond what the caller rmtree's."""
+        sides: dict = {"events": None, "replies": None, "records": None}
         if events_path is not None and ds.get("events") is not None:
-            ev_rows = [self._coerce_row(d, ds["events_struct"]) for d in ds["events"]]
+            sides["events"] = [self._coerce_row(d, ds["events_struct"]) for d in ds["events"]]
         if replies_path is not None:
-            rep_rows = [
+            sides["replies"] = [
                 self._coerce_row(d, ds["replies_struct"])
                 for d in (ds.get("replies") or [])
             ]
         if records_path is not None and ds.get("records"):
-            rec_rows = [self._coerce_row(d, ds["records_struct"]) for d in ds["records"]]
+            sides["records"] = [
+                self._coerce_row(d, ds["records_struct"]) for d in ds["records"]
+            ]
+        return sides
+
+    def _write_driver_sides(
+        self,
+        ds: dict,
+        sides: dict,
+        events_path: str | None,
+        replies_path: str | None,
+        records_path: str | None,
+    ) -> int:
+        """Write the coerced sides; returns n_events. An empty events or
+        records side writes no dir; replies are always written (even
+        empty — ack recovery reads the dir's existence)."""
+        n_events = 0
+        if sides["events"]:
+            self._arrow_write_dir(events_path, sides["events"], ds["events_struct"])
+            n_events = len(sides["events"])
+        if sides["replies"] is not None:
+            self._arrow_write_dir(replies_path, sides["replies"], ds["replies_struct"])
+        if sides["records"]:
+            self._arrow_write_dir(records_path, sides["records"], ds["records_struct"])
+        return n_events
+
+    def _driver_commit_writes(
+        self,
+        ds: dict,
+        delta_path: str,
+        events_path: str | None,
+        replies_path: str | None,
+        records_path: str | None,
+        prev_manifest: dict | None,
+        updates_unique: bool = False,
+    ) -> tuple[int, bool, str]:
+        """Write a delta-append commit's parquet sides driver-side from
+        pre-collected rows. Returns (n_events, delta_written,
+        state_schema_json). Raises on ANY schema/value that doesn't coerce
+        exactly — the caller cleans up and falls back to the Spark writes.
+        An empty delta writes NO dir (no-change-no-write)."""
+        state_struct: T.StructType = ds["state_struct"]
+        schema_json = state_struct.json()
+        if not state_struct.fields and prev_manifest is not None:
+            schema_json = prev_manifest.get("state_schema", schema_json)
+        delta_struct = T.StructType(
+            list(state_struct.fields) + [T.StructField("__deleted", T.BooleanType())]
+        )
+        rows = self._driver_change_rows(ds, updates_unique)
+        sides = self._driver_side_rows(ds, events_path, replies_path, records_path)
         delta_written = False
         if rows:
             self._arrow_write_dir(delta_path, rows, delta_struct)
             delta_written = True
-        if ev_rows:
-            self._arrow_write_dir(events_path, ev_rows, ds["events_struct"])
-            n_events = len(ev_rows)
-        if rep_rows is not None:
-            self._arrow_write_dir(replies_path, rep_rows, ds["replies_struct"])
-        if rec_rows:
-            self._arrow_write_dir(records_path, rec_rows, ds["records_struct"])
+        n_events = self._write_driver_sides(
+            ds, sides, events_path, replies_path, records_path
+        )
         return n_events, delta_written, schema_json
+
+    # -- driver-side compaction -----------------------------------------------
+
+    # the rewrite twin of the driver-side append: a compaction of a
+    # micro-batch-sized store (cmd-stream: 16 deltas of 128 keys over a
+    # 4096-key, 16-bucket base) merges a few thousand rows, yet the Spark
+    # plan (_fold_backlog aggregate, _cow_merge collect job and anti-join,
+    # bucket-repartitioned write) cost ~1.7-2.0 s of one trigger in 17.
+    # Same latest-wins merge with pyarrow on the driver, gated on the
+    # rows it reads; the Spark compaction stays the one fallback.
+    def _driver_compaction(
+        self,
+        ds: dict,
+        prev_manifest: dict,
+        prev_deltas: list[dict],
+        state_path: str,
+        changes_path: str | None,
+        events_path: str | None,
+        replies_path: str | None,
+        records_path: str | None,
+        updates_unique: bool,
+    ) -> tuple[int, str, set[str]]:
+        """Fold every live delta plus this batch into the touched base
+        buckets with pyarrow and write one parquet file per touched bucket
+        under ``state_path/__bucket=N`` — the layout the Spark write
+        produces. Returns (n_events, state_schema_json, touched bucket
+        ids). Raises _Declined before reading anything big when a gate
+        fails, and anything else on a value or file that doesn't map
+        exactly; the caller cleans up and runs the Spark compaction."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        state_struct: T.StructType = ds["state_struct"]
+        schema_json = state_struct.json()
+        if self.key_col not in state_struct.fieldNames():
+            raise _Declined("the batch's state schema lacks the key column")
+        key_type = state_struct[self.key_col].dataType
+        if type(key_type) not in _BUCKET_MIRRORED_KEYS:
+            # _bucket_of equals Spark's cast-to-string crc32 only where
+            # Python's str() spells the value as Spark does
+            raise _Declined(f"key type {key_type.simpleString()} has no driver-side bucket mirror")
+        if any(e["schema"] != schema_json for e in prev_deltas):
+            raise _Declined("a delta's schema differs from the commit's state schema")
+        target = self._arrow_write_schema(state_struct)
+        cols = target.names
+        delta_schema = target.append(pa.field("__deleted", pa.bool_()))
+        bound = ds.get("max_rows", DRIVER_COMMIT_MAX_ROWS)
+        live = sorted(
+            (e["path"] for e in prev_deltas if os.path.isdir(e["path"])),
+            key=self._delta_version,
+        )
+        n_read = sum(self._arrow_dataset(p).count_rows() for p in live)
+        if n_read > bound:
+            raise _Declined(f"deltas hold {n_read} rows, over the {bound}-row bound")
+
+        def exact(tbl, schema):
+            # a file written under another schema (drift the manifest
+            # didn't record) must not be cast silently
+            got = [(f.name, f.type) for f in tbl.schema]
+            if got != [(f.name, f.type) for f in schema]:
+                raise ValueError(f"file schema {tbl.schema} differs from {schema}")
+            return pa.Table.from_arrays(tbl.columns, schema=schema)
+
+        change_rows = self._driver_change_rows(ds, updates_unique)
+        sides = self._driver_side_rows(ds, events_path, replies_path, records_path)
+        batch = pa.Table.from_pylist(change_rows, schema=delta_schema)
+        # latest-wins by position: the deltas in _delta_version order, then
+        # the batch (the committing version, newer than every delta), so a
+        # key's LAST row is the one Spark's max_by over __v would pick
+        changes = pa.concat_tables(
+            [
+                exact(self._arrow_dataset(p).to_table(columns=delta_schema.names), delta_schema)
+                for p in live
+            ]
+            + [batch]
+        )
+        last = {k: i for i, k in enumerate(changes.column(self.key_col).to_pylist())}
+        winners = changes.take(pa.array(sorted(last.values()), pa.int64()))
+        keep = pc.invert(winners.column("__deleted")).combine_chunks()
+        upserts = winners.filter(keep).select(cols)
+        nb = self._num_buckets(prev_manifest)
+        win_buckets = [self._bucket_of(k, nb) for k in winners.column(self.key_col).to_pylist()]
+        upsert_buckets = pa.array(win_buckets, pa.int32()).filter(keep)
+        touched = {str(b) for b in win_buckets}
+        base_map = prev_manifest["state_buckets"]
+        base = {b: self._arrow_dataset(base_map[b]) for b in touched if b in base_map}
+        n_read += sum(d.count_rows() for d in base.values())
+        if n_read > bound:
+            raise _Declined(f"compaction reads {n_read} rows, over the {bound}-row bound")
+        touched_keys = winners.column(self.key_col).combine_chunks()
+        out = {}
+        for b in sorted(touched, key=int):
+            parts = [upserts.filter(pc.equal(upsert_buckets, int(b)))]
+            if b in base:
+                prev = exact(base[b].to_table(columns=cols), target)
+                parts.insert(
+                    0,
+                    prev.filter(
+                        pc.invert(pc.is_in(prev.column(self.key_col), value_set=touched_keys))
+                    ),
+                )
+            tbl = pa.concat_tables(parts)
+            if tbl.num_rows:
+                out[b] = tbl  # a bucket emptied by deletes gets no dir
+        for b, tbl in out.items():
+            self._arrow_write_table(os.path.join(state_path, f"{_BUCKET_COL}={b}"), tbl)
+        if changes_path is not None and change_rows:
+            self._arrow_write_table(changes_path, batch)
+        n_events = self._write_driver_sides(
+            ds, sides, events_path, replies_path, records_path
+        )
+        return n_events, schema_json, touched
 
     # -- merge-on-read helpers -----------------------------------------------
 
@@ -758,6 +932,9 @@ class SnapshotStore:
         key = (self._session_key(spark), tuple(e["path"] for e in entries))
         return self._memo_dir_frame(spark, key, lambda: self._deltas_scan(spark, entries))
 
+    # the Spark compaction (_fold_backlog + _cow_merge + the bucketed
+    # write in commit) — the one fallback of _driver_compaction, and the
+    # COW store's rewrite
     def _fold_backlog(
         self,
         spark: SparkSession,
@@ -876,13 +1053,15 @@ class SnapshotStore:
         ``driver_sides``: pre-collected typed row dicts for every side
         (keys ``state``/``deletes``/``events``/``replies``/``records`` +
         their ``*_struct`` StructTypes) — the engine passes them for
-        driver-safe batch sizes so a delta-append commit writes ALL its
+        driver-safe batch sizes so a delta-mode commit writes ALL its
         parquet driver-side via pyarrow (zero Spark write jobs; measured
-        ~0.2 s/job floor). Honored only for delta-append commits with
-        exactly-coercible primitive schemas; any mismatch falls back to
-        the Spark writes from the frames, which remain the semantic
-        source of truth. The DataFrame params must still be passed — they
-        are the fallback.
+        ~0.2 s/job floor): an append writes its delta, a compaction merges
+        the deltas into the touched buckets (_driver_compaction, gated on
+        ``driver_sides["max_rows"]``). Honored only with exactly-coercible
+        primitive schemas; any mismatch falls back to the Spark writes
+        from the frames, which remain the semantic source of truth, and
+        the manifest's ``fallback`` records why. The DataFrame params must
+        still be passed — they are the fallback.
         ``replies_dir``: publish the replies THERE instead of inside the
         version directory (and record that path in the manifest) — lets a
         streaming deployment's gateway reply channel be the commit's own
@@ -984,36 +1163,58 @@ class SnapshotStore:
         changes_path = os.path.join(vdir, "changes")
         delta_path = os.path.join(vdir, "state-delta")
         # driver-side small-batch writes (the write twin of the arrow point
-        # read): only for delta-append commits, and only when every value
-        # coerces exactly — any failure cleans its partial dirs and falls
-        # back to the Spark write jobs below, which are the source of truth
-        # for semantics.
+        # read): a delta append writes its delta, a compaction folds the
+        # deltas into the touched base buckets (_driver_compaction), and
+        # both write events/replies/records — only when every gate holds
+        # and every value coerces exactly. Any decline or failure cleans
+        # its partial dirs, is recorded as the manifest's ``fallback``, and
+        # falls back to the Spark write jobs below, which are the source of
+        # truth for semantics.
         driver_written = False
         delta_written = False
         driver_schema_json: str | None = None
-        if driver_sides is not None and delta_write:
+        touched: set[str] = set()  # base buckets this commit rewrites
+        fallback: str | None = None
+        if driver_sides is not None:
+            ev_p = events_path if events is not None else None
+            rep_p = replies_path if replies is not None else None
+            rec_p = records_path if records is not None else None
             try:
-                n_events, delta_written, driver_schema_json = (
-                    self._driver_commit_writes(
-                        driver_sides,
-                        delta_path,
-                        events_path if events is not None else None,
-                        replies_path if replies is not None else None,
-                        records_path if records is not None else None,
-                        prev_manifest,
-                        updates_unique=updates_unique,
+                if delta_write:
+                    n_events, delta_written, driver_schema_json = (
+                        self._driver_commit_writes(
+                            driver_sides, delta_path, ev_p, rep_p, rec_p,
+                            prev_manifest, updates_unique=updates_unique,
+                        )
                     )
-                )
+                elif not self.delta_commits:
+                    raise _Declined("copy-on-write store")
+                elif prev_manifest is None:
+                    raise _Declined("first commit")
+                elif legacy_state is not None:
+                    raise _Declined("legacy layout")
+                else:
+                    n_events, driver_schema_json, touched = self._driver_compaction(
+                        driver_sides, prev_manifest, prev_deltas,
+                        state_path, changes_path if self.change_feed else None,
+                        ev_p, rep_p, rec_p, updates_unique,
+                    )
                 driver_written = True
                 if n_events == 0:
                     events = None
                 if not (driver_sides.get("records") or []):
                     records = None
-            except Exception:  # noqa: BLE001 — exact fallback, never guess
-                for p in (delta_path, events_path, records_path, replies_path):
+            except Exception as e:  # noqa: BLE001 — exact fallback, never guess
+                fallback = (
+                    str(e) if isinstance(e, _Declined) else f"{type(e).__name__}: {e}"
+                )[:300]
+                for p in (
+                    delta_path, state_path, changes_path,
+                    events_path, records_path, replies_path,
+                ):
                     shutil.rmtree(p, ignore_errors=True)
-                driver_written = False
                 delta_written = False
+                touched = set()
                 n_events = 0
         if not driver_written:
             if events is not None:
@@ -1036,12 +1237,11 @@ class SnapshotStore:
 
         spark = state_updates.sparkSession
         delta_df: DataFrame | None = None
-        touched: set[str] = set()  # base buckets this commit rewrites
         if driver_written:
             # everything the merge plan would build (tombstone frame, delta
-            # frame) already sits on disk from the arrow writes above;
-            # analyzing the lazy twins anyway costs 60-80 ms of eager
-            # classic-mode re-analysis per micro-batch for nothing.
+            # frame, merged buckets) already sits on disk from the arrow
+            # writes above; analyzing the lazy twins anyway costs 60-80 ms
+            # of eager classic-mode re-analysis per micro-batch for nothing.
             state_schema_json = driver_schema_json
         else:
             with phase("commit.merge_plan"):
@@ -1117,7 +1317,7 @@ class SnapshotStore:
                     delta_written = int(delta_obs.get["n"]) > 0
                     if not delta_written:
                         shutil.rmtree(delta_path, ignore_errors=True)
-                elif not delta_write:
+                elif not delta_write and not driver_written:
                     # change-feed record for a rewriting commit (first
                     # commit / COW / compaction): the batch's OWN changes
                     # in the delta-file shape, O(batch), concurrent with
@@ -1164,7 +1364,6 @@ class SnapshotStore:
             records = None
         if ch_obs is not None and int(ch_obs.get["n"]) == 0:
             shutil.rmtree(changes_path, ignore_errors=True)
-            ch_obs = None
 
         # change record for this version: an append commit's delta dir
         # doubles as it; a rewriting commit's explicit changes dir (only
@@ -1197,7 +1396,7 @@ class SnapshotStore:
             if self.change_feed:
                 changes_entry = (
                     changes_path
-                    if ch_obs is not None and os.path.isdir(changes_path)
+                    if os.path.isdir(changes_path)
                     else ""  # feed on, batch changed nothing
                 )
 
@@ -1219,21 +1418,14 @@ class SnapshotStore:
             "records": records_path if records is not None else None,
             "changes": changes_entry,
             "n_events": n_events,
+            # the commit's write path (Delta's commitInfo analog): "driver"
+            # = pyarrow writes, "spark" = Spark write jobs; ``fallback`` says
+            # why offered driver_sides were not used
+            "writes": "driver" if driver_written else "spark",
+            **({"fallback": fallback} if fallback is not None else {}),
             "ts": time.time(),
         }
-        tmp = self._manifest_path(version) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        try:
-            # exclusive link = fencing: a concurrent writer of the same
-            # version fails here (R5 analog of ProducerFencedException)
-            os.link(tmp, self._manifest_path(version))
-        except FileExistsError as e:
-            os.unlink(tmp)
-            raise RuntimeError(
-                f"fenced: version {version} already committed by another writer"
-            ) from e
-        os.unlink(tmp)
+        self._link_manifest(version, manifest)
         if replies_external and replies is not None:
             # the manifest is durable: publish the acks atomically. A crash
             # before this rename is healed by replies_for_batch/run_stream
@@ -1247,6 +1439,23 @@ class SnapshotStore:
         if self.checkpoint_interval and (version + 1) % self.checkpoint_interval == 0:
             self._write_checkpoint(version)
         return True
+
+    def _link_manifest(self, version: int, manifest: dict) -> None:
+        """Publish ``manifest``: the commit point. Written to a temp file,
+        then hard-linked to the version's name — exclusive link = fencing:
+        a concurrent writer of the same version fails here (R5 analog of
+        ProducerFencedException)."""
+        tmp = self._manifest_path(version) + ".tmp"
+        with open(tmp, "w") as f:
+            json.dump(manifest, f)
+        try:
+            os.link(tmp, self._manifest_path(version))
+        except FileExistsError as e:
+            os.unlink(tmp)
+            raise RuntimeError(
+                f"fenced: version {version} already committed by another writer"
+            ) from e
+        os.unlink(tmp)
 
     # -- read paths ----------------------------------------------------------
 

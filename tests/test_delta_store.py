@@ -1106,3 +1106,128 @@ def test_schema_evolution_add_column(spark, tmp_path):
     assert {
         r.k: (r.n, r.m) for r in store.read_state(spark).collect()
     }["a"] == (100, 9)
+
+
+# -- driver-side (arrow) compaction vs the Spark compaction --------------------
+
+
+def _compacting_engine(spark, root, max_rows, key_type, tagged=False):
+    """delta_commits=2 with the change feed on: compactions at v3, v6."""
+    from surge_spark.streaming.command_engine import CommandEngine
+
+    store = SnapshotStore(
+        str(root), key_col="aggregate_id", num_buckets=4,
+        delta_commits=2, change_feed=True,
+    )
+
+    def process(state, cmd):
+        op = "del" if cmd.get("kind") == "del" else "add"
+        return ([{"aggregate_id": cmd["aggregate_id"], "op": op}], False)
+
+    def handle(state, ev):
+        if ev.get("op") == "del":
+            return None  # tombstone
+        k = ev["aggregate_id"]  # the engine stamps events with str(key)
+        return {
+            "aggregate_id": int(k) if key_type == "long" else k,
+            "n": (state["n"] if state else 0) + 1,
+            "score": ((state["score"] if state else 0.0) + 0.5),
+            "flag": True,
+            "tag": "t",  # written only when the schema declares it
+        }
+
+    schema = f"aggregate_id {key_type}, n long, score double, flag boolean"
+    eng = CommandEngine(
+        store, process, handle,
+        schema + (", tag string" if tagged else ""),
+        "aggregate_id string, op string",
+        order_cols=["command_id"], fold_partitions=2,
+        driver_commit_max_rows=max_rows,
+    )
+    return store, eng
+
+
+def _compaction_stream(key):
+    """Eight batches: a NULL command key, k1 tombstoned then recreated
+    across a compaction, k2 tombstoned then recreated within one delta
+    chain, k3 deleted by a compacting batch."""
+    return [
+        [(key(i % 7), "add", f"c0-{i}") for i in range(20)],
+        [(key(1), "del", "c1-0"), (key(9), "add", "c1-1"), (None, "add", "c1-2")],
+        [(key(i % 5), "add", f"c2-{i}") for i in range(10)],
+        [(key(1), "add", "c3-0"), (key(3), "del", "c3-1"), (key(8), "add", "c3-2")],
+        [(key(2), "del", "c4-0"), (key(6), "add", "c4-1")],
+        [(key(2), "add", "c5-0"), (key(5), "del", "c5-1"), (key(1), "add", "c5-2")],
+        [(key(i % 8), "add", f"c6-{i}") for i in range(12)],
+        [(key(4), "add", "c7-0"), (key(10), "add", "c7-1")],
+    ]
+
+
+def _compaction_reads(spark, store, keys):
+    key = repr
+    m = store._manifest(store.latest_version())
+    return {
+        "state": sorted((tuple(r) for r in store.read_state(spark).collect()), key=key),
+        "get": [store.get_state(spark, k) for k in keys],
+        "points": store._multi_point_read_arrow(m, keys),
+        "changes": sorted((tuple(r) for r in store.read_changes(spark, 0).collect()), key=key),
+        "events": sorted((tuple(r) for r in store.read_events(spark).collect()), key=key),
+    }
+
+
+@pytest.mark.parametrize("case", ["string", "long", "drift"])
+def test_arrow_compaction_equals_spark_compaction(spark, tmp_path, case):
+    """Cross-mode pin: the same command stream through the arrow-compacted
+    store (default) and the Spark-compacted one (driver_commit_max_rows=0,
+    which bounds the driver compaction to zero rows) reads identically:
+    read_state, get_state, the arrow point read, read_changes over a range
+    spanning both compactions, read_events, and the replies. ``drift``
+    widens the state schema mid-chain: that compaction must run on Spark
+    in both stores, with its reason recorded."""
+    key_type = "long" if case == "long" else "string"
+    key = (lambda i: i) if case == "long" else (lambda i: f"k{i}")
+    batches = _compaction_stream(key)
+    cmd_schema = f"aggregate_id {key_type}, kind string, command_id string"
+    out = {}
+    for mode, max_rows in (("arrow", 65536), ("spark", 0)):
+        root = tmp_path / mode
+        store, eng = _compacting_engine(spark, root, max_rows, key_type)
+        for i, rows in enumerate(batches):
+            if case == "drift" and i == 5:
+                _, eng = _compacting_engine(spark, root, max_rows, key_type, tagged=True)
+                eng.store = store
+            eng.process_batch(
+                spark.createDataFrame(rows, cmd_schema), f"b{i}",
+                replies_dir=str(tmp_path / f"{mode}-replies" / f"batch={i}"),
+            )
+        manifests = [store._manifest(v) for v in range(len(batches))]
+        assert [v for v, m in enumerate(manifests) if "state_deltas" not in m] == [0, 3, 6]
+        for v in (3, 6):
+            m = manifests[v]
+            if case == "drift" and v == 6:
+                assert m["writes"] == "spark" and "schema" in m["fallback"], m
+            elif mode == "spark":
+                assert m["writes"] == "spark" and "bound" in m["fallback"], m
+            else:
+                assert m["writes"] == "driver" and "fallback" not in m, m
+        keys = [str(key(i)) for i in range(12)]
+        out[mode] = _compaction_reads(spark, store, keys)
+        out[mode]["replies"] = sorted(
+            (r.batch_id, r.command_id, r.status)
+            for r in spark.read.parquet(str(tmp_path / f"{mode}-replies")).collect()
+        )
+    for part in out["arrow"]:
+        assert out["arrow"][part] == out["spark"][part], part
+    # the stream's intended end state, independent of either mode: per
+    # key, "del" drops the state and "add" counts from empty state
+    want: dict = {}
+    for rows in batches:
+        for k, kind, _ in rows:
+            if k is not None and kind == "del":
+                want.pop(k, None)
+            elif k is not None:
+                want[k] = want.get(k, 0) + 1
+    assert {r[0]: r[1] for r in out["arrow"]["state"]} == want
+    assert len(out["arrow"]["replies"]) == sum(map(len, batches))
+    if case == "drift":
+        assert {r[4] for r in out["arrow"]["state"]} == {None, "t"}
