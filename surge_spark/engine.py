@@ -196,13 +196,12 @@ class SurgeEngine:
             keys_hint=[r[self._model.key_col] for r in rows],
         )
         assert result is not None  # uuid cannot collide with committed ids
-        _, _, replies = result
-        by_id = {r.command_id: r for r in replies.collect()}
+        by_id = {r["command_id"]: r for r in result.rows("replies")}
         out = []
         for command_id in ids:
             r = by_id[command_id]
-            state = json.loads(r.new_state) if r.new_state else None
-            out.append(CommandResult(r.status, state, command_id))
+            state = json.loads(r["new_state"]) if r["new_state"] else None
+            out.append(CommandResult(r["status"], state, command_id))
         return out
 
     # -- internals -------------------------------------------------------
@@ -233,10 +232,9 @@ class SurgeEngine:
             keys_hint=[row[self._model.key_col]],
         )
         assert result is not None  # uuid cannot collide with committed ids
-        _, _, replies = result
-        reply = replies.where(replies.command_id == command_id).collect()[0]
-        state = json.loads(reply.new_state) if reply.new_state else None
-        return CommandResult(reply.status, state, command_id)
+        reply = next(r for r in result.rows("replies") if r["command_id"] == command_id)
+        state = json.loads(reply["new_state"]) if reply["new_state"] else None
+        return CommandResult(reply["status"], state, command_id)
 
     def _apply_events(self, aggregate_id: str, events: list[dict]) -> dict | None:
         state = self._store.get_state(self._spark, aggregate_id)

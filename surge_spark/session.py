@@ -25,6 +25,40 @@ ROCKSDB_PROVIDER = "org.apache.spark.sql.execution.streaming.state.RocksDBStateS
 _SHIPPED: set[str] = set()
 
 
+def _package_zip(pkg_dir: str) -> str:
+    """Zip of the package's ``.py`` files under ``pkg_dir``, named by a
+    content hash of those files: a zip is reused only when it holds exactly
+    this tree's code, so two checkouts (or a recycled pid) can never ship
+    each other's modules. Written to a writer-unique temp name and renamed
+    into place, so a concurrent writer never sees a partial zip."""
+    import hashlib
+    import tempfile
+    import uuid
+    import zipfile
+
+    files = []
+    for root, dirs, names in os.walk(pkg_dir):
+        dirs.sort()
+        for fname in sorted(names):
+            if fname.endswith(".py"):
+                full = os.path.join(root, fname)
+                files.append((full, os.path.join("surge_spark", os.path.relpath(full, pkg_dir))))
+    digest = hashlib.sha256()
+    for full, rel in files:
+        with open(full, "rb") as f:
+            digest.update(rel.encode() + b"\0" + f.read() + b"\0")
+    zpath = os.path.join(
+        tempfile.gettempdir(), f"surge_spark_pkg_{digest.hexdigest()[:16]}.zip"
+    )
+    if not os.path.exists(zpath):
+        tmp = f"{zpath}.{uuid.uuid4().hex}.tmp"
+        with zipfile.ZipFile(tmp, "w") as zf:
+            for full, rel in files:
+                zf.write(full, rel)
+        os.replace(tmp, zpath)
+    return zpath
+
+
 def ensure_shipped(spark: SparkSession) -> None:
     """Make the surge_spark package importable on executor Python workers.
 
@@ -37,22 +71,7 @@ def ensure_shipped(spark: SparkSession) -> None:
     app_id = sc.applicationId
     if app_id in _SHIPPED:
         return
-    import tempfile
-    import zipfile
-
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    zpath = os.path.join(tempfile.gettempdir(), f"surge_spark_pkg_{os.getpid()}.zip")
-    if not os.path.exists(zpath):
-        with zipfile.ZipFile(zpath, "w") as zf:
-            for root, _dirs, files in os.walk(pkg_dir):
-                for fname in files:
-                    if not fname.endswith(".py"):
-                        continue
-                    full = os.path.join(root, fname)
-                    rel = os.path.join(
-                        "surge_spark", os.path.relpath(full, pkg_dir)
-                    )
-                    zf.write(full, rel)
+    zpath = _package_zip(os.path.dirname(os.path.abspath(__file__)))
     sc.addPyFile(zpath)
     _SHIPPED.add(app_id)
 
@@ -90,6 +109,19 @@ def get_spark(app_name: str = "surge_spark", cpus: int | None = None) -> SparkSe
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER)
+        # Streaming metadata logs (offsets, commits, the file source log,
+        # state checkpoints) through the FileSystem API instead of the
+        # default FileContext one, which exists for HDFS's atomic
+        # rename-without-overwrite and costs ~20 ms more per log write
+        # here (three writes per trigger). Safe because this factory only
+        # builds local[...] masters, and the snapshot store already
+        # requires a local POSIX file system (os.link fencing, os.rename
+        # publication).
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
         .config("spark.sql.shuffle.spill.compress", "true")
         .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
         .config("spark.ui.enabled", "false")

@@ -52,7 +52,7 @@ from pyspark.sql import types as T
 from ..session import ensure_shipped
 from ._prof import phase
 from .context import ContextCommandHandler, SurgeContext
-from .snapshot_store import DRIVER_COMMIT_MAX_ROWS, SnapshotStore
+from .snapshot_store import DRIVER_COMMIT_MAX_ROWS, LazyFrames, SnapshotStore
 
 # handler contracts (mirror AggregateProcessingModel.scala:18-34):
 #   process_command(state|None, cmd) -> (events: list[dict], rejected: bool)
@@ -119,6 +119,65 @@ def _handler_values(
     return vals
 
 
+class BatchResult:
+    """What ``process_batch`` returns for a batch it committed.
+
+    The per-side rows (``state``, ``events``, ``replies``, ``deletes``,
+    ``records``: the lists ``_split_sides`` yields) are held whenever they
+    exist: always on the driver fold, and on the distributed fold when the
+    commit collected them. They are None otherwise (a copy-on-write store,
+    or a fold output over ``driver_commit_max_rows``).
+
+    ``state_df``, ``events_df`` and ``replies_df`` are the typed frames. On
+    the driver fold they are built on first read, as local relations over
+    the held rows, and stay valid at any time. On the distributed fold they
+    are projections over the persisted fold cache, valid until the next
+    ``process_batch`` call on the engine.
+
+    Unpacks and indexes as ``(state_df, events_df, replies_df)``."""
+
+    def __init__(self, rows: dict | None, frames: Callable[[], dict]) -> None:
+        self._rows = rows
+        self._build = frames
+        self._frames: dict | None = None
+
+    def frames(self) -> dict:
+        """Every per-side frame (``_project_sides``), built once."""
+        if self._frames is None:
+            self._frames = self._build()
+        return self._frames
+
+    def _side(self, name: str) -> list | None:
+        return None if self._rows is None else self._rows[name]
+
+    state = property(lambda self: self._side("state"))
+    events = property(lambda self: self._side("events"))
+    replies = property(lambda self: self._side("replies"))
+    deletes = property(lambda self: self._side("deletes"))
+    records = property(lambda self: self._side("records"))
+    state_df = property(lambda self: self.frames()["state_df"])
+    events_df = property(lambda self: self.frames()["events_df"])
+    replies_df = property(lambda self: self.frames()["replies_df"])
+
+    def rows(self, side: str) -> list[dict]:
+        """One side (``"replies"`` or ``"events"``) as dicts: the held rows,
+        else the collected frame (its columns are the declared schema's,
+        so read optional fields with ``.get``)."""
+        held = self._side(side)
+        if held is not None:
+            return held
+        return [r.asDict() for r in self.frames()[f"{side}_df"].collect()]
+
+    def __iter__(self):
+        return iter((self.state_df, self.events_df, self.replies_df))
+
+    def __getitem__(self, i):
+        return tuple(self)[i]
+
+    def __len__(self) -> int:
+        return 3
+
+
 class CommandEngine:
     def __init__(
         self,
@@ -175,7 +234,9 @@ class CommandEngine:
         the driver (SnapshotStore._driver_compaction) only when the live
         deltas plus the touched base buckets hold at most this many rows,
         counted from the parquet footers; larger stores compact on Spark.
-        Set 0 to disable (driver-fold batches still append driver-side).
+        An append writes driver-side only when the batch's rows (state,
+        tombstones, events, replies, records) fit the bound too. Set 0 to
+        disable the driver-side writes of every non-empty commit.
 
         ``driver_fold_max_rows``: command batches at or under this row
         count run the ENTIRE fold driver-side (the read twin completing
@@ -632,11 +693,12 @@ class CommandEngine:
         batch_id: str,
         replies_dir: str | None,
         n_rows_hint: int | None = None,
-    ) -> tuple[DataFrame, DataFrame, DataFrame] | None:
+    ) -> BatchResult | None:
         """Driver-side fold fast path (see driver_fold_max_rows in
         __init__): the whole fold — state read, per-key handler run,
-        commit writes — in-process, zero wide Spark jobs. Returns the
-        process_batch result tuple, or None to fall back to the
+        commit writes — in-process, zero wide Spark jobs, and no DataFrame
+        unless the commit falls back to the Spark writes or a caller reads
+        a frame. Returns the process_batch result, or None to fall back to the
         distributed fold (which is the semantic source of truth; ANY
         gate failure or exception before the handlers run lands there).
         Handlers/side-effects run at-least-once either way, same as the
@@ -709,26 +771,30 @@ class CommandEngine:
                 self.context_mode,
                 tz,
             )
-        # local relation carrying the fold output: the typed frames below
-        # are the RETURN VALUE and the commit's exact fallback; the actual
-        # writes go driver-side through driver_sides
-        with phase("pb.df_frames"):
+        with phase("pb.df_split"):
+            ds = self._split_sides(
+                packed_rows, str(batch_id) if replies_dir is not None else None
+            )
+
+        def frames() -> dict:
+            # the typed frames, as projections over a local relation of the
+            # packed fold rows: read by a caller, or by the commit when it
+            # falls back to the Spark writes
             packed_local = arrow_frame(
                 spark,
                 [{"kind": k, "payload": p} for k, p in packed_rows],
                 PACKED_SCHEMA,
             )
-            sides = self._project_sides(packed_local, batch_id, replies_dir)
-            ds = self._split_sides(
-                packed_rows, str(batch_id) if replies_dir is not None else None
-            )
-        self._commit(sides, batch_id, replies_dir, ds)
+            return self._project_sides(packed_local, batch_id, replies_dir)
+
+        result = BatchResult(ds, frames)
+        self._commit(result, batch_id, replies_dir)
         # release the previous batch's fold cache, same lifecycle as the
         # distributed path; local-relation frames need no persist
         if self._prev_packed is not None:
             self._prev_packed.unpersist()
             self._prev_packed = None
-        return sides["state_df"], sides["events_df"], sides["replies_df"]
+        return result
 
     def process_batch(
         self,
@@ -738,11 +804,19 @@ class CommandEngine:
         fold_partitions: int | None = None,
         n_rows_hint: int | None = None,
         keys_hint: list | None = None,
-    ) -> tuple[DataFrame, DataFrame, DataFrame] | None:
+    ) -> BatchResult | None:
         """Process one micro-batch of commands; atomically commit and return
-        (state_updates, events, replies) — lazy frames over the batch's
-        cached fold output, valid until the NEXT process_batch call on this
-        engine (which releases the cache).
+        a ``BatchResult``. It unpacks as (state_updates, events, replies)
+        frames and holds the batch's per-side rows whenever they exist:
+        - driver fold: the rows always; the frames are built on first read,
+          as local relations over them, and stay valid at any time;
+        - distributed fold: the rows when the commit collected them (a
+          delta store, fold output within ``driver_commit_max_rows``); the
+          frames are lazy projections over the batch's cached fold output,
+          valid until the NEXT process_batch call on this engine (which
+          releases the cache).
+        Callers that only need the replies or events read the rows and run
+        no Spark job; without rows they collect the frames.
 
         ``replies_dir``: commit the ACK rows (stamped with ``batch_id``)
         directly into that directory — the streaming reply channel — so the
@@ -973,34 +1047,44 @@ class CommandEngine:
                     )
                 except Exception:  # noqa: BLE001 — Spark path is the truth
                     driver_sides = None
-        self._commit(sides, batch_id, replies_dir, driver_sides)
-        return sides["state_df"], sides["events_df"], sides["replies_df"]
+        result = BatchResult(driver_sides, lambda: sides)
+        self._commit(result, batch_id, replies_dir)
+        return result
 
     def _commit(
-        self,
-        sides: dict,
-        batch_id: str,
-        replies_dir: str | None,
-        driver_sides: dict | None,
+        self, result: BatchResult, batch_id: str, replies_dir: str | None
     ) -> None:
         """The one commit of a folded batch, shared by the driver fold and
         the distributed fold on every store mode. Every batch commits, even
         one that changed nothing: rejection-only and empty batches persist
         their ACKs (replies_for_batch recovery) and enter the R4 dedup set,
         so a foreachBatch replay can never re-fold them and re-run side
-        effects. An empty events, records or delta side writes no dir."""
+        effects. An empty events, records or delta side writes no dir.
+        The store writes ``result``'s rows driver-side when it can, and
+        builds its frames only when it takes the Spark writes."""
         nf = self.commit_target_files
+
+        def commit_frames() -> dict:
+            sides = result.frames()
+            return {
+                "events": sides["events_df"].coalesce(nf),
+                "state_updates": sides["state_df"].coalesce(nf),
+                "replies": sides["replies_to_commit"],
+                "delete_keys": sides["tombstones"],
+                "records": sides["records_df"].coalesce(nf) if self.context_mode else None,
+            }
+
         with phase("pb.commit"):
             self.store.commit(
-                sides["events_df"].coalesce(nf),
-                sides["state_df"].coalesce(nf),
+                None,
+                LazyFrames(
+                    commit_frames,
+                    ("events", "replies") + (("records",) if self.context_mode else ()),
+                ),
                 batch_id,
-                replies=sides["replies_to_commit"],
-                delete_keys=sides["tombstones"],
-                records=sides["records_df"].coalesce(nf) if self.context_mode else None,
                 updates_unique=True,  # the fold emits at most one state row/key
                 replies_dir=replies_dir,
-                driver_sides=driver_sides,
+                driver_sides=result._rows,
             )
 
     # -- streaming & serving -------------------------------------------------

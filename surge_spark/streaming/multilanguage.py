@@ -346,13 +346,12 @@ class MultilanguageGateway:
         )
         result = self.engine.process_batch(cmds, f"ml-{uuid.uuid4().hex}")
         assert result is not None  # fresh uuid batch id is never a replay
-        _, events_df, replies_df = result
-        reply = replies_df.collect()[0]
+        reply = result.rows("replies")[0]
         logged = tuple(
-            Event(str(aggregate_id), _unb64(r["payload"]))
-            for r in events_df.select("payload").collect()
+            Event(str(aggregate_id), _unb64(r.get("payload")))
+            for r in result.rows("events")
         )
-        if reply.status == "success":
+        if reply["status"] == "success":
             return ForwardCommandReply(
                 aggregate_id=str(aggregate_id),
                 is_success=True,
@@ -361,7 +360,7 @@ class MultilanguageGateway:
             )
         import json
 
-        msg = reply.rejection or reply.status
+        msg = reply["rejection"] or reply["status"]
         if isinstance(msg, str):
             try:
                 msg = json.loads(msg)

@@ -52,7 +52,9 @@ import threading
 import time
 import uuid
 import zlib
+from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -76,6 +78,20 @@ _BUCKET_MIRRORED_KEYS = (T.StringType, T.LongType, T.IntegerType, T.ShortType, T
 class _Declined(Exception):
     """A driver-side commit gate did not hold; the message is the reason
     recorded as the manifest's ``fallback``."""
+
+
+@dataclass(frozen=True)
+class LazyFrames:
+    """Every DataFrame argument of ``SnapshotStore.commit``, deferred: pass
+    it as ``state_updates`` (with ``events``, ``replies``, ``delete_keys``
+    and ``records`` left None) and ``build()`` runs only if the commit takes
+    the Spark writes. It returns a dict with the keys ``state_updates``,
+    ``events``, ``replies``, ``delete_keys`` and ``records``. ``sides``
+    names which of ``events``/``replies``/``records`` exist, which the
+    commit needs before it writes anything."""
+
+    build: Callable[[], dict]
+    sides: tuple[str, ...]
 
 
 def _reply_staging_path(final: str, token: str) -> str:
@@ -611,13 +627,20 @@ class SnapshotStore:
     ) -> tuple[int, bool, str]:
         """Write a delta-append commit's parquet sides driver-side from
         pre-collected rows. Returns (n_events, delta_written,
-        state_schema_json). Raises on ANY schema/value that doesn't coerce
-        exactly — the caller cleans up and falls back to the Spark writes.
-        An empty delta writes NO dir (no-change-no-write)."""
+        state_schema_json). Declines when the batch's rows exceed
+        ``ds["max_rows"]``, and raises on ANY schema/value that doesn't
+        coerce exactly — the caller cleans up and falls back to the Spark
+        writes. An empty delta writes NO dir (no-change-no-write)."""
         state_struct: T.StructType = ds["state_struct"]
         schema_json = state_struct.json()
         if not state_struct.fields and prev_manifest is not None:
             schema_json = prev_manifest.get("state_schema", schema_json)
+        bound = ds.get("max_rows", DRIVER_COMMIT_MAX_ROWS)
+        n_rows = sum(
+            len(ds.get(k) or []) for k in ("state", "deletes", "events", "replies", "records")
+        )
+        if n_rows > bound:
+            raise _Declined(f"append writes {n_rows} rows, over the {bound}-row bound")
         delta_struct = T.StructType(
             list(state_struct.fields) + [T.StructField("__deleted", T.BooleanType())]
         )
@@ -1031,7 +1054,7 @@ class SnapshotStore:
     def commit(
         self,
         events: DataFrame | None,
-        state_updates: DataFrame,
+        state_updates: DataFrame | LazyFrames,
         batch_id: str,
         replies: DataFrame | None = None,
         delete_keys: list | DataFrame | None = None,
@@ -1061,7 +1084,10 @@ class SnapshotStore:
         primitive schemas; any mismatch falls back to the Spark writes
         from the frames, which remain the semantic source of truth, and
         the manifest's ``fallback`` records why. The DataFrame params must
-        still be passed — they are the fallback.
+        still be passed — they are the fallback — either directly or as a
+        ``LazyFrames`` in ``state_updates``, which builds them only when the
+        fallback runs. An append takes the driver path only when the
+        batch's rows fit ``driver_sides["max_rows"]``.
         ``replies_dir``: publish the replies THERE instead of inside the
         version directory (and record that path in the manifest) — lets a
         streaming deployment's gateway reply channel be the commit's own
@@ -1087,6 +1113,14 @@ class SnapshotStore:
         """
         if str(batch_id) in self.committed_batch_ids():
             return False
+        lazy = state_updates if isinstance(state_updates, LazyFrames) else None
+        if lazy is not None:
+            # which sides exist is known now; the frames are built only on
+            # the Spark-writes branch below
+            events, replies, records = (
+                lazy if s in lazy.sides else None
+                for s in ("events", "replies", "records")
+            )
         prev = self.latest_version()
         version = (prev + 1) if prev is not None else 0
         prev_manifest = self._manifest(prev) if prev is not None else None
@@ -1217,6 +1251,15 @@ class SnapshotStore:
                 touched = set()
                 n_events = 0
         if not driver_written:
+            if lazy is not None:
+                frames = lazy.build()
+                state_updates, delete_keys = frames["state_updates"], frames["delete_keys"]
+                events, replies, records = (
+                    frames[s] if side is not None else None
+                    for s, side in (
+                        ("events", events), ("replies", replies), ("records", records)
+                    )
+                )
             if events is not None:
                 ev_obs = Observation()
                 ev_df = events.observe(ev_obs, F.count(F.lit(1)).alias("n"))
@@ -1235,7 +1278,6 @@ class SnapshotStore:
                     pool.submit(rec_df.write.mode("overwrite").parquet, records_path)
                 )
 
-        spark = state_updates.sparkSession
         delta_df: DataFrame | None = None
         if driver_written:
             # everything the merge plan would build (tombstone frame, delta
@@ -1245,6 +1287,7 @@ class SnapshotStore:
             state_schema_json = driver_schema_json
         else:
             with phase("commit.merge_plan"):
+                spark = state_updates.sparkSession
                 dele = self._keys_df(spark, delete_keys)
                 if dele is not None:
                     dele = dele.where(F.col(self.key_col).isNotNull())
@@ -1444,18 +1487,22 @@ class SnapshotStore:
         """Publish ``manifest``: the commit point. Written to a temp file,
         then hard-linked to the version's name — exclusive link = fencing:
         a concurrent writer of the same version fails here (R5 analog of
-        ProducerFencedException)."""
-        tmp = self._manifest_path(version) + ".tmp"
+        ProducerFencedException). The temp name is writer-unique, like every
+        other temp file of the store: a shared one would let two committers
+        of one version write the same inode, so the published manifest
+        could be the fenced writer's, or the winner's unlink could remove
+        the loser's file before its link."""
+        tmp = f"{self._manifest_path(version)}.{uuid.uuid4().hex}.tmp"
         with open(tmp, "w") as f:
             json.dump(manifest, f)
         try:
             os.link(tmp, self._manifest_path(version))
         except FileExistsError as e:
-            os.unlink(tmp)
             raise RuntimeError(
                 f"fenced: version {version} already committed by another writer"
             ) from e
-        os.unlink(tmp)
+        finally:
+            os.unlink(tmp)
 
     # -- read paths ----------------------------------------------------------
 

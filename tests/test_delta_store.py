@@ -656,6 +656,13 @@ def test_driver_commit_writes_equal_spark_path(spark, tmp_path):
     assert sorted((r.batch_id, r.command_id, r.status) for r in rep_d) == sorted(
         (r.batch_id, r.command_id, r.status) for r in rep_s
     )
+    # the two stores really took different writes: the bound of 0 sends
+    # every append through Spark, from the driver fold's lazily built frames
+    for v in (1, 2):
+        md, ms = s_drv._manifest(v), s_spk._manifest(v)
+        assert "state_deltas" in md and "state_deltas" in ms
+        assert md["writes"] == "driver" and "fallback" not in md, md
+        assert ms["writes"] == "spark" and "bound" in ms["fallback"], ms
 
 
 def test_driver_commit_falls_back_on_uncoercible_value(spark, tmp_path):

@@ -300,14 +300,26 @@ def test_point_submit_collects_exactly_one_reply(spark, tmp_path):
             collected_sizes.append(len(rows))
         return rows
 
+    held = []
+    orig_process = engine._engine.process_batch
+
+    def recording_process(*a, **k):
+        out = orig_process(*a, **k)
+        held.append(out.replies)
+        return out
+
     DataFrame.collect = counting_collect
+    engine._engine.process_batch = recording_process
     try:
         r = engine.aggregate_for("k3").send_command(kind="bump")
     finally:
         DataFrame.collect = orig_collect
+        del engine._engine.process_batch
     assert r.is_success and r.state["n"] == 2
-    # exactly one reply-frame collect, and it returned exactly one row
-    assert collected_sizes == [1]
+    # no reply frame is collected at all: the reply comes from the batch's
+    # own held rows, and those hold exactly this command's reply
+    assert collected_sizes == []
+    assert [[x["aggregate_id"] for x in rows] for rows in held] == [["k3"]]
 
 
 def test_submit_many_distributed_fold_at_scale(spark, tmp_path):
