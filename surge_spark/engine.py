@@ -112,7 +112,9 @@ class SurgeEngine:
         ``delta_commits``: the snapshot store's merge-on-read interval
         (SnapshotStore.__init__) — the facade's one-commit-per-command
         usage is exactly the workload the append path exists for; pass
-        ``None`` for pure copy-on-write commits.
+        ``None`` for copy-on-write commits, each a rewrite of the touched
+        buckets through the same driver rewrite and Spark fallback as a
+        compaction.
 
         ``change_feed``: record a COMPLETE change data feed (first/COW/
         compaction commits capture their own batch — append commits' delta

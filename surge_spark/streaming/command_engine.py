@@ -67,6 +67,8 @@ REPLY_SCHEMA = (
 RECORD_SCHEMA = "topic string, key string, value string"
 
 _INTEGRAL = (T.LongType, T.IntegerType, T.ShortType, T.ByteType)
+# key types the fold's output reads from a string spelling and casts
+_CAST_KEYS = _INTEGRAL + (T.DoubleType, T.FloatType)
 PACKED_SCHEMA = pa.schema([("kind", pa.string()), ("payload", pa.string())])
 
 
@@ -125,8 +127,8 @@ class BatchResult:
     The per-side rows (``state``, ``events``, ``replies``, ``deletes``,
     ``records``: the lists ``_split_sides`` yields) are held whenever they
     exist: always on the driver fold, and on the distributed fold when the
-    commit collected them. They are None otherwise (a copy-on-write store,
-    or a fold output over ``driver_commit_max_rows``).
+    commit collected them. They are None otherwise (a fold output over
+    ``driver_commit_max_rows``, or schemas the driver writes can't take).
 
     ``state_df``, ``events_df`` and ``replies_df`` are the typed frames. On
     the driver fold they are built on first read, as local relations over
@@ -189,7 +191,6 @@ class CommandEngine:
         key_col: str = "aggregate_id",
         order_cols: Sequence[str] = ("ts",),
         context_mode: bool = False,
-        commit_target_files: int = 1,
         fold_partitions: int | None = None,
         driver_commit_max_rows: int = DRIVER_COMMIT_MAX_ROWS,
         driver_fold_max_rows: int = 512,
@@ -208,11 +209,6 @@ class CommandEngine:
           events (persist_to_topic), raw producer records, side effects, a
           custom reply payload, or a rejection.
 
-        ``commit_target_files`` caps the file fan-in of each commit side
-        (events/state/replies/records). The default 1 fits command-sized
-        micro-batches (surge's 50 ms flush); raise it for backfill-sized
-        batches so the commit write isn't funneled through one task.
-
         ``fold_partitions`` right-sizes the fold's shuffle for micro-batch
         latency: groupBy.applyInArrow otherwise inherits
         spark.sql.shuffle.partitions (sized for the analytic queries — 32+),
@@ -230,13 +226,14 @@ class CommandEngine:
         measured ~0.2 s/job floor saved). Requires every engine schema to
         be arrow-writable primitives (checked once, cached); any per-batch
         value that doesn't coerce exactly falls back to the Spark path.
-        The same bound gates the compaction: a compacting commit merges on
-        the driver (SnapshotStore._driver_compaction) only when the live
-        deltas plus the touched base buckets hold at most this many rows,
-        counted from the parquet footers; larger stores compact on Spark.
-        An append writes driver-side only when the batch's rows (state,
-        tombstones, events, replies, records) fit the bound too. Set 0 to
-        disable the driver-side writes of every non-empty commit.
+        Every commit writes driver-side only when the batch's rows (state,
+        tombstones, events, replies, records) fit the bound, on every
+        store mode. A rewriting commit (a store's first commit, every
+        copy-on-write commit, a merge-on-read compaction) merges on the
+        driver (SnapshotStore._driver_rewrite) only when the live deltas
+        plus the touched base buckets fit it too, counted from the parquet
+        footers; larger stores rewrite on Spark. Set 0 to disable the
+        driver-side writes of every non-empty commit.
 
         ``driver_fold_max_rows``: command batches at or under this row
         count run the ENTIRE fold driver-side (the read twin completing
@@ -254,8 +251,8 @@ class CommandEngine:
         back with unknown outputPartitioning, so EnsureRequirements
         re-inserts Exchange hashpartitioning under the fold regardless
         (verified on the executed plan; OSS Spark has no assume-
-        partitioned hint for file sources). Delta-commit stores only;
-        strict gates (arrow-writable schemas, arrow-readable key type),
+        partitioned hint for file sources). Strict gates (arrow-writable
+        schemas, arrow-readable key type),
         and ANY failure before the handlers run falls back to the
         distributed fold — which remains the semantic source of truth,
         pinned equal by cross-mode tests. Set 0 to disable."""
@@ -267,9 +264,6 @@ class CommandEngine:
         self.key_col = key_col
         self.order_cols = list(order_cols)
         self.context_mode = context_mode
-        if commit_target_files < 1:
-            raise ValueError(f"commit_target_files must be >= 1, got {commit_target_files}")
-        self.commit_target_files = commit_target_files
         if fold_partitions is not None and fold_partitions < 1:
             raise ValueError(f"fold_partitions must be >= 1, got {fold_partitions}")
         self.fold_partitions = fold_partitions
@@ -327,20 +321,9 @@ class CommandEngine:
             self._driver_structs_cache = False
             return None
 
-    def _collect_driver_sides(
-        self, packed: DataFrame, stamp_batch_id: str | None
-    ) -> dict:
-        """Collect the cached fold output (one cheap job over cached
-        blocks) and split it into per-side row dicts for
-        SnapshotStore._driver_commit_writes. Raises on anything
-        unexpected — the caller falls back to the Spark commit path."""
-        return self._split_sides(
-            ((r[0], r[1]) for r in packed.collect()), stamp_batch_id
-        )
-
     def _split_sides(self, pairs, stamp_batch_id: str | None) -> dict:
         """Split (kind, payload-json) fold rows into the per-side dict
-        SnapshotStore._driver_commit_writes takes — shared by the
+        SnapshotStore.commit takes as ``driver_sides`` — shared by the
         collect-the-distributed-fold path and the driver-side fold."""
         structs = self._driver_structs()
         assert structs is not None
@@ -402,21 +385,47 @@ class CommandEngine:
         (projections over a local relation of the in-memory rows)."""
         state_key_col = self.store.key_col
 
-        def unpack(kind: str, schema: str) -> DataFrame:
+        def unpack(kind: str, schema) -> DataFrame:
             return (
                 packed.where(F.col("kind") == kind)
                 .select(F.from_json("payload", schema).alias("r"))
                 .select("r.*")
             )
 
-        state_df = unpack("state", self.state_schema)
+        def keyed(ddl: str):
+            # the store key column takes the tombstone-key rule: read as a
+            # string and cast to its declared type. The engine stamps every
+            # event with str(key), and a handler may copy that into the
+            # state; from_json would null such a key in a numeric field
+            # (and the commit's null-key gate then drops the row), where
+            # the cast parses it, and under ANSI fails the batch on a
+            # spelling that isn't a number
+            struct = T._parse_datatype_string(f"struct<{ddl}>")
+            dt = {f.name: f.dataType for f in struct.fields}.get(state_key_col)
+            if not isinstance(dt, _CAST_KEYS):
+                return struct, lambda df: df
+            read = T.StructType([
+                T.StructField(f.name, T.StringType()) if f.name == state_key_col else f
+                for f in struct.fields
+            ])
+            return read, lambda df: df.withColumn(
+                state_key_col, F.col(state_key_col).cast(dt)
+            )
+
+        state_read, state_cast = keyed(self.state_schema)
+        state_df = state_cast(unpack("state", state_read))
         # events are wrapped {"event": ..., "topic": ...}: topic is the
         # persist_to_topic routing column (null = default events output)
-        events_df = (
+        event_read, event_cast = keyed(self.event_schema)
+        events_df = event_cast(
             packed.where(F.col("kind") == "event")
             .select(
                 F.from_json(
-                    "payload", f"event struct<{self.event_schema}>, topic string"
+                    "payload",
+                    T.StructType([
+                        T.StructField("event", event_read),
+                        T.StructField("topic", T.StringType()),
+                    ]),
                 ).alias("r")
             )
             .select("r.event.*", F.col("r.topic").alias("_topic"))
@@ -428,7 +437,7 @@ class CommandEngine:
         tombstones = packed.where(F.col("kind") == "tombstone").select(
             F.get_json_object("payload", f"$.{state_key_col}").alias(state_key_col)
         )
-        replies_to_commit = replies_df.coalesce(self.commit_target_files)
+        replies_to_commit = replies_df.coalesce(1)
         if replies_dir is not None:
             # stamp batch_id so the gateway can dedup/trace, same as the
             # old per-batch rewrite did
@@ -504,8 +513,12 @@ class CommandEngine:
                 state = {f: first[f"__state__{f}"] for f in state_fields}
             if order and len(idx) > 1:
                 idx = sorted(idx, key=order_key)
+            k = first[key_col]
             s, e, r, d, recs = CommandEngine._handle_group(
-                str(first[key_col]),
+                # a NULL numeric key reaches handlers as NaN: its stamp is
+                # null, not "nan", which the key casts would reject (a
+                # NULL string key keeps its "None" spelling)
+                str(k) if k == k else None,
                 state,
                 [rows[i] for i in idx],
                 store_key_col,
@@ -518,7 +531,7 @@ class CommandEngine:
 
     @staticmethod
     def _handle_group(
-        key: str,
+        key: str | None,
         state: dict | None,
         cmds: list[dict],
         store_key_col: str,
@@ -703,7 +716,7 @@ class CommandEngine:
         gate failure or exception before the handlers run lands there).
         Handlers/side-effects run at-least-once either way, same as the
         distributed path's replay contract."""
-        if not (self.driver_fold_max_rows and self.store.delta_commits):
+        if not self.driver_fold_max_rows:
             return None
         if self._driver_structs() is None:
             return None
@@ -810,8 +823,8 @@ class CommandEngine:
         frames and holds the batch's per-side rows whenever they exist:
         - driver fold: the rows always; the frames are built on first read,
           as local relations over them, and stay valid at any time;
-        - distributed fold: the rows when the commit collected them (a
-          delta store, fold output within ``driver_commit_max_rows``); the
+        - distributed fold: the rows when the commit collected them (a fold
+          output within ``driver_commit_max_rows``); the
           frames are lazy projections over the batch's cached fold output,
           valid until the NEXT process_batch call on this engine (which
           releases the cache).
@@ -937,10 +950,11 @@ class CommandEngine:
         # The fold emits a tagged union of (kind, json payload) rows — one
         # row per output state/event/reply/tombstone — that stays DISTRIBUTED
         # end to end: the typed frames below are from_json projections of the
-        # persisted fold output, and the commit writes them executor-side.
-        # On a COW store row data never materializes on the driver (only the
-        # row count and the commit's touched-bucket ids do), so batch size
-        # is bounded by the cluster, not driver memory. Handler contract:
+        # persisted fold output, and the commit writes them executor-side
+        # unless the output fits driver_commit_max_rows. Above that bound
+        # row data never materializes on the driver (only the row count and
+        # the commit's touched-bucket ids do), so batch size is bounded by
+        # the cluster, not driver memory. Handler contract:
         # state/event dicts are JSON-serializable and the declared schemas
         # use JSON-native types (string/numeric/boolean; from_json also
         # parses ISO-format timestamp strings, which json.dumps(default=str)
@@ -1026,23 +1040,21 @@ class CommandEngine:
         # fold pass; the write jobs then scan cached blocks only.
         with phase("pb.materialize"):
             n_packed = packed.count()
-        # driver-safe batches on a delta store: collect the cached fold
-        # (one fast job over cached blocks) so the append commit can write
-        # all its parquet driver-side — zero Spark write jobs. A COW store
-        # rewrites buckets through Spark anyway, so its fold rows never
-        # reach the driver. Any failure here or any value that doesn't
-        # coerce exactly inside commit falls back to the Spark writes.
+        # driver-safe batches: collect the cached fold (one fast job over
+        # cached blocks) so the commit can write all its parquet
+        # driver-side — zero Spark write jobs. Any failure here or any
+        # value that doesn't coerce exactly inside commit falls back to the
+        # Spark writes.
         driver_sides = None
         if (
-            self.store.delta_commits
-            and self.driver_commit_max_rows
+            self.driver_commit_max_rows
             and n_packed <= self.driver_commit_max_rows
             and self._driver_structs() is not None
         ):
             with phase("pb.collect_rows"):
                 try:
-                    driver_sides = self._collect_driver_sides(
-                        packed,
+                    driver_sides = self._split_sides(
+                        ((r[0], r[1]) for r in packed.collect()),
                         str(batch_id) if replies_dir is not None else None,
                     )
                 except Exception:  # noqa: BLE001 — Spark path is the truth
@@ -1062,16 +1074,14 @@ class CommandEngine:
         effects. An empty events, records or delta side writes no dir.
         The store writes ``result``'s rows driver-side when it can, and
         builds its frames only when it takes the Spark writes."""
-        nf = self.commit_target_files
-
         def commit_frames() -> dict:
             sides = result.frames()
             return {
-                "events": sides["events_df"].coalesce(nf),
-                "state_updates": sides["state_df"].coalesce(nf),
+                "events": sides["events_df"].coalesce(1),
+                "state_updates": sides["state_df"].coalesce(1),
                 "replies": sides["replies_to_commit"],
                 "delete_keys": sides["tombstones"],
-                "records": sides["records_df"].coalesce(nf) if self.context_mode else None,
+                "records": sides["records_df"].coalesce(1) if self.context_mode else None,
             }
 
         with phase("pb.commit"):

@@ -142,26 +142,28 @@ class SnapshotStore:
         exact unbounded set.
 
         ``delta_commits``: merge-on-read mode. ``None`` (default) keeps the
-        copy-on-write commit: every commit reads the touched buckets, merges
-        survivors, and rewrites them. With ``delta_commits=N`` a commit
-        instead APPENDS its updates + tombstones as one flat per-version
-        delta directory (no read of previous state at all),
-        and every Nth commit folds the accumulated deltas into the base
-        buckets. Readers do a latest-wins merge
-        (``max_by`` over the delta ordinal) across base + deltas. A
-        compaction that receives the engine's ``driver_sides`` merges on the
-        driver with pyarrow (_driver_compaction) when the live deltas plus
-        the touched base buckets hold at most ``driver_sides["max_rows"]``
-        rows (the engine's ``driver_commit_max_rows``), the key is a string
-        or integral type, every delta has the commit's schema, and the
-        store is bucketed; otherwise it runs the Spark COW merge. Every
-        manifest records which (``writes``) and why not (``fallback``). This is
+        copy-on-write commit: every commit is a rewrite — it reads the
+        touched buckets, merges survivors, and rewrites them. With
+        ``delta_commits=N`` a commit instead APPENDS its updates +
+        tombstones as one flat per-version delta directory (no read of
+        previous state at all), and every Nth commit is a rewrite that
+        folds the accumulated deltas into the base buckets. Readers do a
+        latest-wins merge (``max_by`` over the delta ordinal) across base +
+        deltas. Every rewrite — a store's first commit, a copy-on-write
+        commit, a compaction — is the same merge: one that receives the
+        engine's ``driver_sides`` runs on the driver with pyarrow
+        (_driver_rewrite) when the batch, the live deltas and the touched
+        base buckets hold at most ``driver_sides["max_rows"]`` rows (the
+        engine's ``driver_commit_max_rows``), the key is a string or
+        integral type, and every delta has the commit's schema; otherwise
+        it runs the Spark merge. Every manifest records which (``writes``)
+        and why not (``fallback``). This is
         the reference's own shape — a Kafka transaction APPENDS events +
         state to topics and the KTable compacts in the background
         (KafkaProducerActorImpl.scala:421-453) — and the Delta/Hudi
         merge-on-read streaming-upsert pattern: at a 100 TB snapshot a
         1 s micro-batch cannot pay a read-merge-rewrite of every touched
-        bucket per commit (measured locally: the COW state write was
+        bucket per commit (measured locally: the Spark COW state write was
         1.1-1.35 s of a 2.5 s batch ack at 128 cmds/64 buckets); an append
         is O(batch) regardless of snapshot size, and compaction amortizes
         the rewrite over N batches.
@@ -458,12 +460,18 @@ class SnapshotStore:
         return pa.schema(fields)
 
     @staticmethod
-    def _coerce_row(d: dict, struct: T.StructType) -> dict:
+    def _coerce_row(d: dict, struct: T.StructType, key_col: str | None = None) -> dict:
         """JSON dict → typed row for the declared struct; raises on any
         value whose type doesn't already match (bool-for-int included —
         json gives real bools). Matching from_json EXACTLY on mismatches
         is not attempted: a raise here routes the whole batch to the Spark
-        path, so both engines only ever diverge into identical output."""
+        path, so both engines only ever diverge into identical output.
+
+        The store key column ``key_col`` follows the tombstone-key rule:
+        the engine stamps keys as strings, and the Spark path casts the
+        key from its string spelling, so an integral key column also takes
+        a str whose canonical spelling it is (``str(int(v)) == v``); any
+        other str raises and the Spark cast decides."""
         out = {}
         for f in struct.fields:
             v = d.get(f.name)
@@ -476,6 +484,8 @@ class SnapshotStore:
                     raise ValueError(f"{f.name}: {type(v).__name__} for string")
                 out[f.name] = v
             elif dt in (T.LongType, T.IntegerType, T.ShortType, T.ByteType):
+                if f.name == key_col and isinstance(v, str) and str(int(v)) == v:
+                    v = int(v)
                 if isinstance(v, bool) or not isinstance(v, int):
                     raise ValueError(f"{f.name}: {type(v).__name__} for integral")
                 out[f.name] = v
@@ -529,7 +539,7 @@ class SnapshotStore:
         rows: list[dict] = []
         seen_keys: set = set()
         for d in ds.get("state") or []:
-            r = self._coerce_row(d, state_struct)
+            r = self._coerce_row(d, state_struct, self.key_col)
             if r.get(self.key_col) is None:
                 continue
             if not updates_unique:
@@ -552,7 +562,7 @@ class SnapshotStore:
                 # key — see the null-key gate on state rows above); the
                 # Spark path drops them identically via its null-filtered
                 # delete join. Mirrored comment at the fold-row packer in
-                # command_engine._collect_sides.
+                # command_engine._split_sides.
                 continue
             if not isinstance(k, str):
                 raise ValueError("tombstone keys must arrive stringified")
@@ -582,7 +592,9 @@ class SnapshotStore:
         error leaves nothing to clean up beyond what the caller rmtree's."""
         sides: dict = {"events": None, "replies": None, "records": None}
         if events_path is not None and ds.get("events") is not None:
-            sides["events"] = [self._coerce_row(d, ds["events_struct"]) for d in ds["events"]]
+            sides["events"] = [
+                self._coerce_row(d, ds["events_struct"], self.key_col) for d in ds["events"]
+            ]
         if replies_path is not None:
             sides["replies"] = [
                 self._coerce_row(d, ds["replies_struct"])
@@ -615,6 +627,20 @@ class SnapshotStore:
             self._arrow_write_dir(records_path, sides["records"], ds["records_struct"])
         return n_events
 
+    @staticmethod
+    def _batch_within_bound(ds: dict) -> int:
+        """The driver-write row bound ``ds["max_rows"]``, after declining
+        when the batch's own rows (state, tombstones, events, replies,
+        records) exceed it — so a bound of 0 sends every non-empty commit
+        to the Spark writes."""
+        bound = ds.get("max_rows", DRIVER_COMMIT_MAX_ROWS)
+        n_rows = sum(
+            len(ds.get(k) or []) for k in ("state", "deletes", "events", "replies", "records")
+        )
+        if n_rows > bound:
+            raise _Declined(f"the batch holds {n_rows} rows, over the {bound}-row bound")
+        return bound
+
     def _driver_commit_writes(
         self,
         ds: dict,
@@ -635,12 +661,7 @@ class SnapshotStore:
         schema_json = state_struct.json()
         if not state_struct.fields and prev_manifest is not None:
             schema_json = prev_manifest.get("state_schema", schema_json)
-        bound = ds.get("max_rows", DRIVER_COMMIT_MAX_ROWS)
-        n_rows = sum(
-            len(ds.get(k) or []) for k in ("state", "deletes", "events", "replies", "records")
-        )
-        if n_rows > bound:
-            raise _Declined(f"append writes {n_rows} rows, over the {bound}-row bound")
+        self._batch_within_bound(ds)
         delta_struct = T.StructType(
             list(state_struct.fields) + [T.StructField("__deleted", T.BooleanType())]
         )
@@ -655,19 +676,20 @@ class SnapshotStore:
         )
         return n_events, delta_written, schema_json
 
-    # -- driver-side compaction -----------------------------------------------
+    # -- driver-side rewrite ---------------------------------------------------
 
-    # the rewrite twin of the driver-side append: a compaction of a
-    # micro-batch-sized store (cmd-stream: 16 deltas of 128 keys over a
-    # 4096-key, 16-bucket base) merges a few thousand rows, yet the Spark
-    # plan (_fold_backlog aggregate, _cow_merge collect job and anti-join,
-    # bucket-repartitioned write) cost ~1.7-2.0 s of one trigger in 17.
-    # Same latest-wins merge with pyarrow on the driver, gated on the
-    # rows it reads; the Spark compaction stays the one fallback.
-    def _driver_compaction(
+    # the rewrite twin of the driver-side append: a rewriting commit of a
+    # micro-batch-sized batch (cmd-stream's compaction: 16 deltas of 128
+    # keys over a 4096-key, 16-bucket base) merges a few thousand rows, yet
+    # the Spark plan (_fold_backlog aggregate, _cow_merge collect job and
+    # anti-join, bucket-repartitioned write) cost ~1.7-2.0 s of one trigger
+    # in 17. Same latest-wins merge with pyarrow on the driver, gated on
+    # the rows it reads; the Spark rewrite stays the one fallback.
+    def _driver_rewrite(
         self,
         ds: dict,
-        prev_manifest: dict,
+        nb: int,
+        base_map: dict[str, str],
         prev_deltas: list[dict],
         state_path: str,
         changes_path: str | None,
@@ -679,10 +701,13 @@ class SnapshotStore:
         """Fold every live delta plus this batch into the touched base
         buckets with pyarrow and write one parquet file per touched bucket
         under ``state_path/__bucket=N`` — the layout the Spark write
-        produces. Returns (n_events, state_schema_json, touched bucket
-        ids). Raises _Declined before reading anything big when a gate
-        fails, and anything else on a value or file that doesn't map
-        exactly; the caller cleans up and runs the Spark compaction."""
+        produces. One merge for every rewriting commit: a compaction folds
+        its deltas, a copy-on-write commit has none, and a first commit
+        merges against an empty ``base_map``. Returns
+        (n_events, state_schema_json, touched bucket ids). Raises
+        _Declined before reading anything big when a gate fails, and
+        anything else on a value or file that doesn't map exactly; the
+        caller cleans up and runs the Spark rewrite."""
         import pyarrow as pa
         import pyarrow.compute as pc
 
@@ -700,7 +725,7 @@ class SnapshotStore:
         target = self._arrow_write_schema(state_struct)
         cols = target.names
         delta_schema = target.append(pa.field("__deleted", pa.bool_()))
-        bound = ds.get("max_rows", DRIVER_COMMIT_MAX_ROWS)
+        bound = self._batch_within_bound(ds)
         live = sorted(
             (e["path"] for e in prev_deltas if os.path.isdir(e["path"])),
             key=self._delta_version,
@@ -734,15 +759,13 @@ class SnapshotStore:
         winners = changes.take(pa.array(sorted(last.values()), pa.int64()))
         keep = pc.invert(winners.column("__deleted")).combine_chunks()
         upserts = winners.filter(keep).select(cols)
-        nb = self._num_buckets(prev_manifest)
         win_buckets = [self._bucket_of(k, nb) for k in winners.column(self.key_col).to_pylist()]
         upsert_buckets = pa.array(win_buckets, pa.int32()).filter(keep)
         touched = {str(b) for b in win_buckets}
-        base_map = prev_manifest["state_buckets"]
         base = {b: self._arrow_dataset(base_map[b]) for b in touched if b in base_map}
         n_read += sum(d.count_rows() for d in base.values())
         if n_read > bound:
-            raise _Declined(f"compaction reads {n_read} rows, over the {bound}-row bound")
+            raise _Declined(f"the rewrite reads {n_read} rows, over the {bound}-row bound")
         touched_keys = winners.column(self.key_col).combine_chunks()
         out = {}
         for b in sorted(touched, key=int):
@@ -955,9 +978,8 @@ class SnapshotStore:
         key = (self._session_key(spark), tuple(e["path"] for e in entries))
         return self._memo_dir_frame(spark, key, lambda: self._deltas_scan(spark, entries))
 
-    # the Spark compaction (_fold_backlog + _cow_merge + the bucketed
-    # write in commit) — the one fallback of _driver_compaction, and the
-    # COW store's rewrite
+    # the Spark rewrite (_fold_backlog + _cow_merge + the bucketed write in
+    # commit) — the one fallback of _driver_rewrite
     def _fold_backlog(
         self,
         spark: SparkSession,
@@ -1026,12 +1048,7 @@ class SnapshotStore:
             .collect()
         }
         paths = self._state_paths(prev_manifest)
-        if "__legacy__" in paths:
-            # legacy store: no bucket map — every key lives in the one
-            # unbucketed path, so the full snapshot is the merge input
-            prev_paths = [p for p in paths.values() if os.path.exists(p)]
-        else:
-            prev_paths = [paths[b] for b in touched if b in paths]
+        prev_paths = [paths[b] for b in touched if b in paths]
         if not prev_paths:
             return touched, state_updates
         prev_schema = T.StructType.fromJson(
@@ -1076,18 +1093,18 @@ class SnapshotStore:
         ``driver_sides``: pre-collected typed row dicts for every side
         (keys ``state``/``deletes``/``events``/``replies``/``records`` +
         their ``*_struct`` StructTypes) — the engine passes them for
-        driver-safe batch sizes so a delta-mode commit writes ALL its
-        parquet driver-side via pyarrow (zero Spark write jobs; measured
-        ~0.2 s/job floor): an append writes its delta, a compaction merges
-        the deltas into the touched buckets (_driver_compaction, gated on
-        ``driver_sides["max_rows"]``). Honored only with exactly-coercible
-        primitive schemas; any mismatch falls back to the Spark writes
-        from the frames, which remain the semantic source of truth, and
-        the manifest's ``fallback`` records why. The DataFrame params must
+        driver-safe batch sizes so the commit writes ALL its parquet
+        driver-side via pyarrow (zero Spark write jobs; measured ~0.2 s/job
+        floor): an append writes its delta, a rewriting commit (first,
+        copy-on-write or compacting) merges into the touched buckets
+        (_driver_rewrite). Honored only when the batch fits
+        ``driver_sides["max_rows"]`` and every schema is exactly-coercible
+        primitives; any mismatch falls back to the Spark writes from the
+        frames, which remain the semantic source of truth, and the
+        manifest's ``fallback`` records why. The DataFrame params must
         still be passed — they are the fallback — either directly or as a
         ``LazyFrames`` in ``state_updates``, which builds them only when the
-        fallback runs. An append takes the driver path only when the
-        batch's rows fit ``driver_sides["max_rows"]``.
+        fallback runs.
         ``replies_dir``: publish the replies THERE instead of inside the
         version directory (and record that path in the manifest) — lets a
         streaming deployment's gateway reply channel be the commit's own
@@ -1106,10 +1123,6 @@ class SnapshotStore:
         update frames are deduped (arbitrary survivor); callers needing
         ordered latest-per-key semantics should pre-fold with
         operators.eventsourcing.latest_per_key (A2).
-
-        A store written by the pre-bucketing layout (manifest key ``state``
-        instead of ``state_buckets``) is migrated on its first commit here:
-        the full legacy snapshot is read, merged, and rewritten bucketed.
         """
         if str(batch_id) in self.committed_batch_ids():
             return False
@@ -1141,14 +1154,7 @@ class SnapshotStore:
         # between manifest link and rename, replies_for_batch self-heals by
         # finishing the rename (staging name is derived, not random).
         prev_buckets: dict[str, str] = (
-            dict(prev_manifest.get("state_buckets", {})) if prev_manifest else {}
-        )
-        # pre-bucketing layout: single unbucketed state path — migrate by
-        # merging the WHOLE legacy snapshot into this commit's bucketed write
-        legacy_state = (
-            prev_manifest.get("state")
-            if prev_manifest is not None and "state_buckets" not in prev_manifest
-            else None
+            dict(self._state_paths(prev_manifest)) if prev_manifest else {}
         )
         prev_deltas: list[dict] = (
             list(prev_manifest.get("state_deltas", [])) if prev_manifest else []
@@ -1156,12 +1162,11 @@ class SnapshotStore:
         # merge-on-read: append a delta while fewer than delta_commits have
         # accumulated; the commit that would exceed the cap (or any commit
         # by a non-delta-mode writer against a store with pending deltas)
-        # compacts instead — folds every delta plus this batch into the COW
-        # merge below, so the base buckets and delta list reset together.
+        # compacts instead — folds every delta plus this batch into the
+        # rewrite below, so the base buckets and delta list reset together.
         delta_write = (
             bool(self.delta_commits)
             and prev_manifest is not None
-            and legacy_state is None
             and len(prev_deltas) < self.delta_commits
         )
         replies_external = replies_dir is not None
@@ -1197,9 +1202,9 @@ class SnapshotStore:
         changes_path = os.path.join(vdir, "changes")
         delta_path = os.path.join(vdir, "state-delta")
         # driver-side small-batch writes (the write twin of the arrow point
-        # read): a delta append writes its delta, a compaction folds the
-        # deltas into the touched base buckets (_driver_compaction), and
-        # both write events/replies/records — only when every gate holds
+        # read): a delta append writes its delta, a rewrite folds the batch
+        # and any deltas into the touched base buckets (_driver_rewrite),
+        # and both write events/replies/records — only when every gate holds
         # and every value coerces exactly. Any decline or failure cleans
         # its partial dirs, is recorded as the manifest's ``fallback``, and
         # falls back to the Spark write jobs below, which are the source of
@@ -1221,15 +1226,9 @@ class SnapshotStore:
                             prev_manifest, updates_unique=updates_unique,
                         )
                     )
-                elif not self.delta_commits:
-                    raise _Declined("copy-on-write store")
-                elif prev_manifest is None:
-                    raise _Declined("first commit")
-                elif legacy_state is not None:
-                    raise _Declined("legacy layout")
                 else:
-                    n_events, driver_schema_json, touched = self._driver_compaction(
-                        driver_sides, prev_manifest, prev_deltas,
+                    n_events, driver_schema_json, touched = self._driver_rewrite(
+                        driver_sides, nb, prev_buckets, prev_deltas,
                         state_path, changes_path if self.change_feed else None,
                         ev_p, rep_p, rec_p, updates_unique,
                     )
@@ -1346,9 +1345,10 @@ class SnapshotStore:
                     # O(buckets) files to write, list, and scan. Point
                     # reads scan base-bucket + every live delta — bounded
                     # by delta_commits tiny dirs; compaction restores the
-                    # fully bucketed layout. Backfill-sized batches should
-                    # use COW commits (delta_commits=None), where bucket
-                    # pruning pays.
+                    # fully bucketed layout. A copy-on-write store
+                    # (delta_commits=None) writes no deltas: every commit
+                    # is a bucketed rewrite, which suits backfill-sized
+                    # batches, where bucket pruning pays.
                     # same Observation treatment as events/records: an
                     # all-rejected / no-state-change batch must not append
                     # an empty delta dir for every future read to list
@@ -1508,12 +1508,15 @@ class SnapshotStore:
 
     @staticmethod
     def _state_paths(m: dict) -> dict[str, str]:
-        """Bucket→path map of a manifest; a legacy (pre-bucketing) manifest
-        exposes its single unbucketed path under a sentinel key so every
-        reader/vacuum works on both layouts."""
-        if "state_buckets" in m:
-            return m["state_buckets"]
-        return {"__legacy__": m["state"]} if m.get("state") else {}
+        """Bucket→path map of a manifest. Raises ValueError on a manifest
+        without one: the pre-bucketing layout (a single ``state`` path),
+        which no reader or writer of this store supports."""
+        if "state_buckets" not in m:
+            raise ValueError(
+                f"manifest v{m.get('version')} has no state_buckets: the "
+                "pre-bucketing store layout is not supported"
+            )
+        return m["state_buckets"]
 
     def read_state(
         self,
@@ -1691,14 +1694,11 @@ class SnapshotStore:
         buckets_map = self._state_paths(m)
         cands: dict[str, list] = {k: [] for k in typed}
         key_field = pads.field(self.key_col)
-        if "__legacy__" in buckets_map:
-            groups = {buckets_map["__legacy__"]: list(typed.values())}
-        else:
-            groups = {}
-            for k, v in typed.items():
-                bp = buckets_map.get(str(self._bucket_of(k, nb)))
-                if bp:
-                    groups.setdefault(bp, []).append(v)
+        groups: dict[str, list] = {}
+        for k, v in typed.items():
+            bp = buckets_map.get(str(self._bucket_of(k, nb)))
+            if bp:
+                groups.setdefault(bp, []).append(v)
         for path, vals in groups.items():
             if not os.path.isdir(path):
                 continue
@@ -1764,65 +1764,47 @@ class SnapshotStore:
         self, spark: SparkSession, m: dict, aggregate_id: str
     ) -> dict | None:
         """Spark-job point read — the fallback for key types/layouts the
-        arrow fast path doesn't cover; pinned equal to it by test."""
-        if m.get("state_deltas"):
-            # merge-on-read point read: base stays bucket-pruned; the flat
-            # deltas (micro-batch-sized, ≤ delta_commits of them) are
-            # scanned key-filtered. No latest-wins aggregate — at most one
-            # row per key per part comes back, so the max-ordinal pick
-            # happens driver-side on ≤ delta_commits+1 rows: ONE scan job,
-            # zero shuffles.
-            bucket = str(self._bucket_of(aggregate_id, int(m["num_buckets"])))
-            schema = T.StructType.fromJson(json.loads(m["state_schema"]))
-            cols = [f.name for f in schema.fields]
-            parts = []
-            base_path = m["state_buckets"].get(bucket)
-            if base_path is not None:
-                bkey = (self._session_key(spark), base_path, m["state_schema"], "pt")
-                base = self._memo_dir_frame(
-                    spark, bkey, lambda: spark.read.schema(schema).parquet(base_path)
-                )
-                parts.append(
-                    base.withColumn("__deleted", F.lit(False)).withColumn(
-                        "__v", F.lit(-1).cast("long")
-                    )
-                )
-            d = self._deltas_frame(spark, m["state_deltas"])
-            if d is not None:
-                parts.append(d)
-            if not parts:
-                return None
-            import functools
-
-            u = functools.reduce(
-                lambda a, b: a.unionByName(b, allowMissingColumns=True), parts
-            )
-            rows = u.where(
-                F.col(self.key_col).cast("string") == str(aggregate_id)
-            ).collect()
-            if not rows:
-                return None
-            best = max(rows, key=lambda r: r["__v"])
-            if best["__deleted"]:
-                return None
-            return {c: best[c] for c in cols}
-        if "state_buckets" in m:
-            bucket = self._bucket_of(aggregate_id, int(m["num_buckets"]))
-            path = m["state_buckets"].get(str(bucket))
-        else:
-            # legacy unbucketed layout: no pruning possible — full scan
-            path = m.get("state")
-        if path is None:
-            return None
+        arrow fast path doesn't cover; pinned equal to it by test. The base
+        stays bucket-pruned; the flat deltas (micro-batch-sized, ≤
+        delta_commits of them) are scanned key-filtered. No latest-wins
+        aggregate — at most one row per key per part comes back, so the
+        max-ordinal pick happens driver-side on ≤ delta_commits+1 rows: ONE
+        scan job, zero shuffles."""
+        buckets = self._state_paths(m)
+        bucket = str(self._bucket_of(aggregate_id, int(m["num_buckets"])))
         schema = T.StructType.fromJson(json.loads(m["state_schema"]))
-        rows = (
-            spark.read.schema(schema)
-            .parquet(path)
-            .where(F.col(self.key_col).cast("string") == str(aggregate_id))
-            .limit(1)
-            .collect()
+        cols = [f.name for f in schema.fields]
+        parts = []
+        base_path = buckets.get(bucket)
+        if base_path is not None:
+            bkey = (self._session_key(spark), base_path, m["state_schema"], "pt")
+            base = self._memo_dir_frame(
+                spark, bkey, lambda: spark.read.schema(schema).parquet(base_path)
+            )
+            parts.append(
+                base.withColumn("__deleted", F.lit(False)).withColumn(
+                    "__v", F.lit(-1).cast("long")
+                )
+            )
+        d = self._deltas_frame(spark, m.get("state_deltas", []))
+        if d is not None:
+            parts.append(d)
+        if not parts:
+            return None
+        import functools
+
+        u = functools.reduce(
+            lambda a, b: a.unionByName(b, allowMissingColumns=True), parts
         )
-        return rows[0].asDict() if rows else None
+        rows = u.where(
+            F.col(self.key_col).cast("string") == str(aggregate_id)
+        ).collect()
+        if not rows:
+            return None
+        best = max(rows, key=lambda r: r["__v"])
+        if best["__deleted"]:
+            return None
+        return {c: best[c] for c in cols}
 
     def replies_for_batch(self, spark: SparkSession, batch_id: str) -> DataFrame | None:
         """ACK rows committed with ``batch_id`` — lets a replayed batch

@@ -1,14 +1,16 @@
-"""Driver-side (pyarrow) compaction of merge-on-read stores.
+"""Driver-side (pyarrow) rewrites: compactions, copy-on-write commits
+and first commits.
 
-A delta-mode commit that compacts and receives the engine's collected
-rows folds every live delta plus the batch into the touched base buckets
-on the driver, writes one parquet file per touched bucket, and publishes
-the manifest through the unchanged fence. The Spark compaction is the one
-fallback. These pins cover: the write path every manifest records, the
-bucket math the driver placement relies on, and the commit's crash points
-(reopen reads the pre-commit version, a replay equals an uninterrupted
-run, vacuum reclaims the orphan). The cross-mode equality pin against the
-Spark compaction lives in test_delta_store.py (slow tier).
+A rewriting commit that receives the engine's collected rows folds every
+live delta (none on a copy-on-write store) plus the batch into the
+touched base buckets on the driver, writes one parquet file per touched
+bucket, and publishes the manifest through the unchanged fence. The
+Spark rewrite is the one fallback. These pins cover: the write path every
+manifest records, the bucket math the driver placement relies on, and the
+commit's crash points (reopen reads the pre-commit version, or none, a
+replay equals an uninterrupted run, vacuum reclaims the orphan). The
+cross-mode equality pin against the Spark rewrite lives in
+test_delta_store.py (slow tier).
 """
 
 from __future__ import annotations
@@ -34,10 +36,10 @@ def _handle(state, event):
     return {"aggregate_id": event["aggregate_id"], "n": (state["n"] if state else 0) + 1}
 
 
-def _store(root, buckets=8, change_feed=False):
+def _store(root, buckets=8, change_feed=False, delta_commits=2):
     return SnapshotStore(
         str(root), key_col="aggregate_id", num_buckets=buckets,
-        delta_commits=2, change_feed=change_feed,
+        delta_commits=delta_commits, change_feed=change_feed,
     )
 
 
@@ -92,35 +94,41 @@ def test_bucket_of_matches_spark_bucket_expr(spark):
         assert got == want, dtype
 
 
-def test_every_commit_records_its_write_path(spark, tmp_path):
-    """A cmd-stream-shaped run (128-command batches, delta_commits=2, two
-    compactions): every append and every compaction is written by the
-    driver with no fallback, the seed stays a plain Spark write, and the
-    compacted store reads the generator's tally."""
-    store = _store(tmp_path / "s")
-    _seed(spark, store, 512)
+@pytest.mark.parametrize("delta_commits", [2, None])
+def test_every_commit_records_its_write_path(spark, tmp_path, delta_commits):
+    """A cmd-stream-shaped run (128-command batches). Merge-on-read
+    (delta_commits=2, two compactions): every append and every compaction
+    is written by the driver with no fallback, and the seed stays a plain
+    Spark write. Copy-on-write (None, no seed): every commit, the first
+    included, is a driver rewrite with no fallback. The store reads the
+    generator's tally."""
+    store = _store(tmp_path / "s", delta_commits=delta_commits)
+    tally = {}
+    if delta_commits:
+        _seed(spark, store, 512)
+        tally = {str(k): 0 for k in range(512)}
+        assert _manifest(store, 0)["writes"] == "spark"
+        assert "fallback" not in _manifest(store, 0)
     batches = _batches(6, 128, 512)
     _run(spark, _engine(store), batches, str(tmp_path / "replies"))
-    assert _manifest(store, 0)["writes"] == "spark"
-    assert "fallback" not in _manifest(store, 0)
-    compactions = []
-    for v in range(1, 7):
+    rewrites = []
+    first = 1 if delta_commits else 0  # the seed is no engine commit
+    for v in range(first, store.latest_version() + 1):
         m = _manifest(store, v)
         assert m["writes"] == "driver" and "fallback" not in m, (v, m)
         if "state_deltas" not in m:
-            compactions.append(v)
-    assert compactions == [3, 6]
+            rewrites.append(v)
+    assert rewrites == ([3, 6] if delta_commits else [0, 1, 2, 3, 4, 5])
     # one file per rewritten bucket, in the Spark write's layout
-    m6 = _manifest(store, 6)
-    for b, p in m6["state_buckets"].items():
+    last = _manifest(store, store.latest_version())
+    for b, p in last["state_buckets"].items():
         assert p.endswith(f"/state/__bucket={b}")
         assert len([f for f in os.listdir(p) if f.endswith(".parquet")]) == 1
-    tally = {str(k): 0 for k in range(512)}
     for rows in batches:
         for k, _ in rows:
-            tally[k] += 1
+            tally[k] = tally.get(k, 0) + 1
     assert {r.aggregate_id: r.n for r in store.read_state(spark).collect()} == tally
-    got = store._multi_point_read_arrow(m6, list(tally))
+    got = store._multi_point_read_arrow(last, list(tally))
     assert {k: r["n"] for k, r in got.items()} == tally
 
 
@@ -198,8 +206,12 @@ def _replies(spark, root, batch):
     )
 
 
-def test_driver_compaction_crash_before_link_store_level(spark, tmp_path, monkeypatch):
-    """Fast-tier crash case: a store-level compaction with driver_sides dies
+@pytest.mark.parametrize("delta_commits", [2, None])
+def test_driver_compaction_crash_before_link_store_level(
+    spark, tmp_path, monkeypatch, delta_commits
+):
+    """Fast-tier crash case: a store-level rewrite with driver_sides (a
+    compaction at delta_commits=2, a copy-on-write commit at None) dies
     after every write but before the manifest link. A fresh reader sees
     version 2 (arrow reads, no Spark job); the replayed commit lands the
     merged state; vacuum reclaims the orphan."""
@@ -209,7 +221,7 @@ def test_driver_compaction_crash_before_link_store_level(spark, tmp_path, monkey
         [T.StructField("aggregate_id", T.StringType()), T.StructField("n", T.LongType())]
     )
     path = tmp_path / "s"
-    store = _store(path, buckets=4, change_feed=True)
+    store = _store(path, buckets=4, change_feed=True, delta_commits=delta_commits)
     store.commit(
         None, spark.createDataFrame([(str(k), 0) for k in range(8)], struct), "seed",
         updates_unique=True,
@@ -236,7 +248,7 @@ def test_driver_compaction_crash_before_link_store_level(spark, tmp_path, monkey
     (orphan,) = [d for d in os.listdir(path) if d.startswith("v000000000003-")]
     assert os.path.isdir(path / orphan / "state") and os.path.isdir(path / orphan / "changes")
 
-    fresh = _store(path, buckets=4, change_feed=True)
+    fresh = _store(path, buckets=4, change_feed=True, delta_commits=delta_commits)
     assert fresh.latest_version() == 2
     assert fresh._multi_point_read_arrow(fresh._manifest(2), keys) == before
     assert commit(fresh, "b3", [("3", 7), ("9", 2)], deletes=["1"])
@@ -252,45 +264,70 @@ def test_driver_compaction_crash_before_link_store_level(spark, tmp_path, monkey
 
 
 CRASH_POINTS = ["before_link", "first_bucket", "all_buckets"]
+# the rewrite each case crashes: (delta_commits, seeded, crashed batch)
+CRASH_CASES = {
+    "compaction": (2, True, 2),  # v3 folds two deltas into the seed
+    "cow": (None, True, 2),  # v3 rewrites a copy-on-write store
+    "first": (2, False, 0),  # v0, an engine's first commit
+}
 
 
 @pytest.mark.slow
+@pytest.mark.parametrize("case", list(CRASH_CASES))
 @pytest.mark.parametrize("point", CRASH_POINTS)
-def test_driver_compaction_crash_point(spark, tmp_path, monkeypatch, point):
-    """Kill the compacting commit at ``point``. A fresh reader sees the
-    pre-commit version in every read; replaying the batch id yields the
-    state, replies and change feed of an uninterrupted run; vacuum then
-    reclaims the crashed commit's orphaned version dir."""
+def test_driver_compaction_crash_point(spark, tmp_path, monkeypatch, point, case):
+    """Kill a rewriting commit at ``point``: a compaction, a copy-on-write
+    commit, or an engine's first commit. A fresh reader sees the
+    pre-commit version in every read, or no version at all; replaying the
+    batch id yields the state, replies and change feed of an uninterrupted
+    run; vacuum then reclaims the crashed commit's orphaned version dir."""
+    delta_commits, seeded, crash = CRASH_CASES[case]
+    v_crash = crash + 1 if seeded else crash
+
+    def open_store(root):
+        return _store(root, buckets=4, change_feed=True, delta_commits=delta_commits)
+
+    def new_store(root):
+        store = open_store(root)
+        if seeded:
+            _seed(spark, store, 32)
+        return store
+
     batches = _batches(3, 16, 32)
-    ref = _store(tmp_path / "ref", buckets=4, change_feed=True)
-    _seed(spark, ref, 32)
+    ref = new_store(tmp_path / "ref")
     _run(spark, _engine(ref), batches, str(tmp_path / "ref-replies"))
-    assert "state_deltas" not in ref._manifest(3) and ref._manifest(3)["writes"] == "driver"
+    end = ref.latest_version()
+    m = ref._manifest(v_crash)
+    assert "state_deltas" not in m and m["writes"] == "driver"
 
     path, replies = tmp_path / "s", str(tmp_path / "replies")
-    store = _store(path, buckets=4, change_feed=True)
-    _seed(spark, store, 32)
-    _run(spark, _engine(store), batches[:2], replies)
-    before = _reads(spark, store, 2)
+    store = new_store(path)
+    _run(spark, _engine(store), batches[:crash], replies)
+    before = _reads(spark, store, v_crash - 1) if v_crash else None
     log = _arm(monkeypatch, point)
     with pytest.raises(_Crash):
-        _run(spark, _engine(store), batches[2:], replies, start=2)
+        _run(spark, _engine(store), batches[crash:], replies, start=crash)
     monkeypatch.undo()
     if point != "before_link":
         assert any("/state/__bucket=" in p for p in log)
-    orphans = [d for d in os.listdir(path) if d.startswith("v000000000003-")]
+    orphans = [d for d in os.listdir(path) if d.startswith(f"v{v_crash:012d}-")]
     assert len(orphans) == 1
 
-    fresh = _store(path, buckets=4, change_feed=True)
-    assert _reads(spark, fresh, 2) == before
+    fresh = open_store(path)
+    if v_crash:
+        assert _reads(spark, fresh, v_crash - 1) == before
+    else:
+        assert fresh.latest_version() is None and fresh.read_state(spark) is None
+        assert fresh.get_state(spark, "0") is None
 
-    _run(spark, _engine(fresh), batches[2:], replies, start=2)
-    assert fresh._manifest(3)["writes"] == "driver"
-    got, want = _reads(spark, fresh, 3), _reads(spark, ref, 3)
+    _run(spark, _engine(fresh), batches[crash:], replies, start=crash)
+    assert fresh._manifest(v_crash)["writes"] == "driver"
+    got, want = _reads(spark, fresh, end), _reads(spark, ref, end)
     assert got["state"] == want["state"] and got["changes"] == want["changes"]
     assert got["events"] == want["events"] and got["points"] == want["points"]
-    assert _replies(spark, replies, 2) == _replies(spark, str(tmp_path / "ref-replies"), 2)
+    ref_replies = str(tmp_path / "ref-replies")
+    assert _replies(spark, replies, crash) == _replies(spark, ref_replies, crash)
 
     fresh.vacuum()
     assert not os.path.exists(path / orphans[0])
-    assert _reads(spark, _store(path, buckets=4, change_feed=True), 3)["state"] == want["state"]
+    assert _reads(spark, open_store(path), end)["state"] == want["state"]

@@ -1118,13 +1118,17 @@ def test_schema_evolution_add_column(spark, tmp_path):
 # -- driver-side (arrow) compaction vs the Spark compaction --------------------
 
 
-def _compacting_engine(spark, root, max_rows, key_type, tagged=False):
-    """delta_commits=2 with the change feed on: compactions at v3, v6."""
+def _compacting_engine(spark, root, max_rows, case, tagged=False):
+    """delta_commits=2 with the change feed on: compactions at v3, v6 (the
+    ``cow`` case rewrites on every commit). ``long`` handlers write the
+    key as an int, ``long-str`` ones as its str() into long key columns
+    of the state and event schemas."""
     from surge_spark.streaming.command_engine import CommandEngine
 
+    key_type = "long" if case.startswith("long") else "string"
     store = SnapshotStore(
         str(root), key_col="aggregate_id", num_buckets=4,
-        delta_commits=2, change_feed=True,
+        delta_commits=None if case == "cow" else 2, change_feed=True,
     )
 
     def process(state, cmd):
@@ -1134,9 +1138,11 @@ def _compacting_engine(spark, root, max_rows, key_type, tagged=False):
     def handle(state, ev):
         if ev.get("op") == "del":
             return None  # tombstone
-        k = ev["aggregate_id"]  # the engine stamps events with str(key)
+        k = ev["aggregate_id"]  # the command's key (NaN for a NULL key)
+        if case == "long-str":
+            k = str(int(k))
         return {
-            "aggregate_id": int(k) if key_type == "long" else k,
+            "aggregate_id": int(k) if case == "long" else k,
             "n": (state["n"] if state else 0) + 1,
             "score": ((state["score"] if state else 0.0) + 0.5),
             "flag": True,
@@ -1147,7 +1153,7 @@ def _compacting_engine(spark, root, max_rows, key_type, tagged=False):
     eng = CommandEngine(
         store, process, handle,
         schema + (", tag string" if tagged else ""),
-        "aggregate_id string, op string",
+        f"aggregate_id {'long' if case == 'long-str' else 'string'}, op string",
         order_cols=["command_id"], fold_partitions=2,
         driver_commit_max_rows=max_rows,
     )
@@ -1182,35 +1188,39 @@ def _compaction_reads(spark, store, keys):
     }
 
 
-@pytest.mark.parametrize("case", ["string", "long", "drift"])
+@pytest.mark.parametrize("case", ["string", "long", "long-str", "drift", "cow"])
 def test_arrow_compaction_equals_spark_compaction(spark, tmp_path, case):
-    """Cross-mode pin: the same command stream through the arrow-compacted
-    store (default) and the Spark-compacted one (driver_commit_max_rows=0,
-    which bounds the driver compaction to zero rows) reads identically:
+    """Cross-mode pin: the same command stream through the arrow-rewritten
+    store (default) and the Spark-rewritten one (driver_commit_max_rows=0,
+    which bounds every driver write to zero rows) reads identically:
     read_state, get_state, the arrow point read, read_changes over a range
     spanning both compactions, read_events, and the replies. ``drift``
     widens the state schema mid-chain: that compaction must run on Spark
-    in both stores, with its reason recorded."""
-    key_type = "long" if case == "long" else "string"
-    key = (lambda i: i) if case == "long" else (lambda i: f"k{i}")
+    in both stores, with its reason recorded. ``cow`` runs the stream on
+    a copy-on-write store, where every commit is a rewrite. ``long-str``
+    writes the engine's str(key) into long key columns: no key is nulled,
+    each key's state is its last reply's, and the driver store never
+    falls back."""
+    key_type = "long" if case.startswith("long") else "string"
+    key = (lambda i: i) if key_type == "long" else (lambda i: f"k{i}")
     batches = _compaction_stream(key)
     cmd_schema = f"aggregate_id {key_type}, kind string, command_id string"
     out = {}
     for mode, max_rows in (("arrow", 65536), ("spark", 0)):
         root = tmp_path / mode
-        store, eng = _compacting_engine(spark, root, max_rows, key_type)
+        store, eng = _compacting_engine(spark, root, max_rows, case)
         for i, rows in enumerate(batches):
             if case == "drift" and i == 5:
-                _, eng = _compacting_engine(spark, root, max_rows, key_type, tagged=True)
+                _, eng = _compacting_engine(spark, root, max_rows, case, tagged=True)
                 eng.store = store
             eng.process_batch(
                 spark.createDataFrame(rows, cmd_schema), f"b{i}",
                 replies_dir=str(tmp_path / f"{mode}-replies" / f"batch={i}"),
             )
         manifests = [store._manifest(v) for v in range(len(batches))]
-        assert [v for v, m in enumerate(manifests) if "state_deltas" not in m] == [0, 3, 6]
-        for v in (3, 6):
-            m = manifests[v]
+        rewrites = list(range(len(batches))) if case == "cow" else [0, 3, 6]
+        assert [v for v, m in enumerate(manifests) if "state_deltas" not in m] == rewrites
+        for v, m in enumerate(manifests):
             if case == "drift" and v == 6:
                 assert m["writes"] == "spark" and "schema" in m["fallback"], m
             elif mode == "spark":
@@ -1219,10 +1229,20 @@ def test_arrow_compaction_equals_spark_compaction(spark, tmp_path, case):
                 assert m["writes"] == "driver" and "fallback" not in m, m
         keys = [str(key(i)) for i in range(12)]
         out[mode] = _compaction_reads(spark, store, keys)
-        out[mode]["replies"] = sorted(
-            (r.batch_id, r.command_id, r.status)
-            for r in spark.read.parquet(str(tmp_path / f"{mode}-replies")).collect()
-        )
+        replies = spark.read.parquet(str(tmp_path / f"{mode}-replies")).collect()
+        out[mode]["replies"] = sorted((r.batch_id, r.command_id, r.status) for r in replies)
+        if case == "long-str":
+            assert out[mode]["events"] and all(e[0] is not None for e in out[mode]["events"])
+            last = {}
+            for r in sorted(replies, key=lambda r: (int(r.batch_id[1:]), r.command_id)):
+                if r.status == "success":
+                    last[r.aggregate_id] = r.new_state and json.loads(r.new_state)
+            assert len(last) == 11
+            for k, st in last.items():
+                got = store.get_state(spark, k)
+                if st is not None:  # the declared columns, the key as a long
+                    st = {c: st[c] for c in got or st} | {"aggregate_id": int(k)}
+                assert got == st, k
     for part in out["arrow"]:
         assert out["arrow"][part] == out["spark"][part], part
     # the stream's intended end state, independent of either mode: per

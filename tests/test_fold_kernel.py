@@ -432,3 +432,21 @@ def test_kernel_types_each_key_slice():
             ("ts", ("Timestamp", pd.Timestamp("2024-05-01"))),
         ]
     assert results[0] == results[1] == results[2]
+
+
+def test_null_numeric_key_is_stamped_null():
+    """A NULL long command key reaches handlers as NaN. Its events and
+    replies carry a null key, not "nan": the commit reads a numeric store
+    key from its string spelling and casts it, which would fail the batch
+    on "nan". A NULL string key keeps its "None" spelling."""
+    for key_type, key in ((T.LongType(), 1), (T.StringType(), "1")):
+        cols = {"k": [None, key], "command_id": ["c0", "c1"], "__k": [None, "1"]}
+        types = {"k": key_type, "command_id": T.StringType()}
+        packed = CommandEngine._fold_frame(
+            cols, types, [], "k", "k", ["command_id"],
+            lambda s, c: ([{"x": 1}], False), lambda s, e: s, False, "UTC",
+        )
+        events = [json.loads(p)["event"]["k"] for kind, p in packed if kind == "event"]
+        replies = [json.loads(p)["aggregate_id"] for kind, p in packed if kind == "reply"]
+        null = None if isinstance(key_type, T.LongType) else "None"
+        assert events == replies == [null, "1"], key_type

@@ -139,12 +139,15 @@ def test_snapshot_commit_filters_null_keys_at_gate(spark, tmp_path):
     assert rows == {"a": 3}
 
 
-def test_legacy_unbucketed_store_migrates_on_commit(spark, tmp_path):
-    """A store written by the pre-bucketing layout (manifest key ``state``,
-    no ``state_buckets``) must migrate on its first bucketed commit — not
-    silently drop every aggregate outside the batch."""
+def test_pre_bucketing_layout_is_rejected(spark, tmp_path):
+    """A manifest of the pre-bucketing layout (one ``state`` path, no
+    ``state_buckets``) is input from disk that no code path reads or
+    migrates: every reader and the commit refuse it with one error that
+    names the layout, instead of reading it as an empty store."""
     import json
     import os
+
+    import pytest as _pytest
 
     path = str(tmp_path / "legacy")
     os.makedirs(os.path.join(path, "_manifests"))
@@ -166,21 +169,14 @@ def test_legacy_unbucketed_store_migrates_on_commit(spark, tmp_path):
         json.dump(manifest, f)
 
     store = SnapshotStore(path, key_col="aggregate_id", num_buckets=8)
-    # read paths must work on the legacy layout BEFORE any bucketed commit
-    assert store.get_state(spark, "a")["n"] == 1
-    assert store.read_state(spark).count() == 3
-    updates = spark.createDataFrame([("b", 20), ("d", 4)], "aggregate_id string, n int")
-    assert store.commit(None, updates, "b1") is True
-    rows = {r.aggregate_id: r.n for r in store.read_state(spark).collect()}
-    assert rows == {"a": 1, "b": 20, "c": 3, "d": 4}
-    # point reads bucket-prune against the migrated layout
-    assert store.get_state(spark, "a")["n"] == 1
-    assert store.get_state(spark, "d")["n"] == 4
-    # vacuum reference-counts across the format boundary
-    store.commit(None, spark.createDataFrame([("a", 10)], "aggregate_id string, n int"), "b2")
-    store.vacuum(keep_last=1)
-    assert store.get_state(spark, "a")["n"] == 10
-    assert store.get_state(spark, "c")["n"] == 3
+    with _pytest.raises(ValueError, match="pre-bucketing"):
+        store.read_state(spark)
+    with _pytest.raises(ValueError, match="pre-bucketing"):
+        store.get_state(spark, "a")
+    updates = spark.createDataFrame([("b", 20)], "aggregate_id string, n int")
+    with _pytest.raises(ValueError, match="pre-bucketing"):
+        store.commit(None, updates, "b1")
+    assert store.latest_version() == 0
 
 
 def test_commit_dedupes_duplicate_key_updates(spark, tmp_path):

@@ -462,57 +462,6 @@ def test_all_rejected_batch_still_commits_replies(spark, tmp_path):
     assert engine.process_batch(cmds, "rej1") is None  # replay = no-op
 
 
-def test_commit_target_files_fans_out(spark, tmp_path):
-    """commit_target_files > 1: a backfill-sized batch's commit is not
-    funneled through one task — the events side writes multiple files."""
-    import glob
-    import json as _json
-    import os
-
-    store = SnapshotStore(str(tmp_path / "s_fan"), key_col="aggregate_id")
-    engine = CommandEngine(
-        store,
-        process_command=lambda s, c: (
-            [{"kind": "inc", "aggregate_id": str(c["user_id"])}],
-            False,
-        ),
-        handle_event=lambda s, e: {
-            "aggregate_id": e["aggregate_id"],
-            "n": (s or {"n": 0})["n"] + 1,
-        },
-        state_schema="aggregate_id string, n int",
-        event_schema="kind string, aggregate_id string",
-        key_col="user_id",
-        order_cols=["ts"],
-        commit_target_files=4,
-    )
-    cmds = spark.range(400).select(
-        F.col("id").alias("event_id"),
-        F.lit(_ts(0)).alias("ts"),
-        F.col("id").alias("user_id"),
-        F.lit("inc").alias("event_type"),
-        F.lit(0.0).alias("value"),
-        F.concat(F.lit("c"), F.col("id")).alias("command_id"),
-    )
-    engine.process_batch(cmds, "fan1")
-    with open(store._manifest_path(0)) as fh:
-        events_path = _json.load(fh)["events"]
-    n_files = len(glob.glob(os.path.join(events_path, "*.parquet")))
-    assert n_files > 1, f"expected fan-out, got {n_files} file(s)"
-
-    import pytest
-
-    with pytest.raises(ValueError):
-        CommandEngine(
-            store,
-            process_command=lambda s, c: ([], False),
-            handle_event=lambda s, e: s,
-            state_schema="aggregate_id string",
-            event_schema="kind string",
-            commit_target_files=0,
-        )
-
-
 def test_null_key_state_rows_filtered_at_commit(spark, tmp_path):
     """A NULL-key state row would land in a hive default-partition bucket
     the driver-side crc32 math can never address (unreadable, un-updatable,
@@ -531,61 +480,73 @@ def test_null_key_state_rows_filtered_at_commit(spark, tmp_path):
 
 
 def test_process_batch_never_materializes_rows_on_driver(spark, tmp_path):
-    """100 TB design guard: process_batch's only driver-side actions are
-    metadata-sized (the commit's touched bucket ids) — never the batch's
-    state/event/reply rows. Spy on every collect() during a 2000-command
-    batch against a store that already holds a version, and assert
-    nothing row-sized crosses the driver."""
+    """100 TB design guard: above the driver bounds, process_batch's only
+    driver-side actions are metadata-sized (the commit's touched bucket
+    ids) — never the batch's state/event/reply rows. Spy on every
+    collect() during a 2000-command batch against a store that already
+    holds a version, and assert nothing row-sized crosses the driver with
+    both bounds at 0; at the default bounds the driver fold's size probe
+    and the commit's collect of the fold output (about 4,500 rows) run,
+    and no collect exceeds driver_commit_max_rows."""
     from pyspark.sql.classic.dataframe import DataFrame as ClassicDF
 
-    store = SnapshotStore(str(tmp_path / "s7"), key_col="aggregate_id")
-    engine = CommandEngine(
-        store,
-        process_command=lambda s, c: (
-            [{"kind": "inc", "aggregate_id": str(c["user_id"])}],
-            False,
-        ),
-        handle_event=lambda s, e: {
-            "aggregate_id": e["aggregate_id"],
-            "n": (s or {"n": 0})["n"] + 1,
-        },
-        state_schema="aggregate_id string, n int",
-        event_schema="kind string, aggregate_id string",
-        key_col="user_id",
-        order_cols=["ts"],
-    )
-    # one prior version, so the batch's commit is a bucket merge — the
-    # commit that collects its touched bucket ids on the driver
-    store.commit(
-        None,
-        spark.createDataFrame([("seed", 0)], "aggregate_id string, n int"),
-        "b0",
-        updates_unique=True,
-    )
-    cmds = spark.range(2000).select(
-        F.col("id").alias("event_id"),
-        F.lit(_ts(0)).alias("ts"),
-        (F.col("id") % 500).alias("user_id"),
-        F.lit("inc").alias("event_type"),
-        F.lit(0.0).alias("value"),
-        F.concat(F.lit("c"), F.col("id")).alias("command_id"),
-    )
-    sizes: list[int] = []
-    orig = ClassicDF.collect
+    from surge_spark.streaming.snapshot_store import DRIVER_COMMIT_MAX_ROWS
 
-    def spy(self):
-        rows = orig(self)
-        sizes.append(len(rows))
-        return rows
+    for bound in (0, DRIVER_COMMIT_MAX_ROWS):
+        store = SnapshotStore(str(tmp_path / f"s7-{bound}"), key_col="aggregate_id")
+        engine = CommandEngine(
+            store,
+            process_command=lambda s, c: (
+                [{"kind": "inc", "aggregate_id": str(c["user_id"])}],
+                False,
+            ),
+            handle_event=lambda s, e: {
+                "aggregate_id": e["aggregate_id"],
+                "n": (s or {"n": 0})["n"] + 1,
+            },
+            state_schema="aggregate_id string, n int",
+            event_schema="kind string, aggregate_id string",
+            key_col="user_id",
+            order_cols=["ts"],
+            driver_commit_max_rows=bound,
+            **({} if bound else {"driver_fold_max_rows": 0}),
+        )
+        # one prior version, so the batch's commit is a bucket merge — the
+        # commit that collects its touched bucket ids on the driver
+        store.commit(
+            None,
+            spark.createDataFrame([("seed", 0)], "aggregate_id string, n int"),
+            "b0",
+            updates_unique=True,
+        )
+        cmds = spark.range(2000).select(
+            F.col("id").alias("event_id"),
+            F.lit(_ts(0)).alias("ts"),
+            (F.col("id") % 500).alias("user_id"),
+            F.lit("inc").alias("event_type"),
+            F.lit(0.0).alias("value"),
+            F.concat(F.lit("c"), F.col("id")).alias("command_id"),
+        )
+        sizes: list[int] = []
+        orig = ClassicDF.collect
 
-    ClassicDF.collect = spy
-    try:
-        engine.process_batch(cmds, "big1")
-    finally:
-        ClassicDF.collect = orig
-    # touched-bucket ids (<=num_buckets)
-    assert sizes and max(sizes) <= store.default_num_buckets
-    assert store.get_state(spark, "7")["n"] == 4  # 2000/500 commands per key
+        def spy(self):
+            rows = orig(self)
+            sizes.append(len(rows))
+            return rows
+
+        ClassicDF.collect = spy
+        try:
+            engine.process_batch(cmds, "big1")
+        finally:
+            ClassicDF.collect = orig
+        if bound == 0:
+            # touched-bucket ids (<=num_buckets)
+            assert sizes and max(sizes) <= store.default_num_buckets
+        else:
+            assert sizes and max(sizes) <= engine.driver_commit_max_rows
+            assert store._manifest(1)["writes"] == "driver"
+        assert store.get_state(spark, "7")["n"] == 4  # 2000/500 commands per key
 
 
 def test_state_deletion_tombstones_snapshot(spark, tmp_path):
@@ -1583,7 +1544,7 @@ def test_driver_fold_equals_distributed_fold(spark, tmp_path, delta_commits):
     source of truth; this is the contract that lets the fast path exist.
     Run on both store modes — merge-on-read (delta_commits=2) and COW
     (None) — since both folds commit through the engine's one commit
-    call; a COW store always takes the distributed fold. Two pins on the
+    call, and both folds run on either store mode. Two pins on the
     shared per-key kernel: key f's three commands arrive out of
     command_id order (its trail records the order they ran in), and the
     nullable long command column amt is null for some keys and set for
